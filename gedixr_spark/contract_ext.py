@@ -385,23 +385,6 @@ def q_repetition(spark, sf_dir):
     return df.select("doc_id", "dup_token_ratio", "top_bigram_ratio")
 
 
-def q_contamination(spark, sf_dir):
-    """Benchmark decontamination audit: docs sharing a 3-shingle with
-    the deterministic 'benchmark' subset (doc_id % 97 == 0)."""
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return text.contamination(docs, bench)
-
-
-def q_contamination_spans(spark, sf_dir):
-    """Span-level decontamination: the merged token ranges of each doc
-    that overlap a benchmark shingle — what a pipeline actually
-    redacts, not just a drop/keep flag."""
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return text.contamination_spans(docs, bench)
-
-
 def q_pii_redact(spark, sf_dir):
     """PII audit + redaction. The synthetic corpus has no PII, so the
     query plants a deterministic email + dotted-quad per doc first —
@@ -1305,7 +1288,7 @@ def q_manifest_checkpoint(spark, sf_dir):
     the pruned read's per-flag aggregate plus a one-row planning
     summary. Multi-commit lifecycle ⇒ rows-only; json/parquet twin
     equivalence is pinned in tests/test_parquet_checkpoint.py and the
-    100k-file rehearsal in SCALE §14 / tools/manifest_rehearsal.py."""
+    100k-file measurements are in SCALE §14."""
     from gedixr_spark.sinks.versioned import (
         checkpoint_log, commit_append, commit_compact, expire_log,
         files_for_range, init_versioned, manifest_df, read_where,
@@ -1471,25 +1454,6 @@ def q_hybrid_search(spark, sf_dir):
     return rrf_fuse(
         [lex, dense], rrf_k=60, topk=10, query_col="query_id"
     ).orderBy("query_id", "rank")
-
-
-def q_funnel(spark, sf_dir):
-    """Ordered funnel view → click → purchase (events.funnel_analysis):
-    per-step conditional-min joins, no window sort. Exact semantics
-    DuckDB-pinned in tests/test_funnel_retention.py; rows-only (oracle
-    window full)."""
-    out = events.funnel_analysis(
-        _t(spark, sf_dir, "events"), ["view", "click", "purchase"]
-    )
-    return out.groupBy("n_steps_completed").agg(
-        F.count(F.lit(1)).alias("n_users")
-    ).orderBy("n_steps_completed")
-
-
-def q_retention(spark, sf_dir):
-    """Daily retention cohort matrix (events.retention_cohorts).
-    DuckDB-pinned in tests; rows-only (oracle window full)."""
-    return events.retention_cohorts(_t(spark, sf_dir, "events"), period="day")
 
 
 # ---------------------------------------------------------------------------

@@ -479,7 +479,7 @@ def pip_edges_predicate(lon: Column, lat: Column, edges: Column) -> Column:
 #: Bound MEASURED (r16, 2M-point noop A/B, min-of-4 per cell): the
 #: interpreted HOF costs ~25 ns/edge·row while the vectorized numpy
 #: kernel costs ~2 ns/edge·row after a ~0.5 µs/row Arrow boundary
-#: toll, so the kernel-dominant crossover sits near 64/(25-2) ≈ 22
+#: toll, so the kernel-dominant crossover sits near 500/(25-2) ≈ 22
 #: edges — warm walls 32e: 1.22 s literal vs 0.41 s pandas; 256e:
 #: 7.26 vs 1.10; 4096e (the old bound): 117 vs 27 s. Below the bound
 #: the absolute gap is sub-second while the literal keeps the plan

@@ -1,8 +1,8 @@
-"""Projection operators P1-P8 (SURVEY.md §2.2).
+"""Projection operator P5 (SURVEY.md §2.2): point-geometry construction.
 
-The reference's declared projection — an ordered list of
-``(output_column, source_layer)`` tuples — maps 1:1 onto ``df.select``
-with aliases; Catalyst turns it into parquet column pruning for free.
+The declared projection (P1-P3) happens in the HDF5 reader
+(`sources/hdf5.py`), the load-time ``acq_time`` cast (P7) in
+`sources/shots.py`.
 """
 
 from __future__ import annotations
@@ -10,42 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gedixr_spark.functions.scalar import rh_percentile, shot_id_str
 from gedixr_spark.geo import st_point
-
-
-def declared_projection(
-    df: DataFrame, spec: list[tuple[str, str]], keep_extra: list[str] | None = None
-) -> DataFrame:
-    """P1 — select only the declared layers, renamed to their output
-    names (reference constants.py:13-38 applied at extract.py:280-294).
-
-    ``rh<N>`` entries whose source column is a 101-element array named
-    ``rh`` get the percentile-extraction treatment (P2,
-    extract.py:281-286); everything else is select+alias.
-    """
-    cols = []
-    array_rh = "rh" in df.columns and dict(df.dtypes).get("rh", "").startswith("array")
-    for out_name, layer in spec:
-        base = layer.split("/")[-1]  # HDF5 nesting is flattened by the reader
-        # rh branch keyed on the SOURCE layer name (reference
-        # extract.py:281), so custom output names like
-        # ('canopy98','rh98') still index the rh array
-        if (
-            base.startswith("rh")
-            and base[2:].isdigit()
-            and base not in df.columns
-            and array_rh
-        ):
-            cols.append(rh_percentile("rh", int(base[2:])).alias(out_name))
-        elif out_name == "shot" and base in df.columns:
-            cols.append(shot_id_str(base).alias(out_name))  # P3, extract.py:290
-        else:
-            cols.append(F.col(base).alias(out_name))
-    for extra in keep_extra or []:
-        if extra in df.columns:
-            cols.append(F.col(extra))
-    return df.select(*cols)
 
 
 def with_geometry(
@@ -64,8 +29,3 @@ def with_geometry(
     if drop_coords:
         out = out.drop(lon_col, lat_col)
     return out
-
-
-def with_acq_time_cast(df: DataFrame, col: str = "acq_time") -> DataFrame:
-    """P7 — string→timestamp cast on load (reference extract.py:172, xr.py:40)."""
-    return df.withColumn(col, F.to_timestamp(F.col(col)))

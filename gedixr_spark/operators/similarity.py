@@ -1704,110 +1704,6 @@ def ivf_sq8_ann_topk(
     )
 
 
-def semantic_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    threshold: float = 0.95,
-    method: str = "brute",
-    n_tables: int = 4,
-    bits: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-space benchmark decontamination — the semantic sibling
-    of text.contamination's n-gram sweep: per corpus row, how many
-    benchmark embeddings sit at cosine >= threshold, the max such
-    cosine, and a ``contaminated`` flag. Catches the leakage paraphrase
-    rewrites hide from shingle overlap. Zero-hit rows are kept (left
-    join) so the output is a full audit column over the corpus.
-
-    ``method='brute'`` (default, EXACT): the benchmark is a SMALL
-    table (eval suites are MBs against a 100 TB corpus) — broadcast
-    its quantized vectors and score every (corpus, bench) pair in one
-    map-only corpus scan; work is |corpus|·|bench|, linear in the
-    corpus, no shuffle until the per-doc aggregate. Guaranteed recall
-    — the property a decontamination gate needs.
-
-    ``method='lsh'`` (approximate): when the benchmark itself is too
-    big to broadcast-scan, bucket BOTH sides with multi-table
-    hyperplane LSH (`hyperplane_tables`) and equi-join on
-    (tbl, bucket) — same OR-of-ANDs recall trade as
-    `embedding_neardup_pairs_multitable`; collisions across tables are
-    deduped before the exact cosine verify so each pair is scored
-    once. Misses cross-bucket pairs by design; size bits ~ log2(n).
-
-    Scoring is exact integer math over `quantize`d vectors
-    (`cosine_q`), so both methods agree exactly on the pairs they
-    share; the brute method is the recall oracle the LSH method is
-    differential-tested against."""
-    if method not in ("brute", "lsh"):
-        raise ValueError(f"method must be 'brute' or 'lsh', got {method!r}")
-    if not -1.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [-1, 1], got {threshold}")
-    if method == "brute":
-        bench = F.broadcast(
-            benchmark.select(
-                F.col(id_col).alias("bench_id"),
-                quantize(vec_col, scale).alias("bv"),
-            )
-        )
-        pairs = (
-            corpus.select(F.col(id_col), quantize(vec_col, scale).alias("cv"))
-            .crossJoin(bench)
-            .select(
-                id_col,
-                "bench_id",
-                cosine_q(F.col("cv"), F.col("bv")).alias("cosine"),
-            )
-        )
-    else:
-        tables = hyperplane_tables(dim, n_tables, bits, seed)
-
-        def _bucketed(df: DataFrame, out_id: str) -> DataFrame:
-            return df.select(
-                F.col(id_col).alias(out_id),
-                quantize(vec_col, scale).alias(f"{out_id}_v"),
-                F.explode(lsh_table_buckets(vec_col, tables, scale)).alias("tb"),
-            ).select(
-                out_id,
-                f"{out_id}_v",
-                F.col("tb.tbl").alias("tbl"),
-                F.col("tb.bucket").alias("bucket"),
-            )
-
-        pairs = (
-            _bucketed(corpus, "__cid")
-            .join(_bucketed(benchmark, "bench_id"), on=["tbl", "bucket"])
-            .dropDuplicates(["__cid", "bench_id"])
-            .select(
-                F.col("__cid").alias(id_col),
-                "bench_id",
-                cosine_q(F.col("__cid_v"), F.col("bench_id_v")).alias("cosine"),
-            )
-        )
-    hits = (
-        pairs.filter(F.col("cosine") >= threshold)
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bench_hits"),
-            F.max("cosine").alias("max_cosine"),
-        )
-    )
-    return (
-        corpus.select(id_col)
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bench_hits", F.lit(0)).alias("n_bench_hits"),
-            "max_cosine",
-            (F.coalesce("n_bench_hits", F.lit(0)) > 0).alias("contaminated"),
-        )
-    )
-
-
 def mmr_rerank(
     candidates: DataFrame,
     corpus: DataFrame,

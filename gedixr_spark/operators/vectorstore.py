@@ -201,24 +201,14 @@ def _files_for_cells(
     """Union of the log-stats keep-sets for each probed cell (a cell
     SET is not one range — probing cells {0, 7} must not scan files
     covering only cells 3-4, which [0, 7] as a range would keep)."""
-    from gedixr_spark.sinks.versioned import file_range_stats
+    from gedixr_spark.sinks.versioned import _stats_keep, file_range_stats
 
     files, dvs = _replay_once(spark, path, version)
     stats = file_range_stats(spark, path, version, live=files)
-    keep = []
-    for f in files:
-        rng = stats.get(f, {}).get("cell")
-        if rng is None:
-            keep.append(f)  # no stats — can't rule out
-            continue
-        mn, mx = rng
-        if mn is None and mx is None:
-            continue  # zero non-null cells: the exact IN filter drops all
-        if any(
-            (mn is None or mn <= c) and (mx is None or c <= mx)
-            for c in cells
-        ):
-            keep.append(f)
+    keep = [
+        f for f in files
+        if any(_stats_keep(stats.get(f, {}).get("cell"), c, c) for c in cells)
+    ]
     return keep, len(files), dvs
 
 

@@ -116,9 +116,10 @@ def _stamp_geo_metadata(root: Path) -> None:
 
     NOT metadata-only: pyarrow has no public footer-in-place edit, so
     each file is decoded and re-encoded. What IS preserved: the
-    original compression codec and the row-group boundaries (each row
-    group is read and re-written individually), so the Spark writer's
-    physical layout survives the stamp."""
+    original compression codec, the row-group boundaries (each row
+    group is read and re-written individually) and the INT96 timestamp
+    encoding, so the Spark writer's physical layout survives the
+    stamp."""
     import pyarrow.parquet as pq
 
     geo = json.dumps(GEO_META_TEMPLATE).encode()
@@ -135,9 +136,19 @@ def _stamp_geo_metadata(root: Path) -> None:
         schema_meta = dict(pf.schema_arrow.metadata or {})
         schema_meta[b"geo"] = geo
         schema = pf.schema_arrow.with_metadata(schema_meta)
+        # keep Spark's timestamp encoding: Arrow decodes INT96 to
+        # timestamp[ns], which would re-encode as INT64 nanoseconds —
+        # a type Spark's parquet reader rejects
+        int96 = any(
+            meta_md.schema.column(i).physical_type == "INT96"
+            for i in range(meta_md.num_columns)
+        )
         groups = [pf.read_row_group(i) for i in range(meta_md.num_row_groups)]
         pf.close()
-        with pq.ParquetWriter(f, schema, compression=codec) as w:
+        with pq.ParquetWriter(
+            f, schema, compression=codec,
+            use_deprecated_int96_timestamps=int96,
+        ) as w:
             for g in groups:
                 w.write_table(g.replace_schema_metadata(schema_meta))
         # drop the now-stale Hadoop checksum sidecar or re-reads fail CRC

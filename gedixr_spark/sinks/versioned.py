@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import math
 import os
 import re
 import threading
@@ -538,44 +539,20 @@ def _manifest_columns(
 ) -> dict[str, list]:
     """Read only ``columns`` from a checkpoint manifest, in row order.
     {column name: values}; missing columns raise (callers probe the
-    schema first via _manifest_schema_names)."""
+    schema first via _manifest_schema_types)."""
     t = _manifest_table(spark, path, version, columns)
     return {c: t.column(c).to_pylist() for c in columns}
 
 
-def _manifest_blooms_subset(
-    spark: SparkSession, path: str, version: int, names
-) -> dict:
-    """Bloom entries for just ``names`` from a checkpoint manifest —
-    the JSON bitsets are parsed only for those rows (the expensive
-    part; a point lookup's candidates are a handful of files, the
-    manifest may hold 10^5+)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    names = list(names)
-    if not names:
-        return {}
-    t = _manifest_table(spark, path, version, ["file", "bloom"])
-    ft = t.filter(
-        pc.is_in(t.column("file"), value_set=pa.array(names, pa.string()))
-    )
-    return {
-        f: json.loads(b)
-        for f, b in zip(
-            ft.column("file").to_pylist(), ft.column("bloom").to_pylist()
-        )
-        if b is not None
-    }
-
-
-def _manifest_schema_names(
+def _manifest_schema_types(
     spark: SparkSession, path: str, version: int
-) -> list[str]:
-    key = (_cache_key_path(path), int(version), "__schema_names__")
+) -> dict[str, str]:
+    """{column: Arrow type name} of a checkpoint manifest (schema only,
+    cached per (table, version))."""
+    key = (_cache_key_path(path), int(version), "__schema_types__")
     hit = _cache_get(_MANIFEST_CACHE, key)
     if hit is not None:
-        return hit
+        return dict(hit)
     import pyarrow.parquet as papq
 
     mp = _manifest_path(path, version)
@@ -587,9 +564,9 @@ def _manifest_schema_names(
         sch = papq.read_schema(
             pa.BufferReader(_manifest_bytes(spark, path, version))
         )
-    names = list(sch.names)
-    _cache_put(_MANIFEST_CACHE, key, names)
-    return list(names)
+    types = {f.name: str(f.type) for f in sch}
+    _cache_put(_MANIFEST_CACHE, key, types)
+    return dict(types)
 
 
 def _json_copy(obj):
@@ -4636,6 +4613,39 @@ def _file_column_stats(
     return out
 
 
+def _log_file_meta(
+    spark: SparkSession,
+    path: str,
+    key: str,
+    version: int | None,
+    names,
+    since: int | None = None,
+) -> dict:
+    """{file in ``names``: its logged ``key`` payload} as of ``version``
+    (default latest); ``key`` is ``"stats"`` or ``"blooms"``. The newest
+    checkpoint at or below the cap seeds the map, then the entries
+    after it fold in, later entries winning (a re-added file carries
+    its newest record). ``since`` (a checkpoint version) skips the seed
+    and folds only the entries after it — the O(Δ) complement of a
+    parquet manifest's own rows."""
+    versions = _list_log_versions(spark, path)
+    cap = versions[-1] if version is None else version
+    out: dict = {}
+    if since is None:
+        since, ck = _replay_ck(spark, path, cap)
+        if ck is not None:
+            out = {n: m for n, m in ck.get(key, {}).items() if n in names}
+    for v in versions:
+        if v <= since:
+            continue
+        if v > cap:
+            break
+        for n, m in _read_entry(spark, path, v).get(key, {}).items():
+            if n in names:
+                out[n] = m
+    return out
+
+
 def file_range_stats(
     spark: SparkSession, path: str, version: int | None = None,
     live: Sequence[str] | None = None,
@@ -4644,37 +4654,162 @@ def file_range_stats(
     commit recorded no stats are absent (a pruned read must include
     them). Pass ``live`` (an already-replayed live set) to skip the
     redundant replay on hot pruned-read paths."""
-    versions = _list_log_versions(spark, path)
-    cap = versions[-1] if version is None else version
-    live = set(live_files(spark, path, cap) if live is None else live)
-    start, ck = _replay_ck(spark, path, cap)
-    base_stats = ck.get("stats", {}) if ck is not None else {}
-    out: dict = {n: st for n, st in base_stats.items() if n in live}
-    for v in versions:
-        if v <= start:
-            continue
-        if v > cap:
-            break
-        for name, st in _read_entry(spark, path, v).get("stats", {}).items():
-            if name in live:
-                out[name] = st
-    return out
+    live = set(live_files(spark, path, version) if live is None else live)
+    return _log_file_meta(spark, path, "stats", version, live)
 
 
-def _post_ck_stats(
-    spark: SparkSession, path: str, start: int, cap: int, names: set
-) -> dict:
-    """Per-file stats recorded by entries AFTER the checkpoint at
-    ``start`` (up to ``cap``), restricted to ``names`` — the O(Δ)
-    complement of a manifest's base stats."""
-    out: dict = {}
-    for v in _list_log_versions(spark, path):
-        if v <= start or v > cap:
+# ---------------------------------------------------------------------------
+# File pruning: ONE rule decides whether a read may skip a file for a
+# conjunction of per-column [lo, hi] bounds (the shape of Iceberg's
+# inclusive metrics evaluator). A file is skipped only when some
+# column's recorded [min, max] proves no row passes that column's
+# exact filter. Per column:
+#
+# - no stats recorded → read
+# - stats prove zero non-null values → skip (c >= lo / c <= hi drops
+#   every NULL row)
+# - one-sided stats (min or max NULL) → read
+# - a NaN min/max → read (Spark's max() propagates NaN, so it bounds
+#   nothing)
+# - stats incomparable with the bound → read
+# - a fully unbounded (None, None) column adds nothing: its exact
+#   filter is a no-op, so even an all-NULL file keeps its rows
+# - otherwise skip iff max < lo or min > hi
+#
+# `_stats_keep` is the rule over logged JSON stats. `_keep_expr`
+# compiles it over a manifest's typed bound columns: to a pyarrow
+# expression for the driver-side manifest (`_manifest_prune`) and to a
+# Spark Column for the distributed plan (`_scale_plan`), after
+# `_bound_spec` normalized each bound against its column type.
+
+
+def _stats_keep(rng, lo, hi) -> bool:
+    """False only when one file's recorded ``rng`` ([min, max], or None
+    when absent) of one column proves no value lies in [lo, hi]."""
+    if lo is None and hi is None:
+        return True
+    if not (isinstance(rng, (list, tuple)) and len(rng) == 2):
+        return True
+    mn, mx = rng
+    if mn is None and mx is None:
+        return False
+    if mn is None or mx is None:
+        return True
+    try:
+        # NaN compares False both ways, so a NaN min/max reads
+        return not ((lo is not None and mx < lo) or (hi is not None and mn > hi))
+    except TypeError:
+        return True
+
+
+def _stats_prune(
+    files: Sequence[str], ranges: dict, stats: dict, names: dict | None
+) -> list[str]:
+    """The ``files`` whose logged ``stats`` cannot rule out the
+    conjunction ``ranges`` ({col: (lo, hi)}). ``names`` is
+    `_stats_name_map`'s write-time name translation (None when column
+    mapping is inactive); an unresolvable column reads as stats-less."""
+    def rng(f, c):
+        w = names[f][c] if names is not None else c
+        return stats.get(f, {}).get(w) if w is not None else None
+
+    return [
+        f for f in files
+        if all(_stats_keep(rng(f, c), lo, hi) for c, (lo, hi) in ranges.items())
+    ]
+
+
+def _bound_spec(lo, hi, type_name: str):
+    """(lo, hi, floating) for one column's bounds against its typed
+    manifest bound column, or None when a typed comparison could not
+    be exact — the caller then takes the exact `_stats_keep` path:
+
+    - a bool bound, or one whose type does not match the column
+    - a numeric bound that is NaN, infinite or not below 2^53
+      (float64 holds integers exactly only up to there)
+    - a column type other than the int64, float64 and string that
+      `_stat_bound_type` writes (``type_name`` is the Arrow or the
+      Spark name)
+
+    Fractional bounds on an integer column tighten to the equivalent
+    integer test (mx >= 2.5 <=> mx >= 3); ``floating`` marks the
+    columns the NaN rule applies to."""
+    kind = {"int64": int, "bigint": int, "double": float, "string": str}.get(
+        type_name
+    )
+    bounds = [b for b in (lo, hi) if b is not None]
+    if kind is str:
+        return (lo, hi, False) if all(isinstance(b, str) for b in bounds) else None
+    if kind is None or not all(
+        isinstance(b, (int, float)) and not isinstance(b, bool)
+        and abs(b) < 2 ** 53
+        for b in bounds
+    ):
+        return None
+    if kind is float:
+        return (
+            None if lo is None else float(lo),
+            None if hi is None else float(hi),
+            True,
+        )
+    return (
+        None if lo is None else math.ceil(lo),
+        None if hi is None else math.floor(hi),
+        False,
+    )
+
+
+def _bound_specs(ranges: dict, types: dict) -> dict | None:
+    """{bound key: `_bound_spec`} for the bounded columns of ``ranges``
+    (keyed by the manifest's bound key), given the manifest's {column:
+    type name}; None when one lacks typed bounds or is rejected. A fully
+    unbounded column adds nothing, so it needs no typed bounds."""
+    specs = {}
+    for k, (lo, hi) in ranges.items():
+        if lo is None and hi is None:
             continue
-        for name, st in _read_entry(spark, path, v).get("stats", {}).items():
-            if name in names:
-                out[name] = st
-    return out
+        if not all(f"{p}::{k}" in types for p in ("has", "min", "max")):
+            return None
+        specs[k] = _bound_spec(lo, hi, types[f"min::{k}"])
+        if specs[k] is None:
+            return None
+    return specs
+
+
+def _keep_expr(specs: dict, spark_side: bool):
+    """`_stats_keep`'s conjunction over a manifest's typed bound columns
+    (``has::k``, ``min::k``, ``max::k`` for each key of ``specs``): a
+    Spark Column when ``spark_side``, else a pyarrow expression. Both
+    backends use SQL three-valued logic; a comparison against a NULL
+    min/max never decides the verdict — the NULL checks around it do."""
+    if spark_side:
+        col, lit, is_nan, coalesce = F.col, F.lit, F.isnan, F.coalesce
+
+        def is_null(c):
+            return c.isNull()
+    else:
+        import pyarrow.compute as pc
+
+        col, lit, is_nan, coalesce = pc.field, pc.scalar, pc.is_nan, pc.coalesce
+
+        def is_null(c):
+            return c.is_null()
+    false = lit(False)
+    keep = lit(True)
+    for k, (lo, hi, floating) in specs.items():
+        has = coalesce(col(f"has::{k}"), false)
+        mn, mx = col(f"min::{k}"), col(f"max::{k}")
+        ok = lit(True)
+        if lo is not None:
+            ok = ok & ((is_nan(mx) | (mx >= lit(lo))) if floating else mx >= lit(lo))
+        if hi is not None:
+            ok = ok & ((is_nan(mn) | (mn <= lit(hi))) if floating else mn <= lit(hi))
+        mn_null, mx_null = is_null(mn), is_null(mx)
+        keep = keep & (
+            ~has
+            | (~(mn_null & mx_null) & ((mn_null != mx_null) | coalesce(ok, false)))
+        )
+    return keep
 
 
 def _manifest_prune(
@@ -4682,138 +4817,64 @@ def _manifest_prune(
     path: str,
     ranges: dict,
     cap: int,
-    skip_unbounded: bool,
 ):
     """Vectorized file-skipping against the newest parquet-manifest
     checkpoint at or below ``cap``: (checkpoint version, covered file
-    set, keep file set), or None when the fast path does not apply
-    (no manifest, missing typed bounds for a queried column — incl. a
+    set, keep file set), or None when the fast path does not apply (no
+    manifest, missing typed bounds for a queried column — incl. a
     mapped table whose manifest predates its column mapping — or a
-    bound/column type mismatch) — the caller then takes the exact dict
+    bound `_bound_spec` rejects) — the caller then takes the exact dict
     path. Column-mapped tables resolve each queried cap-time logical
-    name to its rename-stable physical id and mask the id-keyed typed
-    bound columns (r14 VERDICT #2). Per-column skip semantics mirror the
-    dict pruners exactly: no stats entry → read; entry proving zero
-    non-null values → skip; one-sided bounds → read; else the overlap
-    test. The conjunctive keep-mask is the AND of the per-column masks
-    (`files_for_ranges`' multiplicative Z-order pruning, vectorized).
-    ``skip_unbounded``: a fully-unbounded (None, None) column
-    contributes nothing (files_for_ranges' rule — its exact filter is
-    a no-op, so even all-NULL files must be kept); files_for_range
-    passes False (its unbounded call still skips provably-empty
-    stats, the documented single-column semantics)."""
-    import math
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    name to its rename-stable physical id and evaluate the id-keyed
+    typed bound columns (r14 VERDICT #2)."""
     start, ck = _replay_ck(spark, path, cap)
     if not isinstance(ck, _LazyCheckpoint):
         return None
-    # column mapping: typed bounds are keyed by PHYSICAL id (rename-
-    # stable — see _write_checkpoint_manifest); translate each queried
-    # cap-time logical name to its id once. An unmapped column or a
-    # manifest that predates the table's mapping (no id-keyed bound
-    # columns) bails to the exact dict path.
     key_of = {c: c for c in ranges}
     if _colmap_active(spark, path):
         ids = _column_ids_walk(spark, path, cap)["ids"]
-        if ids is None:
-            return None
-        if not all(c in ids for c in ranges):
+        if ids is None or not all(c in ids for c in ranges):
             return None
         key_of = {c: f"id::{ids[c]}" for c in ranges}
-    live_cols = set(_manifest_schema_names(spark, path, start))
-    active = {
-        c: b for c, b in ranges.items()
-        if not (skip_unbounded and b[0] is None and b[1] is None)
-    }
-    needed = ["file"]
-    for c in active:
-        cols = [f"has::{key_of[c]}", f"min::{key_of[c]}", f"max::{key_of[c]}"]
-        if not all(n in live_cols for n in cols):
-            return None
-        needed += cols
-    t = _manifest_table(spark, path, start, needed)
-    keep_mask = pa.array([True] * len(t), pa.bool_())
-    for c, (lo, hi) in active.items():
-        has = t.column(f"has::{key_of[c]}")
-        mn = t.column(f"min::{key_of[c]}")
-        mx = t.column(f"max::{key_of[c]}")
-        typ = mn.type
-        if pa.types.is_string(typ):
-            if not all(b is None or isinstance(b, str) for b in (lo, hi)):
-                return None
-        elif pa.types.is_integer(typ):
-            if not all(
-                b is None or (isinstance(b, (int, float))
-                              and not isinstance(b, bool))
-                for b in (lo, hi)
-            ):
-                return None
-            # fractional bounds against integer stats: tighten to the
-            # equivalent integer test (mx >= 2.5 <=> mx >= 3 for ints)
-            if lo is not None and isinstance(lo, float):
-                lo = math.ceil(lo)
-            if hi is not None and isinstance(hi, float):
-                hi = math.floor(hi)
-        elif pa.types.is_floating(typ):
-            if not all(
-                b is None or (isinstance(b, (int, float))
-                              and not isinstance(b, bool)
-                              and abs(b) < 2 ** 53)
-                for b in (lo, hi)
-            ):
-                return None
-        else:
-            return None
-        has_f = pc.fill_null(has, False)
-        no_stats = pc.invert(has_f)
-        mn_null, mx_null = pc.is_null(mn), pc.is_null(mx)
-        both_null = pc.and_(mn_null, mx_null)
-        one_null = pc.xor(mn_null, mx_null)
-        ok = pa.array([True] * len(t), pa.bool_())
-        if lo is not None:
-            cmp = pc.greater_equal(mx, pa.scalar(lo, typ))
-            if pa.types.is_floating(typ):
-                # a NaN bound proves NOTHING (Spark max() propagates
-                # NaN): IEEE makes NaN >= lo FALSE, which would skip a
-                # file that still holds matching non-NaN rows — the
-                # dict path's NaN comparisons all fall to "keep", so
-                # must ours (caught by an r14 self-review repro:
-                # read_where lost a real row)
-                cmp = pc.or_kleene(
-                    pc.fill_null(pc.is_nan(mx), False), cmp
-                )
-            ok = pc.and_(ok, cmp)
-        if hi is not None:
-            cmp = pc.less_equal(mn, pa.scalar(hi, typ))
-            if pa.types.is_floating(typ):
-                cmp = pc.or_kleene(
-                    pc.fill_null(pc.is_nan(mn), False), cmp
-                )
-            ok = pc.and_(ok, cmp)
-        keep_entry = pc.and_(
-            pc.invert(both_null), pc.or_(one_null, pc.fill_null(ok, False))
-        )
-        keep_mask = pc.and_(
-            keep_mask, pc.or_(no_stats, pc.and_(has_f, keep_entry))
-        )
+    specs = _bound_specs(
+        {key_of[c]: b for c, b in ranges.items()},
+        _manifest_schema_types(spark, path, start),
+    )
+    if specs is None:
+        return None
+    t = _manifest_table(
+        spark, path, start,
+        ["file"] + [f"{p}::{k}" for k in specs for p in ("has", "min", "max")],
+    )
+    kept = t.filter(_keep_expr(specs, spark_side=False))
     return (
         start,
         set(t.column("file").to_pylist()),
-        set(pc.filter(t.column("file"), keep_mask).to_pylist()),
+        set(kept.column("file").to_pylist()),
     )
 
 
-def _manifest_range_prune(
-    spark: SparkSession, path: str, col: str, lo, hi, cap: int
+def _manifest_keep(
+    spark: SparkSession, path: str, ranges: dict, cap: int, files
 ):
-    """Single-column wrapper over `_manifest_prune` (files_for_range's
-    fast path)."""
-    return _manifest_prune(
-        spark, path, {col: (lo, hi)}, cap, skip_unbounded=False
-    )
+    """(manifest checkpoint version, the ``files`` that ``ranges``
+    cannot rule out), or None when `_manifest_prune` declines.
+    Checkpoint-covered files take the vectorized verdict. Files with
+    stats recorded after the checkpoint (O(Δ) entries) take
+    `_stats_prune` over those instead — the newest record wins, as in
+    `file_range_stats`. Post-checkpoint stats ride under WRITE-TIME
+    names, so column mapping translates them per file."""
+    fast = _manifest_prune(spark, path, ranges, cap)
+    if fast is None:
+        return None
+    start, covered, keep_base = fast
+    post = _log_file_meta(spark, path, "stats", cap, set(files), since=start)
+    tr = _stats_name_map(spark, path, list(post), cap, list(ranges))
+    keep_post = set(_stats_prune(list(post), ranges, post, tr))
+    return start, [
+        f for f in files
+        if (f in keep_post if f in post else f not in covered or f in keep_base)
+    ]
 
 
 def files_for_range(
@@ -4827,71 +4888,8 @@ def files_for_range(
     stats: dict | None = None,
 ) -> tuple[list[str], int]:
     """(files a [lo, hi] range query on ``col`` must read, total live
-    count). A file is skipped only when its recorded [min, max] proves
-    no overlap; files without stats are conservatively read — pruning
-    never changes results, it only removes provably-irrelevant I/O.
-    ``files``/``stats`` accept already-replayed state (one log walk
-    serves the whole read — see read_where)."""
-    if files is None:
-        files = live_files(spark, path, version)
-    if stats is None:
-        cap = (
-            _list_log_versions(spark, path)[-1]
-            if version is None else version
-        )
-        fast = _manifest_range_prune(spark, path, col, lo, hi, cap)
-        if fast is not None:
-            # manifest fast path: the checkpoint-covered files were
-            # pruned vectorized; only post-checkpoint stats (O(Δ
-            # entries)) go through the dict logic. Post-checkpoint
-            # stats win over manifest rows for re-added files — the
-            # same last-writer-wins merge file_range_stats applies.
-            start, covered, keep_base = fast
-            post = _post_ck_stats(spark, path, start, cap, set(files))
-            # post-checkpoint stats ride under WRITE-TIME names: under
-            # column mapping translate the queried cap name per file
-            # (None when mapping is inactive — names used directly)
-            tr_post = _stats_name_map(spark, path, list(post), cap, [col])
-            keep = []
-            for f in files:
-                if f not in post:
-                    if f not in covered or f in keep_base:
-                        keep.append(f)
-                    continue
-                wname = tr_post[f][col] if tr_post is not None else col
-                rng = post[f].get(wname) if wname is not None else None
-                if rng is None:
-                    keep.append(f)
-                    continue
-                mn, mx = rng
-                if mn is None and mx is None:
-                    continue
-                if mn is None or mx is None:
-                    keep.append(f)
-                    continue
-                if (lo is not None and mx < lo) or (hi is not None and mn > hi):
-                    continue
-                keep.append(f)
-            return keep, len(files)
-        stats = file_range_stats(spark, path, version, live=files)
-    tr = _stats_name_map(spark, path, files, version, [col])
-    keep = []
-    for f in files:
-        wname = tr[f][col] if tr is not None else col
-        rng = stats.get(f, {}).get(wname) if wname is not None else None
-        if rng is None:
-            keep.append(f)  # no stats recorded — must read
-            continue
-        mn, mx = rng
-        if mn is None and mx is None:
-            continue  # stats prove zero non-null values — skip
-        if mn is None or mx is None:
-            keep.append(f)
-            continue
-        if (lo is not None and mx < lo) or (hi is not None and mn > hi):
-            continue
-        keep.append(f)
-    return keep, len(files)
+    count) — `files_for_ranges` over one column."""
+    return files_for_ranges(spark, path, {col: (lo, hi)}, version, files, stats)
 
 
 def files_for_ranges(
@@ -4902,97 +4900,32 @@ def files_for_ranges(
     files: list[str] | None = None,
     stats: dict | None = None,
 ) -> tuple[list[str], int]:
-    """Conjunctive multi-column pruning: ``ranges`` maps col ->
-    (lo, hi) (either bound None = unbounded); a file survives only if
-    NO column's recorded [min, max] rules it out — the keep set is the
-    intersection of the per-column keeps. Stats are read once.
-    ``files``/``stats``: see `files_for_range`."""
+    """(files a conjunction of range predicates must read, total live
+    count). ``ranges`` maps col -> (lo, hi) (either bound None =
+    unbounded); a file is skipped only when some column's recorded
+    [min, max] proves no overlap (the pruning rule above) — the keep
+    set is the intersection of the per-column keeps, and pruning never
+    changes results, it only removes provably-irrelevant I/O.
+    ``files``/``stats`` accept already-replayed state (one log walk
+    serves the whole read — see read_where_all); without ``stats`` a
+    parquet-manifest checkpoint prunes its files vectorized."""
     if files is None:
         files = live_files(spark, path, version)
     if stats is None:
-        cap = (
-            _list_log_versions(spark, path)[-1]
-            if version is None else version
+        fast = _manifest_keep(
+            spark, path, ranges, _cap_of(spark, path, version), files
         )
-        fast = _manifest_prune(spark, path, ranges, cap, skip_unbounded=True)
         if fast is not None:
-            # conjunctive manifest fast path (the Z-order multiplicative
-            # prune, vectorized); post-checkpoint files keep the exact
-            # dict logic over O(Δ) entry stats
-            start, covered, keep_base = fast
-            post = _post_ck_stats(spark, path, start, cap, set(files))
-            # write-time name translation for post-checkpoint files
-            # under column mapping (see files_for_range)
-            tr_post = _stats_name_map(
-                spark, path, list(post), cap, list(ranges)
-            )
-            keep = []
-            for f in files:
-                if f not in post:
-                    if f not in covered or f in keep_base:
-                        keep.append(f)
-                    continue
-                ok = True
-                for col, (lo, hi) in ranges.items():
-                    if lo is None and hi is None:
-                        continue
-                    wname = (
-                        tr_post[f][col] if tr_post is not None else col
-                    )
-                    rng = (
-                        post[f].get(wname) if wname is not None else None
-                    )
-                    if rng is None:
-                        continue
-                    mn, mx = rng
-                    if mn is None and mx is None:
-                        ok = False
-                        break
-                    if mn is None or mx is None:
-                        continue
-                    if (lo is not None and mx < lo) or (
-                        hi is not None and mn > hi
-                    ):
-                        ok = False
-                        break
-                if ok:
-                    keep.append(f)
-            return keep, len(files)
+            return fast[1], len(files)
         stats = file_range_stats(spark, path, version, live=files)
     tr = _stats_name_map(spark, path, files, version, list(ranges))
-    keep = []
-    for f in files:
-        ok = True
-        for col, (lo, hi) in ranges.items():
-            if lo is None and hi is None:
-                # Fully unbounded: the exact filter in read_where_all is
-                # a no-op for this column (NULL rows survive), so even a
-                # provably all-NULL file must be kept.
-                continue
-            wname = tr[f][col] if tr is not None else col
-            rng = stats.get(f, {}).get(wname) if wname is not None else None
-            if rng is None:
-                continue  # no stats for this col — can't rule out
-            mn, mx = rng
-            if mn is None and mx is None:
-                # Zero non-null values: any real bound's exact filter
-                # (c >= lo / c <= hi) drops every row of this file.
-                ok = False
-                break
-            if mn is None or mx is None:
-                continue
-            if (lo is not None and mx < lo) or (hi is not None and mn > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(f)
-    return keep, len(files)
+    return _stats_prune(files, ranges, stats, tr), len(files)
 
 
 # Distributed read planning engages above this many checkpoint-live
 # files; below it the in-memory (arrow/dict) planners win — one Spark
 # job costs more than parsing a small manifest. Module var so tests
-# and rehearsals can force either side.
+# can force either side.
 _SCALE_PLAN_MIN_FILES = 200_000
 
 
@@ -5001,16 +4934,14 @@ def _scale_plan(
     path: str,
     ranges: dict,
     cap: int,
-    skip_unbounded: bool,
 ):
     """Distributed range-read planning (r14 VERDICT #5 — the Iceberg
     planning shape): above `_SCALE_PLAN_MIN_FILES` checkpoint-live
     files the driver never materializes the live list. Spark filters
-    the checkpoint MANIFEST with a predicate mirroring
-    `_manifest_prune`'s keep-mask semantics (equivalence-tested,
-    incl. NaN bounds) — the driver receives only (survivor, schema
-    index) rows — and the O(Δ) post-checkpoint entries adjust
-    membership, stats and DV state. Returns
+    the checkpoint MANIFEST with `_keep_expr` — the same rule
+    `_manifest_prune` evaluates in Arrow — so the driver receives only
+    (survivor, schema index) rows, and the O(Δ) post-checkpoint entries
+    adjust membership, stats and DV state. Returns
     ``(keep files, total live, dvs, merge_schema)`` or None when
     inapplicable (small table, no manifest checkpoint, column mapping
     active — its translation walks are O(#files) themselves — or
@@ -5021,12 +4952,6 @@ def _scale_plan(
     file re-added post-checkpoint with no fresh stats is read
     unconditionally, and ``merge_schema`` derives from the SURVIVING
     files' schema set (exactly the files the scan will open)."""
-    import math
-
-    from pyspark.sql.types import (
-        DoubleType, FloatType, IntegerType, LongType, StringType,
-    )
-
     versions = _list_log_versions(spark, path)
     if cap not in versions:
         return None  # standard path raises the canonical error
@@ -5039,71 +4964,22 @@ def _scale_plan(
         return None
     if _colmap_active(spark, path):
         return None
-    active = {
-        c: b for c, b in ranges.items()
-        if not (skip_unbounded and b[0] is None and b[1] is None)
-    }
     mdf = spark.read.parquet(_manifest_path(path, start))
-    mtypes = {f.name: f.dataType for f in mdf.schema.fields}
-    pred = F.lit(True)
-    for c, (lo, hi) in active.items():
-        if not all(
-            f"{p}::{c}" in mtypes for p in ("has", "min", "max")
-        ):
-            return None
-        typ = mtypes[f"min::{c}"]
-        floating = isinstance(typ, (DoubleType, FloatType))
-        if isinstance(typ, StringType):
-            if not all(b is None or isinstance(b, str) for b in (lo, hi)):
-                return None
-        elif isinstance(typ, (IntegerType, LongType)):
-            if not all(
-                b is None or (isinstance(b, (int, float))
-                              and not isinstance(b, bool))
-                for b in (lo, hi)
-            ):
-                return None
-            if lo is not None and isinstance(lo, float):
-                lo = math.ceil(lo)
-            if hi is not None and isinstance(hi, float):
-                hi = math.floor(hi)
-        elif floating:
-            if not all(
-                b is None or (isinstance(b, (int, float))
-                              and not isinstance(b, bool)
-                              and abs(b) < 2 ** 53)
-                for b in (lo, hi)
-            ):
-                return None
-        else:
-            return None
-        has_f = F.coalesce(F.col(f"has::{c}"), F.lit(False))
-        mn, mx = F.col(f"min::{c}"), F.col(f"max::{c}")
-        both_null = mn.isNull() & mx.isNull()
-        one_null = mn.isNull() != mx.isNull()
-        ok = F.lit(True)
-        if lo is not None:
-            cmp = mx >= F.lit(lo)
-            if floating:
-                # a NaN bound proves NOTHING — same rule as the arrow
-                # path (Spark isnan(NULL) is false, matching fill_null)
-                cmp = F.isnan(mx) | cmp
-            ok = ok & cmp
-        if hi is not None:
-            cmp = mn <= F.lit(hi)
-            if floating:
-                cmp = F.isnan(mn) | cmp
-            ok = ok & cmp
-        keep_entry = (~both_null) & (
-            one_null | F.coalesce(ok, F.lit(False))
-        )
-        pred = pred & ((~has_f) | (has_f & keep_entry))
-    rows = mdf.where(pred).select("file", "schema_idx").collect()
+    specs = _bound_specs(
+        ranges, {f.name: f.dataType.simpleString() for f in mdf.schema.fields}
+    )
+    if specs is None:
+        return None
+    rows = (
+        mdf.where(_keep_expr(specs, spark_side=True))
+        .select("file", "schema_idx")
+        .collect()
+    )
     survivors = [r["file"] for r in rows]
     sidx = {r["schema_idx"] for r in rows}
 
     # O(Δ) post-checkpoint fold: membership, stats, schemas, DV state
-    # (the dvs evolution mirrors _apply_entry without the live list)
+    # (`_apply_entry` evolves the DVs; the live list stays unbuilt)
     dvs = {d: dict(t) for d, t in base.get("dvs", {}).items()}
     delta_last: dict = {}      # name -> final 'add' | 'remove'
     removed_manifest: set = set()
@@ -5113,64 +4989,24 @@ def _scale_plan(
         if v <= start or v > cap:
             continue
         e = _read_entry(spark, path, v)
-        if "restore_dv" in e:
-            dvs = {
-                d: {f: int(n) for f, n in t.items()}
-                for d, t in e["restore_dv"].items()
-            }
-        removed = set(e.get("remove", []))
-        for n in removed:
-            if delta_last.get(n) == "add":
-                pass  # a delta-added file dying is net zero
-            else:
+        _, dvs = _apply_entry([], dvs, e)
+        for n in e.get("remove", []):
+            if delta_last.get(n) != "add":  # a delta-added file dying is net zero
                 removed_manifest.add(n)
             delta_last[n] = "remove"
-        if removed:
-            for d in list(dvs):
-                t = dvs[d]
-                for r in removed.intersection(t):
-                    del t[r]
-                if not t:
-                    del dvs[d]
         for n in e.get("add", []):
             delta_last[n] = "add"
             post_schema[n] = e.get("schema")
-        for d, t in e.get("dv_add", {}).items():
-            dvs[d] = {f: int(n) for f, n in t.items()}
-        for n, st in e.get("stats", {}).items():
-            post_stats[n] = st
+        post_stats.update(e.get("stats", {}))
     delta_live = [n for n, op in delta_last.items() if op == "add"]
     total = int(n_live) - len(removed_manifest) + len(delta_live)
 
-    keep = [f for f in survivors if f not in delta_last]
-    for f in delta_live:
-        st = post_stats.get(f, {})
-        ok = True
-        for col, (lo, hi) in active.items():
-            rng = st.get(col)
-            if not (isinstance(rng, (list, tuple)) and len(rng) == 2):
-                continue  # no stats — can't rule out
-            mn, mx = rng
-            if mn is None and mx is None:
-                ok = False
-                break
-            if mn is None or mx is None:
-                continue
-            try:
-                if (lo is not None and mx < lo) or (
-                    hi is not None and mn > hi
-                ):
-                    ok = False
-                    break
-            except TypeError:
-                continue  # incomparable recorded stats — must read
-        if ok:
-            keep.append(f)
+    kept_manifest = [f for f in survivors if f not in delta_last]
+    kept_delta = _stats_prune(delta_live, ranges, post_stats, None)
+    keep = kept_manifest + kept_delta
 
     pool = base.get("schema_pool")
-    kept_delta = set(keep) & set(delta_live)
     seen = {post_schema.get(f) for f in kept_delta}
-    kept_manifest = [f for f in survivors if f not in delta_last]
     if kept_manifest:
         if pool is None:
             seen.add(None)  # legacy checkpoint — unknowable, merge
@@ -5180,6 +5016,33 @@ def _scale_plan(
             }
     merge = len(seen - {None}) > 1 or None in seen
     return keep, total, dvs, merge
+
+
+def _scan_pruned(
+    spark: SparkSession,
+    path: str,
+    keep: list[str],
+    dvs: dict,
+    merge: bool | None,
+    version: int | None,
+    cap: int,
+) -> DataFrame:
+    """Scan a pruned read's surviving files ``keep`` — an empty frame of
+    the recorded schema when none survive. Live delete vectors apply to
+    pruned reads too (merge-on-read). ``merge``: the planner's
+    mergeSchema verdict, or None to derive it from the log."""
+    if not keep:
+        schema = _latest_schema(spark, path, version)
+        if schema is None:
+            raise ValueError(f"{path} has no recorded schema")
+        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
+    return _scan_files(
+        spark, path, keep, dvs,
+        merge_schema=(
+            _needs_merge_schema(spark, path, cap) if merge is None else merge
+        ),
+        cap=cap,
+    )
 
 
 def read_where_all(
@@ -5193,32 +5056,15 @@ def read_where_all(
     multiplicatively — each clustered dimension cuts the survivor set
     again), scan only the intersection, then apply the exact
     filters."""
-    scale = _scale_plan(
-        spark, path, ranges, _cap_of(spark, path, version),
-        skip_unbounded=True,
-    )
+    cap = _cap_of(spark, path, version)
+    scale = _scale_plan(spark, path, ranges, cap)
     if scale is not None:
         keep, _, dvs, merge = scale
     else:
         live, dvs = _replay_state(spark, path, version)
         keep, _ = files_for_ranges(spark, path, ranges, version, files=live)
         merge = None
-    if not keep:
-        schema = _latest_schema(spark, path, version)
-        if schema is None:
-            raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-    else:
-        # merge-on-read: live delete vectors apply to pruned reads too
-        cap = _cap_of(spark, path, version)
-        out = _scan_files(
-            spark, path, keep, dvs,
-            merge_schema=(
-                _needs_merge_schema(spark, path, cap)
-                if merge is None else merge
-            ),
-            cap=cap,
-        )
+    out = _scan_pruned(spark, path, keep, dvs, merge, version, cap)
     for col, (lo, hi) in ranges.items():
         c = F.col(col)
         if lo is not None:
@@ -5236,47 +5082,15 @@ def read_where(
     hi=None,
     version: int | None = None,
 ) -> DataFrame:
-    """Range read with LOG-LEVEL file skipping: resolve the file list
-    with `files_for_range`, scan only those, then apply the exact
-    filter. The Delta data-skipping shape — at 100 TB a selective
-    range touches the files the log proves relevant, before any
-    parquet footer is opened. Clustering the data (`commit_compact`
-    with a sorted write, or Z-ordered appends) is what makes per-file
-    ranges disjoint enough to skip most of the table."""
-    scale = _scale_plan(
-        spark, path, {col: (lo, hi)}, _cap_of(spark, path, version),
-        skip_unbounded=False,
-    )
-    if scale is not None:
-        keep, _, dvs, merge = scale
-    else:
-        live, dvs = _replay_state(spark, path, version)
-        keep, _ = files_for_range(
-            spark, path, col, lo, hi, version, files=live
-        )
-        merge = None
-    if not keep:
-        schema = _latest_schema(spark, path, version)
-        if schema is None:
-            raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-    else:
-        # merge-on-read: live delete vectors apply to pruned reads too
-        cap = _cap_of(spark, path, version)
-        out = _scan_files(
-            spark, path, keep, dvs,
-            merge_schema=(
-                _needs_merge_schema(spark, path, cap)
-                if merge is None else merge
-            ),
-            cap=cap,
-        )
-    c = F.col(col)
-    if lo is not None:
-        out = out.filter(c >= F.lit(lo))
-    if hi is not None:
-        out = out.filter(c <= F.lit(hi))
-    return out
+    """Range read with LOG-LEVEL file skipping — `read_where_all` over
+    one column: resolve the file list from the log stats, scan only
+    those, then apply the exact filter. The Delta data-skipping shape —
+    at 100 TB a selective range touches the files the log proves
+    relevant, before any parquet footer is opened. Clustering the data
+    (`commit_compact` with a sorted write, or Z-ordered appends) is
+    what makes per-file ranges disjoint enough to skip most of the
+    table."""
+    return read_where_all(spark, path, {col: (lo, hi)}, version)
 
 
 _BLOOM_M_BITS = 1 << 12  # 64 longs = 512 B per (file, col) in the log
@@ -5352,21 +5166,33 @@ def file_bloom_index(
     """{live file: {col: bitset}} from the log (files committed without
     ``bloom_cols`` are absent — point lookups must read them).
     ``live``: see `file_range_stats`."""
-    versions = _list_log_versions(spark, path)
-    cap = versions[-1] if version is None else version
-    live = set(live_files(spark, path, cap) if live is None else live)
-    start, ck = _replay_ck(spark, path, cap)
-    base_blooms = ck.get("blooms", {}) if ck is not None else {}
-    out: dict = {n: bl for n, bl in base_blooms.items() if n in live}
-    for v in versions:
-        if v <= start:
-            continue
-        if v > cap:
-            break
-        for name, bl in _read_entry(spark, path, v).get("blooms", {}).items():
-            if name in live:
-                out[name] = bl
-    return out
+    live = set(live_files(spark, path, version) if live is None else live)
+    return _log_file_meta(spark, path, "blooms", version, live)
+
+
+def _candidate_blooms(
+    spark: SparkSession, path: str, start: int, cap: int, names
+) -> dict:
+    """Bloom bitsets of just the candidate files ``names``: the manifest
+    checkpoint at ``start`` supplies its rows — bloom JSON parsed only
+    for those (the expensive part; a point lookup's candidates are a
+    handful of files, the manifest may hold 10^5+) — and entries after
+    it up to ``cap`` override."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = set(names)
+    if not names:
+        return {}
+    t = _manifest_table(spark, path, start, ["file", "bloom"])
+    t = t.filter(pc.is_in(t.column("file"), pa.array(list(names), pa.string())))
+    index = {
+        f: json.loads(b)
+        for f, b in zip(t.column("file").to_pylist(), t.column("bloom").to_pylist())
+        if b is not None
+    }
+    index.update(_log_file_meta(spark, path, "blooms", cap, names, since=start))
+    return index
 
 
 def files_for_point(
@@ -5391,68 +5217,18 @@ def files_for_point(
     total = len(files)
     if index is None:
         # manifest fast path (r14): stats rule files out FIRST
-        # (min <= value <= max is sound for equality; an all-NULL
-        # stats entry can't match — the exact filter drops NULLs),
-        # then bloom JSON is parsed ONLY for the surviving candidates.
-        # On a 100k-file manifest this turns a point lookup's metadata
-        # cost from "parse every bloom bitset" into "parse a handful".
-        # Sound for re-added files too: data files are immutable, so a
+        # ([value, value] is the equality's range; an all-NULL stats
+        # entry can't match — the exact filter drops NULLs), then bloom
+        # JSON is parsed ONLY for the surviving candidates. On a
+        # 100k-file manifest this turns a point lookup's metadata cost
+        # from "parse every bloom bitset" into "parse a handful". Sound
+        # for re-added files too: data files are immutable, so a
         # checkpoint-time stats verdict never goes stale.
-        cap = (
-            _list_log_versions(spark, path)[-1]
-            if version is None else version
-        )
-        fast = (
-            _manifest_prune(
-                spark, path, {col: (value, value)}, cap,
-                skip_unbounded=False,
-            )
-            if isinstance(value, (int, float, str))
-            and not isinstance(value, bool)
-            else None
-        )
+        cap = _cap_of(spark, path, version)
+        fast = _manifest_keep(spark, path, {col: (value, value)}, cap, files)
         if fast is not None:
-            start, covered, keep_base = fast
-            post = _post_ck_stats(
-                spark, path, start, cap,
-                {f for f in files if f not in covered},
-            )
-            # write-time name translation for post-checkpoint files
-            # under column mapping (see files_for_range)
-            tr_post = _stats_name_map(spark, path, list(post), cap, [col])
-
-            def _post_rules_out(f: str) -> bool:
-                wname = tr_post[f][col] if tr_post is not None else col
-                if wname is None:
-                    return False  # unresolvable column — read it
-                rng = post.get(f, {}).get(wname)
-                if not (isinstance(rng, (list, tuple)) and len(rng) == 2):
-                    return False
-                mn, mx = rng
-                if mn is None and mx is None:
-                    return True  # zero non-null values — can't match
-                if mn is None or mx is None:
-                    return False
-                try:
-                    return value < mn or value > mx
-                except TypeError:
-                    return False  # incomparable probe — read it
-
-            files = [
-                f for f in files
-                if (f in keep_base if f in covered
-                    else not _post_rules_out(f))
-            ]
-            index = _manifest_blooms_subset(spark, path, start, files)
-            fset = set(files)
-            for v in _list_log_versions(spark, path):
-                if v <= start or v > cap:
-                    continue
-                for name, bl in _read_entry(spark, path, v).get(
-                    "blooms", {}
-                ).items():
-                    if name in fset:
-                        index[name] = bl
+            start, files = fast
+            index = _candidate_blooms(spark, path, start, cap, files)
         else:
             index = file_bloom_index(spark, path, version, live=files)
     # cast the probe literal to the COLUMN's type before the canonical
@@ -5537,31 +5313,14 @@ def read_point(
     Above `_SCALE_PLAN_MIN_FILES` the stats-level candidates come from
     the distributed manifest plan (driver state O(candidates), never
     the live list) and bloom bytes are parsed only for them."""
-    scale = (
-        _scale_plan(
-            spark, path, {col: (value, value)},
-            _cap_of(spark, path, version), skip_unbounded=False,
-        )
-        if isinstance(value, (int, float, str))
-        and not isinstance(value, bool)
-        else None
-    )
+    cap = _cap_of(spark, path, version)
+    scale = _scale_plan(spark, path, {col: (value, value)}, cap)
     if scale is not None:
         cand, _, dvs, merge = scale
-        cap = _cap_of(spark, path, version)
         start, _ck = _replay_ck(spark, path, cap)
-        index = _manifest_blooms_subset(spark, path, start, cand)
-        cset = set(cand)
-        for v in _list_log_versions(spark, path):
-            if v <= start or v > cap:
-                continue
-            for name, bl in _read_entry(spark, path, v).get(
-                "blooms", {}
-            ).items():
-                if name in cset:
-                    index[name] = bl
         keep, _ = files_for_point(
-            spark, path, col, value, version, files=cand, index=index
+            spark, path, col, value, version, files=cand,
+            index=_candidate_blooms(spark, path, start, cap, cand),
         )
     else:
         live, dvs = _replay_state(spark, path, version)
@@ -5569,22 +5328,7 @@ def read_point(
             spark, path, col, value, version, files=live
         )
         merge = None
-    if not keep:
-        schema = _latest_schema(spark, path, version)
-        if schema is None:
-            raise ValueError(f"{path} has no recorded schema")
-        out = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-    else:
-        # merge-on-read: live delete vectors apply to pruned reads too
-        cap = _cap_of(spark, path, version)
-        out = _scan_files(
-            spark, path, keep, dvs,
-            merge_schema=(
-                _needs_merge_schema(spark, path, cap)
-                if merge is None else merge
-            ),
-            cap=cap,
-        )
+    out = _scan_pruned(spark, path, keep, dvs, merge, version, cap)
     return out.filter(F.col(col) == F.lit(value))
 
 

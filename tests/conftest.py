@@ -20,10 +20,11 @@ def sf_dir():
 # measured slow tail — every test whose call/setup took >= 5 s in the
 # round-16 baseline run (PYTEST durations, /tmp-free: the table below
 # IS the record) — carries the `slow` marker and is excluded by
-# pytest.ini's default `-m "not slow"`. The round close runs the FULL
-# suite with `-m "slow or not slow"` and commits the transcript
-# (PYTEST_r16.txt). Marking is centralized here so the tier is one
-# auditable table, not 120 scattered decorators.
+# pytest.ini's default `-m "not slow"`. Slow-inclusive runs
+# (`-m "slow or not slow"`) commit their transcript; the latest, over
+# the pruning and storage suites, is PYTEST_slow_tier.txt. Marking is
+# centralized here so the tier is one auditable table, not 120
+# scattered decorators.
 _SLOW = {
     "tests/test_advice_r12.py::test_merge_across_additive_schema_evolution",
     "tests/test_advice_r15.py::test_recreate_with_advanced_oldest_is_detected",

@@ -62,7 +62,7 @@ def test_renamed_column_prunes_through_manifest(spark, tmp_path):
     cap = vt.table_history(spark, t)[-1]["version"]
     # the fast path ENGAGES on the mapped table (not a silent bail)
     assert vt._manifest_prune(
-        spark, t, {"c": (250, None)}, cap, skip_unbounded=True
+        spark, t, {"c": (250, None)}, cap
     ) is not None
     _assert_fast_equals_dict(
         spark, vt, t, "c",
@@ -93,7 +93,7 @@ def test_swapped_columns_prune_on_the_right_physical_stats(spark, tmp_path):
     vt.checkpoint_log(spark, t, format="parquet")
     cap = vt.table_history(spark, t)[-1]["version"]
     assert vt._manifest_prune(
-        spark, t, {"a": (0, 10), "b": (0, 150)}, cap, skip_unbounded=True
+        spark, t, {"a": (0, 10), "b": (0, 150)}, cap
     ) is not None
     # conjunctive prune: fast == dict
     live = vt.live_files(spark, t)
@@ -136,7 +136,7 @@ def test_manifest_predating_colmap_bails_to_dict_path(spark, tmp_path):
     vt.rename_column(spark, t, "a", "c")
     cap = vt.table_history(spark, t)[-1]["version"]
     assert vt._manifest_prune(
-        spark, t, {"c": (0, 150)}, cap, skip_unbounded=True
+        spark, t, {"c": (0, 150)}, cap
     ) is None
     _assert_fast_equals_dict(spark, vt, t, "c", [(0, 150), (250, None)])
     got = sorted(r["c"] for r in vt.read_where(spark, t, "c", 0, 150).collect())

@@ -143,7 +143,7 @@ def _ngon_wkt(n: int) -> str:
     return "POLYGON ((" + ", ".join(f"{x:.9f} {y:.9f}" for x, y in pts) + "))"
 
 
-def test_pip_literal_bound_engines_agree_at_the_ceiling(spark):
+def test_pip_literal_bound_engines_agree_at_the_ceiling(spark, monkeypatch):
     """r16 (r15 VERDICT #8): PIP_LITERAL_MAX_EDGES sits at the measured
     literal-vs-kernel crossover (~25 ns/edge·row interpreted HOF vs
     ~2 ns/edge·row numpy after a ~0.5 µs/row Arrow toll). Pins the
@@ -179,17 +179,13 @@ def test_pip_literal_bound_engines_agree_at_the_ceiling(spark):
     assert len(got_at) > 0 and len(got_past) > 0
 
     # engine equality on the SAME polygons, each forced onto the other
-    # engine via the module bound (restored in finally)
-    orig = geo.PIP_LITERAL_MAX_EDGES
-    try:
-        geo.PIP_LITERAL_MAX_EDGES = 0  # force pandas for the at-bound
-        kern_at, py_k = rows(at)
-        assert py_k and kern_at == got_at
-        geo.PIP_LITERAL_MAX_EDGES = 1 << 20  # force literal past-bound
-        lit_past, py_l = rows(past)
-        assert not py_l and lit_past == got_past
-    finally:
-        geo.PIP_LITERAL_MAX_EDGES = orig
+    # engine via the module bound (monkeypatch restores it)
+    monkeypatch.setattr(geo, "PIP_LITERAL_MAX_EDGES", 0)  # force pandas
+    kern_at, py_k = rows(at)
+    assert py_k and kern_at == got_at
+    monkeypatch.setattr(geo, "PIP_LITERAL_MAX_EDGES", 1 << 20)  # force literal
+    lit_past, py_l = rows(past)
+    assert not py_l and lit_past == got_past
 
 
 def test_edge_arrays_attach_per_aoi_not_per_cell(spark):

@@ -85,7 +85,7 @@ def test_scale_plan_equals_standard_path(spark, tmp_path, low_threshold):
     cap = _build(spark, vt, t)
     live = vt.live_files(spark, t)
     for ranges in CASES:
-        scale = vt._scale_plan(spark, t, ranges, cap, skip_unbounded=True)
+        scale = vt._scale_plan(spark, t, ranges, cap)
         assert scale is not None, ranges
         keep_s, total_s, dvs_s, _merge = scale
         keep_d, total_d = vt.files_for_ranges(
@@ -141,7 +141,7 @@ def test_scale_plan_stays_off_below_threshold(spark, tmp_path):
     t = str(tmp_path / "t")
     cap = _build(spark, vt, t)
     assert vt._scale_plan(
-        spark, t, {"k": (0, 150)}, cap, skip_unbounded=True
+        spark, t, {"k": (0, 150)}, cap
     ) is None
 
 
@@ -153,18 +153,18 @@ def test_scale_plan_declines_colmap_and_missing_bounds(
     cap = _build(spark, vt, t)
     # string-bound against a long column: bail
     assert vt._scale_plan(
-        spark, t, {"k": ("a", None)}, cap, skip_unbounded=True
+        spark, t, {"k": ("a", None)}, cap
     ) is None
     # unknown column: bail
     assert vt._scale_plan(
-        spark, t, {"nope": (1, 2)}, cap, skip_unbounded=True
+        spark, t, {"nope": (1, 2)}, cap
     ) is None
     # column mapping: the O(#files) translation walks make the
     # distributed path pointless — decline, in-memory id path serves
     vt.rename_column(spark, t, "k", "kk")
     cap2 = vt.table_history(spark, t)[-1]["version"]
     assert vt._scale_plan(
-        spark, t, {"kk": (0, 150)}, cap2, skip_unbounded=True
+        spark, t, {"kk": (0, 150)}, cap2
     ) is None
     got = sorted(
         r["kk"] for r in vt.read_where(spark, t, "kk", 0, 150).collect()

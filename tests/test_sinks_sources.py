@@ -75,6 +75,16 @@ def test_load_shots_merges_both(spark, tmp_path):
     out = load_shots(spark, l2a=a, l2b=b, on=("shot", "acq_time"))
     row = out.first()
     assert row["rh98"] == 100 and row["tcc"] == 0.5
+    # the same merge over GeoParquet outputs: the footer stamp re-encodes
+    # each file, and acq_time must still read back as Spark wrote it
+    ga = str(tmp_path / "ga")
+    gb = str(tmp_path / "gb")
+    for p, name, val in ((ga, "rh98", 100), (gb, "tcc", 0.5)):
+        df = spark.createDataFrame([("s1", ts, val)], ["shot", "acq_time", name])
+        write_geoparquet(df.withColumn("geometry", st_point(F.lit(1.0), F.lit(2.0))), p)
+    out = load_shots(spark, l2a=ga, l2b=gb, on=("shot", "acq_time"))
+    row = out.first()
+    assert row["rh98"] == 100 and row["tcc"] == 0.5 and row["acq_time"] == ts
 
 
 def test_aoi_from_wkt_validates(spark):

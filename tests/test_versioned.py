@@ -839,6 +839,39 @@ def test_unbounded_range_keeps_all_null_files(spark, table):
     assert [(r["x"], r["y"]) for r in got2.collect()] == [(10, 3)]
 
 
+def test_unbounded_read_where_keeps_all_null_files(spark, table):
+    """The single-column form of the rule above: read_where with no
+    bounds applies no filter, so it must return exactly what a plain
+    read does — including the rows of a file whose stats record zero
+    non-null values for the column."""
+    from gedixr_spark.sinks.versioned import files_for_range, read_where
+
+    commit_append(
+        spark, table,
+        spark.createDataFrame(
+            [Row(x=None, y=1), Row(x=None, y=2)], "x long, y long"
+        ).coalesce(1),
+        stats_cols=["x", "y"],
+    )
+    commit_append(
+        spark, table,
+        spark.createDataFrame(
+            [Row(x=10, y=3), Row(x=20, y=4)], "x long, y long"
+        ).coalesce(1),
+        stats_cols=["x", "y"],
+    )
+    keep, total = files_for_range(spark, table, "x")
+    assert total == 2 and len(keep) == 2
+
+    def rows(df):
+        return sorted((r["y"], r["x"]) for r in df.collect())
+
+    assert rows(read_where(spark, table, "x")) == rows(
+        read_versioned(spark, table)
+    )
+    assert len(rows(read_where(spark, table, "x"))) == 4
+
+
 def test_upsert_rejects_type_flip(spark, table):
     """ADVICE r6: the write-time schema gate must cover commit_upsert
     too — a type-flipped batch landing via upsert poisons later
