@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gedixr_spark.constants import ALLOWED_PRODUCTS, effective_schema
 from gedixr_spark.operators.filters import month_filter, quality_filter
-from gedixr_spark.operators.joins import spatial_join_aoi_auto
+from gedixr_spark.operators.joins import spatial_join_aoi
 from gedixr_spark.operators.projections import with_geometry
 from gedixr_spark.sinks.geoparquet import output_name, write_geoparquet
 from gedixr_spark.sources.hdf5 import discover_granules, read_granules
@@ -73,10 +73,9 @@ def extract_data(
     aoi_df = None
     if subset_vector is not None:
         aoi_df = prepare_vec(spark, subset_vector)
-        # plan selection lives in spatial_join_aoi_auto: zero-UDF
-        # per-AOI predicates for small all-rectilinear sets,
-        # grid-indexed broadcast join otherwise
-        shots = spatial_join_aoi_auto(shots, aoi_df)
+        # one grid-indexed broadcast join at any AOI count: rectangles
+        # decided by bbox, other polygons by the JVM even-odd expression
+        shots = spatial_join_aoi(shots, aoi_df)
     shots = with_geometry(shots)
 
     out_path = None

@@ -159,7 +159,7 @@ AOI_WKT = {
 }
 
 # Half-plane test with the same boundary-inclusive 1e-9 tolerance the
-# engine's ray-casting UDF uses: shot coords are 2-decimal rationals, so
+# engine's even-odd ray-cast uses: shot coords are 2-decimal rationals, so
 # a true cross product is exactly 0 (on the edge) or ≥ ~5e-3; only fp
 # noise (~1e-13) lives in between and must not flip the verdict.
 _TRI_SQL = (
@@ -253,17 +253,12 @@ def q_bbox_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_spatial_join_aoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/F4: shot×AOI intersects-join replicating shots into every AOI
     they hit (extract.py:176-184); includes a non-rectangular AOI so
-    the ray-casting path is oracle-checked. Routed through the same
-    adaptive plan selection as ``api.extract_data`` — the triangle AOI
-    makes the set non-rectilinear, so the pick is the grid-indexed
-    plan, whose batched UDF sees only cell-matched candidates
-    (min-of-3 measured: 4.5 s predicate vs ~1.3-1.7 s indexed at
-    sf0.1); an all-rectangle AOI set would pick the zero-UDF
-    per-AOI-predicate plan instead."""
-    from gedixr_spark.operators.joins import spatial_join_aoi_auto
-
+    the ray-casting path is oracle-checked. The same grid-indexed plan
+    ``api.extract_data`` runs: the rectangles are decided by their bbox
+    in the broadcast cell join, the triangle refines through the JVM
+    even-odd expression over its edge array."""
     aois = aoi_from_wkt(spark, AOI_WKT)
-    out = spatial_join_aoi_auto(shots_l2a(spark, sf_dir), aois)
+    out = spatial_join_aoi(shots_l2a(spark, sf_dir), aois)
     return out.select("aoi_name", "shot", "longitude", "latitude")
 
 
@@ -287,22 +282,20 @@ def q_spatial_join_holed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 over holed / multi-part AOIs (reference handles these via
     geopandas explode, ancillary.py:148-153): interior rings exclude
     their strict interior, hole boundaries still count as inside, and
-    MULTIPOLYGON parts OR together. Deliberately PINS the grid-indexed
-    plan (not the adaptive pick) so the many-AOI scale path — cell
-    equi-join + the single batched ray-cast UDF — keeps a driver
-    correctness row of its own."""
-    from gedixr_spark.operators.joins import spatial_join_aoi_indexed
-
+    MULTIPOLYGON parts OR together. Both AOIs refine through the JVM
+    even-odd expression over their edge arrays (holes and parts are
+    just more rings), so the multi-ring path keeps an oracle-checked
+    row of its own."""
     aois = aoi_from_wkt(spark, AOI_HOLED_WKT)
-    out = spatial_join_aoi_indexed(shots_l2a(spark, sf_dir), aois)
+    out = spatial_join_aoi(shots_l2a(spark, sf_dir), aois)
     return out.select("aoi_name", "shot", "longitude", "latitude")
 
 
 def q_spatial_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r8 consolidation of the two spatial-join recorded rows (same
     schema; the aoi_name values are disjoint so the union stays
-    self-labeling): the adaptive-pick leg over the rect+triangle AOI
-    set and the pinned grid-indexed leg over holed/multi-part AOIs.
+    self-labeling): the leg over the rect+triangle AOI set and the leg
+    over holed/multi-part AOIs.
     SQL bodies reused verbatim. Freed slot funds triangle_count."""
     return q_spatial_join_aoi(spark, sf_dir).unionByName(
         q_spatial_join_holed(spark, sf_dir)

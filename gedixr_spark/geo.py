@@ -11,16 +11,16 @@ column. Unlike opaque WKB bytes, a struct
 
 Spatial predicates: axis-aligned rectangles (the oracle-expressible
 case, FIXTURES.md §3) compile to range predicates that push into the
-scan; arbitrary polygons use a numpy ray-casting pandas UDF behind a
-bbox prefilter — the same coarse-then-exact strategy the reference uses
-(bbox at download, exact intersects at extraction; SURVEY §4).
+scan; every other polygon is a bbox prefilter AND one JVM even-odd
+ray-cast expression over its edge array — the same coarse-then-exact
+strategy the reference uses (bbox at download, exact intersects at
+extraction; SURVEY §4).
 """
 
 from __future__ import annotations
 
 import math
 import re
-import struct as _struct
 
 import numpy as np
 import pandas as pd
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     StructField,
     StructType,
@@ -319,7 +318,7 @@ def st_transform(df, lon_col: str, lat_col: str, src: str, dst: str):
     raise NotImplementedError("wire pyproj Transformer here")
 
 
-# --- Polygons (driver-side values; broadcast as literals/UDF closures) ---
+# --- Polygons (parsed locally; shipped as plan literals or broadcasts) ---
 
 _WKT_POLYGON_RE = re.compile(r"^\s*POLYGON\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
 _WKT_MULTIPOLYGON_RE = re.compile(
@@ -402,28 +401,11 @@ def rings_bounds(rings: list[list[tuple[float, float]]]) -> tuple[float, float, 
     )
 
 
-def _rings_to_arrays(rings: list[list[tuple[float, float]]]) -> tuple[np.ndarray, np.ndarray]:
-    """Flatten rings into edge-segment endpoint arrays (x1y1 → x2y2),
-    the form the vectorized even-odd kernel consumes."""
-    x1, y1, x2, y2 = [], [], [], []
-    for ring in rings:
-        for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
-            x1.append(ax)
-            y1.append(ay)
-            x2.append(bx)
-            y2.append(by)
-    return (
-        np.array(list(zip(x1, y1)), dtype=np.float64),
-        np.array(list(zip(x2, y2)), dtype=np.float64),
-    )
-
-
 def rings_to_edge_tuples(
     rings: list[list[tuple[float, float]]],
 ) -> list[tuple[float, float, float, float]]:
     """Flatten rings into ``(x1, y1, x2, y2)`` edge tuples — the row
-    form `pip_edges_predicate` consumes (same segment set, same order,
-    as the numpy arrays `_rings_to_arrays` builds for the UDF kernel)."""
+    form `pip_edges_predicate` consumes."""
     out = []
     for ring in rings:
         for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
@@ -441,17 +423,16 @@ def pip_edges_predicate(lon: Column, lat: Column, edges: Column) -> Column:
     higher-order functions (guide §4.1: built-ins over UDFs) — no
     ArrowEvalPython stage, no Python boundary, no row serialization.
 
-    Bit-identical to the numpy kernel in ``named_polygons_pip_udf`` /
-    ``st_intersects_polygon``: per edge the SAME IEEE-double ops in the
-    SAME order (ray x-intercept ``x1 + (y-y1)*(x2-x1)/(y2-y1)``; cross
-    product / projection-parameter boundary test at 1e-9), and the
-    crossing count is an integer sum, so summation order cannot matter.
+    Bit-identical to the numpy reference ``testing.pip_reference``: per
+    edge the SAME IEEE-double ops in the SAME order (ray x-intercept
+    ``x1 + (y-y1)*(x2-x1)/(y2-y1)``; cross product / projection-parameter
+    boundary test at 1e-9), and the crossing count is an integer sum, so summation order cannot matter.
     The div-by-zero corners agree too: a horizontal edge (y2==y1) can
     make ``xint`` NaN/Inf, but only when the crossing condition is
     already false (both endpoint tests equal), and a NaN ``t`` on a
     degenerate zero-length edge fails ``t <= 1`` under Spark's
     NaN-is-largest ordering exactly as it fails ``t >= 0`` under
-    IEEE — property-pinned against the UDF on boundary grids."""
+    IEEE — property-pinned against the reference on boundary grids."""
 
     def _crossing(acc: Column, e: Column) -> Column:
         cond = (e["y1"] <= lat) != (e["y2"] <= lat)
@@ -474,21 +455,6 @@ def pip_edges_predicate(lon: Column, lat: Column, edges: Column) -> Column:
     return inside | F.exists(edges, _on_edge)
 
 
-#: st_intersects_polygon builds the edge array as a plan literal (it
-#: returns a bare Column — no DataFrame to hang a broadcast off).
-#: Bound MEASURED (r16, 2M-point noop A/B, min-of-4 per cell): the
-#: interpreted HOF costs ~25 ns/edge·row while the vectorized numpy
-#: kernel costs ~2 ns/edge·row after a ~0.5 µs/row Arrow boundary
-#: toll, so the kernel-dominant crossover sits near 500/(25-2) ≈ 22
-#: edges — warm walls 32e: 1.22 s literal vs 0.41 s pandas; 256e:
-#: 7.26 vs 1.10; 4096e (the old bound): 117 vs 27 s. Below the bound
-#: the absolute gap is sub-second while the literal keeps the plan
-#: Python-free and skips the worker-pool cold start (first-run pandas
-#: pays 2–8 s spin-up, which dominates small row counts). At or under
-#: 32 edges literal; past it the constant-size pandas-UDF closure.
-PIP_LITERAL_MAX_EDGES = 32
-
-
 def is_rectangle(verts: list[tuple[float, float]]) -> bool:
     """True if the ring is an axis-aligned rectangle — the fast path that
     compiles to pushdown-able range predicates."""
@@ -500,158 +466,32 @@ def is_rectangle(verts: list[tuple[float, float]]) -> bool:
     return set(ring) == corners and not math.isclose(xmin, xmax) and not math.isclose(ymin, ymax)
 
 
-def rings_all_rects(rings: list[list[tuple[float, float]]]) -> bool:
-    """True when EVERY ring is an axis-aligned rectangle — the
-    rectilinear case (holed rectangles, unions of rectangles) that
-    compiles to pure range predicates, no UDF."""
-    return all(is_rectangle(r) for r in rings)
-
-
-def rect_rings_predicate(lon: Column, lat: Column, rings) -> Column:
-    """Even-odd membership for all-rectangle rings as pure column math:
-    a point is in the polygon iff it lies ON any ring's boundary
-    (boundaries — outer or hole — always intersect the polygon) OR it
-    is STRICTLY inside an odd number of rings (a hole flips parity
-    back out, a disjoint part contributes its own parity). Compiles to
-    comparisons + integer adds — whole-stage codegen, pushdown-friendly
-    bbox terms, exactly mirrors the SQL oracle's
-    outer-minus-strict-hole algebra."""
-    on_boundary = None
-    strict_count = None
-    for r in rings:
-        xmin, ymin, xmax, ymax = polygon_bounds(r)
-        ob = (
-            lon.between(xmin, xmax)
-            & lat.between(ymin, ymax)
-            & ((lon == xmin) | (lon == xmax) | (lat == ymin) | (lat == ymax))
-        )
-        sc = F.when(
-            (lon > xmin) & (lon < xmax) & (lat > ymin) & (lat < ymax), 1
-        ).otherwise(0)
-        on_boundary = ob if on_boundary is None else (on_boundary | ob)
-        strict_count = sc if strict_count is None else (strict_count + sc)
-    return on_boundary | (strict_count % 2 == 1)
-
-
 def st_intersects_polygon(lon: Column, lat: Column, wkt: str) -> Column:
     """X9 — ``point.intersects(polygon)`` as a Column predicate.
 
-    Rectangles → pure range predicates (pushed to the scan);
-    rectilinear multi-ring geometries (holed rectangles, rectangle
-    unions) → boundary-or-odd-strict-containment column math (still no
-    UDF). General polygons — including interior rings (holes) and
-    MULTIPOLYGON — → bbox prefilter AND the JVM even-odd ray-cast
-    higher-order expression over an edge-array literal (no Python
-    boundary; `pip_edges_predicate`), falling back to the vectorized
-    pandas-UDF kernel past ``PIP_LITERAL_MAX_EDGES`` vertices — the
-    measured crossover where interpreted per-edge HOF evaluation
-    overtakes the kernel's constant Arrow-boundary toll (A/B numbers
-    at the bound's definition). Boundary
-    points (outer OR hole edges) count as inside, matching shapely
-    ``intersects``; both engines are bit-identical (property-pinned).
+    A plain rectangle is its bbox: pure range predicates, pushed to the
+    scan. Every other geometry — interior rings (holes), MULTIPOLYGON
+    parts, general polygons — is the bbox prefilter AND the JVM
+    even-odd ray-cast (`pip_edges_predicate`) over an edge-array plan
+    literal: no Python boundary. Boundary points (outer OR hole edges)
+    count as inside, matching shapely ``intersects``.
     """
     rings = parse_wkt_rings(wkt)
     xmin, ymin, xmax, ymax = rings_bounds(rings)
     bbox = lon.between(xmin, xmax) & lat.between(ymin, ymax)
     if len(rings) == 1 and is_rectangle(rings[0]):
         return bbox
-    if rings_all_rects(rings):
-        return bbox & rect_rings_predicate(lon, lat, rings)
-
-    edge_tuples = rings_to_edge_tuples(rings)
-    if len(edge_tuples) <= PIP_LITERAL_MAX_EDGES:
-        edges_lit = F.array(
-            *[
-                F.struct(
-                    F.lit(x1).alias("x1"),
-                    F.lit(y1).alias("y1"),
-                    F.lit(x2).alias("x2"),
-                    F.lit(y2).alias("y2"),
-                )
-                for (x1, y1, x2, y2) in edge_tuples
-            ]
+    # one parsed expression, not one Py4J call per edge field (repr()
+    # round-trips doubles exactly; the D suffix pins the literal type)
+    edges = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('x1',{x1!r}D,'y1',{y1!r}D,'x2',{x2!r}D,'y2',{y2!r}D)"
+            for x1, y1, x2, y2 in rings_to_edge_tuples(rings)
         )
-        return bbox & pip_edges_predicate(lon, lat, edges_lit)
-
-    p1, p2 = _rings_to_arrays(rings)
-
-    @pandas_udf(BooleanType())
-    def _pip(px: pd.Series, py: pd.Series) -> pd.Series:
-        # self-contained closure (captures p1/p2 by value): runs on
-        # bare workers without the repo on PYTHONPATH
-        x = px.to_numpy(dtype=np.float64)[:, None]
-        y = py.to_numpy(dtype=np.float64)[:, None]
-        x1, y1 = p1[None, :, 0], p1[None, :, 1]
-        x2, y2 = p2[None, :, 0], p2[None, :, 1]
-        # even-odd: count edges (over ALL rings) crossing the upward ray
-        cond = (y1 <= y) != (y2 <= y)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
-        crossings = (cond & (x < xint)).sum(axis=1)
-        inside = (crossings % 2) == 1
-        # boundary: a point on any edge segment counts as inside
-        # (shapely `intersects`; hole boundaries belong to the polygon).
-        # Tolerance 1e-9: far above fp noise (~1e-13 at degree scale),
-        # far below any genuine offset.
-        dx, dy = x2 - x1, y2 - y1
-        cross = (x - x1) * dy - (y - y1) * dx
-        t = ((x - x1) * dx + (y - y1) * dy) / (dx * dx + dy * dy)
-        on_edge = ((np.abs(cross) < 1e-9) & (t >= 0) & (t <= 1)).any(axis=1)
-        return pd.Series(inside | on_edge)
-
-    return bbox & _pip(lon, lat)
-
-
-def named_polygons_pip_udf(polys: dict[str, list[list[tuple[float, float]]]]):
-    """ONE vectorized point-in-polygon UDF over ``(lon, lat, aoi_name)``
-    for a whole dictionary of (possibly holed/multi-part) polygons.
-
-    This replaces a per-AOI ``when(name==n, udf_n)`` chain: at 10k AOIs
-    that chain is 10k UDF invocations per row and an expression far past
-    codegen limits; here every candidate row crosses into Arrow ONCE,
-    rows are grouped by AOI inside numpy, and each group runs the same
-    even-odd kernel as ``st_intersects_polygon``. Names absent from the
-    dict (e.g. rectangles already decided by bbox) pass through True.
-
-    Returns a factory ``(lon_col, lat_col, name_col) -> BooleanColumn``.
-    The vertex arrays are captured by value in the closure (pickled once
-    per task — the broadcast-dict pattern without a SparkContext
-    dependency), so it runs on bare workers."""
-    seg = {
-        name: _rings_to_arrays(rings) for name, rings in polys.items()
-    }
-
-    def build(lon: Column, lat: Column, name: Column) -> Column:
-        @pandas_udf(BooleanType())
-        def _pip_named(px: pd.Series, py: pd.Series, pn: pd.Series) -> pd.Series:
-            x = px.to_numpy(dtype=np.float64)
-            y = py.to_numpy(dtype=np.float64)
-            names = pn.to_numpy()
-            out = np.ones(len(x), dtype=bool)
-            for nm in pd.unique(names):
-                arrs = seg.get(nm)
-                if arrs is None:
-                    continue  # not in dict → bbox already decided it
-                mask = names == nm
-                xs = x[mask][:, None]
-                ys = y[mask][:, None]
-                p1, p2 = arrs
-                x1, y1 = p1[None, :, 0], p1[None, :, 1]
-                x2, y2 = p2[None, :, 0], p2[None, :, 1]
-                cond = (y1 <= ys) != (y2 <= ys)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xint = x1 + (ys - y1) * (x2 - x1) / (y2 - y1)
-                inside = ((cond & (xs < xint)).sum(axis=1) % 2) == 1
-                dx, dy = x2 - x1, y2 - y1
-                cross = (xs - x1) * dy - (ys - y1) * dx
-                t = ((xs - x1) * dx + (ys - y1) * dy) / (dx * dx + dy * dy)
-                on_edge = ((np.abs(cross) < 1e-9) & (t >= 0) & (t <= 1)).any(axis=1)
-                out[mask] = inside | on_edge
-            return pd.Series(out)
-
-        return _pip_named(lon, lat, name)
-
-    return build
+        + ")"
+    )
+    return bbox & pip_edges_predicate(lon, lat, edges)
 
 
 def haversine_m(

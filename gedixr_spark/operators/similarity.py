@@ -23,8 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
 from gedixr_spark.operators.clustering import kmeans_fit
@@ -163,32 +161,14 @@ def lsh_bucket(
     vec_col: Column | str,
     planes: list[list[int]],
     scale: int = 1000,
-    impl: str = "jvm",
 ) -> Column:
     """Random-hyperplane signature: bit i = sign(q · plane_i), packed
     into an int. All arithmetic is exact int64 (|q|≤~1000·64 terms
-    ·10⁴ ≈ 2^40 per plane), so the JVM fold and the numpy matmul agree
-    bit-for-bit under any summation order.
-
-    ``impl='jvm'`` (default) evaluates inside whole-stage codegen —
-    no Arrow hop, no Python worker pool, the signature stays fused
-    with the scan/join it feeds (this family was the only Arrow
-    dependency in the ANN hot path). ``impl='arrow'`` keeps the
-    vectorized numpy kernel: one n×dim @ dim×planes matmul per batch,
-    the better shape when dim·planes is large (≥~10⁴ terms/row, e.g.
-    768-dim production embeddings with 16+ planes)."""
+    ·10⁴ ≈ 2^40 per plane), so the result is bit-exact under any
+    summation order. Evaluates inside whole-stage codegen — no Arrow
+    hop, no Python worker pool; the signature stays fused with the
+    scan/join it feeds."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if impl == "arrow":
-        pl = np.asarray(planes, dtype=np.int64).T  # dim × n_planes
-        weights = (2 ** np.arange(len(planes))).astype(np.int64)
-
-        @pandas_udf(IntegerType())
-        def _bucket(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy())  # n × dim (quantized int64)
-            proj = m.astype(np.int64) @ pl  # exact
-            return pd.Series(((proj > 0) @ weights).astype(np.int32))
-
-        return _bucket(quantize(c, scale))
     qv = quantize(c, scale)
     # ONE transform over a 2-D plane literal instead of n_planes
     # unrolled folds: the expression tree is O(1) in n_planes, which
@@ -307,24 +287,11 @@ def ivf_cell(
     vec_col: Column | str,
     centroids: list[list[int]],
     scale: int = 1000,
-    impl: str = "jvm",
 ) -> Column:
     """Nearest-centroid cell id by max exact-int dot product; ties break
     to the lowest centroid index (first max), matching the SQL oracle's
-    CASE chain. ``impl`` trade as in `lsh_bucket`: 'jvm' (default)
-    stays in whole-stage codegen; 'arrow' is the numpy-matmul kernel
-    for large dim·cells."""
+    CASE chain."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if impl == "arrow":
-        cen = np.asarray(centroids, dtype=np.int64).T  # dim × cells
-
-        @pandas_udf(IntegerType())
-        def _cell(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy()).astype(np.int64)
-            dots = m @ cen  # exact
-            return pd.Series(np.argmax(dots, axis=1).astype(np.int32))
-
-        return _cell(quantize(c, scale))
     return F.array_min(_cell_entries(quantize(c, scale), centroids))["idx"]
 
 
@@ -333,28 +300,13 @@ def ivf_probe_cells(
     centroids: list[list[int]],
     nprobe: int = 1,
     scale: int = 1000,
-    impl: str = "jvm",
 ) -> Column:
     """Top-``nprobe`` nearest cells by exact-int dot product, nearest
     first, ties to the lower centroid index (matches ivf_cell's
     first-max rule for the top cell). Query-side fan-out only: the
-    corpus index stays single-celled. ``impl`` trade as in
-    `lsh_bucket`."""
+    corpus index stays single-celled."""
     n = min(nprobe, len(centroids))
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if impl == "arrow":
-        cen = np.asarray(centroids, dtype=np.int64).T  # dim × cells
-
-        @pandas_udf(ArrayType(IntegerType()))
-        def _cells(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy()).astype(np.int64)
-            dots = m @ cen  # exact
-            order = np.argsort(-dots, axis=1, kind="stable")[:, :n].astype(
-                np.int32
-            )
-            return pd.Series(list(order))
-
-        return _cells(quantize(c, scale))
     ordered = F.array_sort(_cell_entries(quantize(c, scale), centroids))
     return F.transform(F.slice(ordered, 1, n), lambda s: s["idx"])
 
@@ -429,53 +381,10 @@ def lsh_table_buckets(
     vec_col: Column | str,
     tables: list[list[list[int]]],
     scale: int = 1000,
-    impl: str = "jvm",
 ) -> Column:
     """array<struct<tbl:int, bucket:int>> — the vector's bucket in every
-    table. Explode + equi-join on (tbl, bucket) downstream. ``impl``
-    trade as in `lsh_bucket`: 'jvm' (default) packs each table's sign
-    block in whole-stage codegen; 'arrow' stacks all L·bits planes
-    into one numpy matmul per batch for large dim·L·bits."""
+    table. Explode + equi-join on (tbl, bucket) downstream."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if impl == "arrow":
-        from pyspark.sql.types import StructField, StructType
-
-        bits = len(tables[0])
-        all_planes = np.asarray(
-            [p for tbl in tables for p in tbl], dtype=np.int64
-        ).T  # dim × (L·bits)
-        weights = (2 ** np.arange(bits)).astype(np.int64)
-        n_tables = len(tables)
-
-        out_t = ArrayType(
-            StructType(
-                [
-                    StructField("tbl", IntegerType()),
-                    StructField("bucket", IntegerType()),
-                ]
-            )
-        )
-
-        @pandas_udf(out_t)
-        def _buckets(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy()).astype(np.int64)
-            proj = m @ all_planes  # exact int64
-            signs = proj > 0
-            per_table = [
-                (signs[:, t * bits : (t + 1) * bits] @ weights).astype(np.int32)
-                for t in range(n_tables)
-            ]
-            return pd.Series(
-                [
-                    [
-                        {"tbl": t, "bucket": int(per_table[t][i])}
-                        for t in range(n_tables)
-                    ]
-                    for i in range(len(m))
-                ]
-            )
-
-        return _buckets(quantize(c, scale))
     return F.array(
         *[
             F.struct(
@@ -795,45 +704,18 @@ def pq_codes(
     vec_col: Column | str,
     codebooks: list[list[list[int]]],
     scale: int = 1000,
-    impl: str = "jvm",
 ) -> Column:
     """Encode: per sub-space nearest centroid by exact-int squared L2
     (ties → lowest code, matching both numpy first-argmin and the SQL
     oracle's CASE chain). Map-only — the shape of a 100 TB encode job
     (each partition encodes independently; the codebooks ride the plan
-    as literals).
-
-    ``impl`` trade as in `lsh_bucket`/`ivf_cell`: 'jvm' (default)
-    evaluates as higher-order array expressions on the executor — no
-    Arrow hop, no Python worker pool, the encode stays fused with the
-    scan it feeds; 'arrow' keeps the vectorized numpy kernel (one
-    n×dim @ dim×ksub matmul per batch per sub-space), the better shape
-    when m·ksub·dsub is large (≥~10⁴ terms/row). Both are exact int64
-    ⇒ bit-identical under any summation order."""
+    as literals). Evaluates as higher-order array expressions on the
+    executor — no Arrow hop, no Python worker pool; the encode stays
+    fused with the scan it feeds, exact int64 under any summation
+    order."""
     cbs = [np.asarray(cb, dtype=np.int64) for cb in codebooks]
-    m = len(cbs)
     lift = _pq_lift(scale)
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-
-    if impl == "arrow":
-
-        @pandas_udf(ArrayType(IntegerType()))
-        def _codes(vecs: pd.Series) -> pd.Series:
-            q = np.stack(vecs.to_numpy()).astype(np.int64) * lift  # cb scale
-            out = np.empty((q.shape[0], m), dtype=np.int32)
-            ofs = 0
-            for j, cb in enumerate(cbs):
-                dsub = cb.shape[1]
-                sub = q[:, ofs : ofs + dsub]
-                ofs += dsub
-                # argmin ||sub - c||² == argmin (||c||² - 2·sub·c): the
-                # ||sub||² term is row-constant, dropping it keeps int64
-                # headroom and the same winner
-                d2 = (cb * cb).sum(axis=1)[None, :] - 2 * (sub @ cb.T)
-                out[:, j] = np.argmin(d2, axis=1)
-            return pd.Series(list(out))
-
-        return _codes(quantize(c, scale))
 
     def _codes_of(qq: Column) -> Column:
         # qq is the let-bound quantized vector (evaluated ONCE per

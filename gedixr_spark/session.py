@@ -24,7 +24,7 @@ def get_spark(
     - AQE on: runtime coalescing of shuffle partitions, skew-join
       splitting, and dynamic join-strategy switching — at 100 TB the
       static plan is never exactly right.
-    - Arrow on: every Pandas-UDF boundary (HDF5 reader, point-in-polygon)
+    - Arrow on: every Pandas-UDF boundary (HDF5 reader, WKB codecs)
       moves data in Arrow batches, not pickled rows.
     - shuffle.partitions defaults to cores locally; on a cluster you'd
       size it so post-shuffle partitions land in the 64–256 MB range and

@@ -1,4 +1,5 @@
-"""Deterministic fake GEDI granules for reader tests.
+"""Test support: deterministic fake GEDI granules for reader tests,
+and a numpy point-in-polygon reference for the spatial predicates.
 
 h5py isn't installed in this environment (SURVEY.md §7.3), so tests
 exercise the S2 reader's real Spark plumbing (inventory → mapInPandas →
@@ -98,3 +99,41 @@ def build_opener(granules: dict):
         yield granules[Path(path).name]
 
     return opener
+
+
+def pip_reference(xs, ys, rings) -> np.ndarray:
+    """Even-odd point-in-polygon over ALL ``rings`` (holes and
+    multi-part geometries), with boundary points inside — the numpy
+    truth `geo.pip_edges_predicate` is checked against, bit for bit:
+    the same IEEE-double ops per edge, the same 1e-9 boundary
+    tolerance. Returns one bool per (x, y)."""
+    from gedixr_spark.geo import rings_to_edge_tuples
+
+    e = np.asarray(rings_to_edge_tuples(rings), dtype=np.float64)
+    x1, y1, x2, y2 = (e[None, :, i] for i in range(4))
+    x = np.asarray(xs, dtype=np.float64)[:, None]
+    y = np.asarray(ys, dtype=np.float64)[:, None]
+    dx, dy = x2 - x1, y2 - y1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        # count edges crossing the ray towards +x
+        cond = (y1 <= y) != (y2 <= y)
+        xint = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
+        inside = (cond & (x < xint)).sum(axis=1) % 2 == 1
+        # on an edge segment: zero cross product, projection in [0, 1]
+        cross = (x - x1) * dy - (y - y1) * dx
+        t = ((x - x1) * dx + (y - y1) * dy) / (dx * dx + dy * dy)
+    on_edge = ((np.abs(cross) < 1e-9) & (t >= 0) & (t <= 1)).any(axis=1)
+    return inside | on_edge
+
+
+def intersects_reference(xs, ys, wkt: str) -> np.ndarray:
+    """``point.intersects(polygon)`` truth for `geo.st_intersects_polygon`
+    and the J2 join: the polygon's bbox AND `pip_reference`."""
+    from gedixr_spark.geo import parse_wkt_rings, rings_bounds
+
+    rings = parse_wkt_rings(wkt)
+    xmin, ymin, xmax, ymax = rings_bounds(rings)
+    x = np.asarray(xs, dtype=np.float64)
+    y = np.asarray(ys, dtype=np.float64)
+    bbox = (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
+    return bbox & pip_reference(x, y, rings)

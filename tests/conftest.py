@@ -21,8 +21,9 @@ def sf_dir():
 # round-16 baseline run (PYTEST durations, /tmp-free: the table below
 # IS the record) — carries the `slow` marker and is excluded by
 # pytest.ini's default `-m "not slow"`. Slow-inclusive runs
-# (`-m "slow or not slow"`) commit their transcript; the latest, over
-# the pruning and storage suites, is PYTEST_slow_tier.txt. Marking is
+# (`-m "slow or not slow"`) commit their transcript: PYTEST_slow_tier.txt
+# (pruning and storage suites) and PYTEST_slow_tier_spatial.txt
+# (spatial-join, PIP and ANN suites). Marking is
 # centralized here so the tier is one auditable table, not 120
 # scattered decorators.
 _SLOW = {
@@ -72,9 +73,7 @@ _SLOW = {
     "tests/test_hybrid_search.py::test_hybrid_search_query_equals_python_fusion_of_its_legs",
     "tests/test_incremental_agg.py::test_incremental_sketches_equal_direct",
     "tests/test_incremental_segment.py::test_incremental_dedup_store_path_equivalent",
-    "tests/test_indexed_join_multiprobe.py::test_indexed_join_matches_predicate_join",
     "tests/test_ingest_lifecycle.py::test_ingest_lifecycle_composes",
-    "tests/test_join_equivalence_property.py::test_predicate_and_indexed_joins_agree",
     "tests/test_layout.py::test_pruning_report_before_and_after_clustering",
     "tests/test_mmr_tokstats.py::test_tokenizer_stats_exact_counts_and_oov",
     "tests/test_multimodal_streaming.py::test_streaming_asof_enrich_carries_state_across_batches",
@@ -82,8 +81,6 @@ _SLOW = {
     "tests/test_multimodal_streaming.py::test_streaming_distinct_users_matches_batch_sketch",
     "tests/test_multimodal_streaming.py::test_streaming_sessionize",
     "tests/test_multimodal_streaming.py::test_streaming_window_join_matches_batch",
-    "tests/test_multiring_shapefile.py::test_predicate_vs_indexed_equivalence_with_holes",
-    "tests/test_multiring_shapefile.py::test_rect_rings_predicate_matches_raycast",
     "tests/test_packed_materialize_trained_pq.py::test_train_pq_codebooks_cluster_precision",
     "tests/test_packed_materialize_trained_pq.py::test_trained_pq_recall_beats_fixed_on_offcenter_data",
     "tests/test_packing.py::test_packing_properties_hypothesis",
@@ -91,7 +88,6 @@ _SLOW = {
     "tests/test_parquet_checkpoint.py::test_point_lookup_through_manifest",
     "tests/test_parquet_checkpoint.py::test_range_prune_fast_path_equals_dict_path",
     "tests/test_parquet_checkpoint.py::test_twin_tables_agree_on_everything",
-    "tests/test_pip_hof.py::test_pip_hof_bit_identical_to_udf_kernel",
     "tests/test_pipeline_api.py::test_prepare_corpus_is_lazy_without_counts",
     "tests/test_pipeline_api.py::test_prepare_corpus_stages_and_invariants",
     "tests/test_pipeline_api.py::test_prepare_corpus_token_budget_stage",

@@ -1,31 +1,38 @@
-"""Grid-indexed spatial join (many-AOI scale path) + multi-probe LSH."""
+"""Grid-indexed spatial join (one plan at any AOI count) + multi-probe LSH."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from gedixr_spark.contract import AOI_WKT, shots_l2a
-from gedixr_spark.operators.joins import spatial_join_aoi, spatial_join_aoi_indexed
+from gedixr_spark.operators.joins import spatial_join_aoi
 from gedixr_spark.operators.similarity import (
     cosine_topk,
     lsh_ann_topk,
     lsh_ann_topk_multiprobe,
 )
 from gedixr_spark.sources.vector import aoi_from_wkt
+from gedixr_spark.testing import intersects_reference
 
 
-def test_indexed_join_matches_predicate_join(spark):
-    """Equivalence: the grid-indexed plan returns exactly the rows the
-    per-AOI-predicate plan returns (same J2 semantics). sf0.01: at
+def test_join_matches_pip_reference_on_registry_aois(spark):
+    """The join over the registry's rectangle + triangle AOIs returns
+    exactly the (shot, AOI) pairs the numpy reference finds. sf0.01: at
     sf0.001 the derived longitudes don't reach the AOIs (partkey
     domain too small) and the join is legitimately ~empty."""
     sf = "/root/testdata/sf0.01"
-    shots = shots_l2a(spark, sf)
-    aois = aoi_from_wkt(spark, AOI_WKT)
-    a = {(r["shot"], r["aoi_name"]) for r in
-         spatial_join_aoi(shots, aois).select("shot", "aoi_name").collect()}
-    b = {(r["shot"], r["aoi_name"]) for r in
-         spatial_join_aoi_indexed(shots_l2a(spark, sf), aois).select("shot", "aoi_name").collect()}
-    assert a == b and len(a) > 0
+    shots = shots_l2a(spark, sf).select("shot", "longitude", "latitude").collect()
+    xs = [r["longitude"] for r in shots]
+    ys = [r["latitude"] for r in shots]
+    truth = {
+        (r["shot"], name)
+        for name, wkt in AOI_WKT.items()
+        for r, hit in zip(shots, intersects_reference(xs, ys, wkt))
+        if hit
+    }
+    got = {(r["shot"], r["aoi_name"]) for r in
+           spatial_join_aoi(shots_l2a(spark, sf), aoi_from_wkt(spark, AOI_WKT))
+           .select("shot", "aoi_name").collect()}
+    assert got == truth and len(got) > 0
 
 
 def test_indexed_join_scales_to_many_aois(spark):
@@ -40,7 +47,7 @@ def test_indexed_join_scales_to_many_aois(spark):
         for i in range(300)
         for x, y in [(-10 + (i % 20), 40 + (i // 20) * 0.75)]
     }
-    out = spatial_join_aoi_indexed(shots_l2a(spark, sf), aoi_from_wkt(spark, many))
+    out = spatial_join_aoi(shots_l2a(spark, sf), aoi_from_wkt(spark, many))
     n = out.count()
     assert n > 0
     # every emitted pair is a true bbox hit

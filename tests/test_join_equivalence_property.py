@@ -1,11 +1,11 @@
-"""Property: the two J2 spatial-join implementations (per-AOI predicate
-vs grid-indexed) agree on arbitrary rectangle sets and point clouds —
-hypothesis searches for disagreement."""
+"""Property: the J2 spatial join returns plain-Python rectangle
+containment on arbitrary rectangle sets and point clouds, whatever the
+grid cell size — hypothesis searches for disagreement."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from gedixr_spark.operators.joins import spatial_join_aoi, spatial_join_aoi_indexed
+from gedixr_spark.operators.joins import spatial_join_aoi
 from gedixr_spark.sources.vector import aoi_from_wkt
 
 coord = st.integers(-20, 20)
@@ -26,7 +26,7 @@ point = st.tuples(
 )
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_predicate_and_indexed_joins_agree(spark, rects, points):
+def test_join_matches_truth_at_any_cell_size(spark, rects, points):
     aoi = {
         f"r{i}": f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
         for i, (x0, y0, x1, y1) in enumerate(rects)
@@ -38,7 +38,7 @@ def test_predicate_and_indexed_joins_agree(spark, rects, points):
     aois = aoi_from_wkt(spark, aoi)
     a = {(r["shot"], r["aoi_name"]) for r in spatial_join_aoi(shots, aois).collect()}
     b = {(r["shot"], r["aoi_name"])
-         for r in spatial_join_aoi_indexed(shots, aois, cell_deg=3.0).collect()}
+         for r in spatial_join_aoi(shots, aois, cell_deg=3.0).collect()}
     # ground truth from plain python (inclusive rectangle containment)
     truth = {
         (str(i), f"r{j}")

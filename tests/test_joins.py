@@ -98,10 +98,10 @@ def test_spatial_join_empty_aoi_table_raises(spark):
 
 
 def test_spatial_join_auto_routes_by_aoi_count(spark):
-    """spatial_join_aoi_auto picks the zero-join predicate plan for a
-    handful of AOIs and the grid-indexed broadcast join past the
-    threshold — visible in the physical plan (the predicate plan has
-    no Join node), with identical rows either way."""
+    """spatial_join_aoi_auto, the alias of spatial_join_aoi kept for
+    older callers, returns the right rows for a handful of rectangles,
+    for more than 32 of them, and for a rectangle mixed with a
+    triangle."""
     from gedixr_spark.operators.joins import spatial_join_aoi_auto
 
     shots = spark.createDataFrame(
@@ -118,19 +118,14 @@ def test_spatial_join_auto_routes_by_aoi_count(spark):
     )
 
     few_out = spatial_join_aoi_auto(shots, few)
-    assert "Join" not in few_out._jdf.queryExecution().executedPlan().toString()
     assert {(r["shot"], r["aoi_name"]) for r in few_out.collect()} == {
         ("a", "r1"), ("b", "r1")
     }
 
     many_out = spatial_join_aoi_auto(shots, many)
-    assert "Join" in many_out._jdf.queryExecution().executedPlan().toString()
     got = {(r["shot"], r["aoi_name"]) for r in many_out.collect()}
     assert got == {("a", "r0"), ("b", "r2"), ("b", "r3")}
 
-    # one general polygon in a small set flips the pick to the indexed
-    # plan: its ray-cast UDF must see only cell-matched candidates,
-    # not every coarse-bbox survivor
     mixed = aoi_from_wkt(
         spark,
         {
@@ -139,6 +134,35 @@ def test_spatial_join_auto_routes_by_aoi_count(spark):
         },
     )
     mixed_out = spatial_join_aoi_auto(shots, mixed)
-    assert "Join" in mixed_out._jdf.queryExecution().executedPlan().toString()
     got = {(r["shot"], r["aoi_name"]) for r in mixed_out.collect()}
     assert got == {("a", "r1"), ("a", "tri"), ("b", "r1"), ("b", "tri")}
+
+
+def test_spatial_join_keeps_shot_columns_named_like_its_internals(spark):
+    """Shots may carry columns named like the join's bookkeeping (cell
+    ids, bbox bounds, edge arrays): every J2 entry point returns them
+    untouched, in order, followed by aoi_name — with a rectangle and a
+    general polygon in the AOI set, so both refinements run."""
+    from gedixr_spark.operators.joins import spatial_join_aoi_auto
+
+    cols = ["shot", "longitude", "latitude", "cell_x", "cell_y", "xmin",
+            "ymax", "nonrect", "edges", "aoi"]
+    shots = spark.createDataFrame(
+        [("a", 0.5, 44.5, 7, 8, -1.0, 2.0, True, "e", "x"),
+         ("b", 5.5, 49.0, 7, 8, -1.0, 2.0, False, "e", "x")],
+        cols,
+    )
+    aois = aoi_from_wkt(
+        spark,
+        {
+            "r1": "POLYGON ((0 44, 4 44, 4 46, 0 46, 0 44))",
+            "tri": "POLYGON ((0 44, 6 44, 3 50, 0 44))",
+        },
+    )
+    for join in (spatial_join_aoi, spatial_join_aoi_auto):
+        out = join(shots, aois)
+        assert out.columns == cols + ["aoi_name"]
+        assert sorted(tuple(r) for r in out.collect()) == [
+            ("a", 0.5, 44.5, 7, 8, -1.0, 2.0, True, "e", "x", "r1"),
+            ("a", 0.5, 44.5, 7, 8, -1.0, 2.0, True, "e", "x", "tri"),
+        ]

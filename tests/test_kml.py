@@ -84,7 +84,7 @@ def test_kml_without_polygons_raises(spark, tmp_path):
 
 def test_kml_aois_join_shots(spark, kml_path):
     """End-to-end: KML AOIs drive the spatial join (hole excluded)."""
-    from gedixr_spark.operators.joins import spatial_join_aoi_auto
+    from gedixr_spark.operators.joins import spatial_join_aoi
 
     shots = spark.createDataFrame(
         [("in_alpha", 3.0, 45.8), ("in_hole", 1.5, 45.0), ("in_multi", 7.5, 44.5)],
@@ -92,7 +92,7 @@ def test_kml_aois_join_shots(spark, kml_path):
     )
     got = {
         (r["shot"], r["aoi_name"])
-        for r in spatial_join_aoi_auto(shots, aoi_from_kml(spark, kml_path)).collect()
+        for r in spatial_join_aoi(shots, aoi_from_kml(spark, kml_path)).collect()
     }
     assert got == {("in_alpha", "alpha"), ("in_multi", "areas_1")}
 

@@ -1,5 +1,5 @@
-"""Multi-ring (holed) / MultiPolygon AOIs, the single-UDF non-rect
-refinement in the indexed spatial join, and the stdlib shapefile reader.
+"""Multi-ring (holed) / MultiPolygon AOIs, the edge-array refinement in
+the spatial join, and the stdlib shapefile reader.
 
 Reference parity targets: geopandas-style holed/multi AOIs via
 prepare_vec (ancillary.py:121-154) and the per-AOI intersects loop
@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 
 from gedixr_spark.contract import shots_l2a
 from gedixr_spark.geo import parse_wkt_rings, st_intersects_polygon
-from gedixr_spark.operators.joins import spatial_join_aoi, spatial_join_aoi_indexed
+from gedixr_spark.operators.joins import spatial_join_aoi
 from gedixr_spark.sources.vector import aoi_from_shapefile, aoi_from_wkt, prepare_vec
+from gedixr_spark.testing import intersects_reference
 
 HOLED = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))"
 MULTI = "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)), ((5 5, 7 5, 7 7, 5 7, 5 5)))"
@@ -52,32 +53,40 @@ def test_multipolygon_membership(spark):
     assert _membership(spark, MULTI, pts) == [True, True, False, True]
 
 
-def test_predicate_vs_indexed_equivalence_with_holes(spark):
-    """Both J2 plans agree on holed + multi + triangle AOIs (sf0.01:
-    the derived shots actually reach these lon/lat ranges)."""
+def test_holed_join_matches_pip_reference(spark):
+    """The J2 join over holed + multi + triangle AOIs returns exactly the
+    (shot, AOI) pairs the numpy reference finds (sf0.01: the derived
+    shots actually reach these lon/lat ranges)."""
     aois = {
         "holed": "POLYGON ((-8 41, -2 41, -2 52, -8 52, -8 41), (-6 44, -4 44, -4 48, -6 48, -6 44))",
         "multi": "MULTIPOLYGON (((1 43, 4 43, 4 51, 1 51, 1 43)), ((5 43, 9 43, 9 51, 5 51, 5 43)))",
         "tri": "POLYGON ((0 44, 6 44, 3 50, 0 44))",
     }
     sf = "/root/testdata/sf0.01"
-    t = aoi_from_wkt(spark, aois)
-    a = {(r["shot"], r["aoi_name"]) for r in
-         spatial_join_aoi(shots_l2a(spark, sf), t).select("shot", "aoi_name").collect()}
-    b = {(r["shot"], r["aoi_name"]) for r in
-         spatial_join_aoi_indexed(shots_l2a(spark, sf), t).select("shot", "aoi_name").collect()}
-    assert a == b and len(a) > 0
+    shots = shots_l2a(spark, sf).select("shot", "longitude", "latitude").collect()
+    xs = [r["longitude"] for r in shots]
+    ys = [r["latitude"] for r in shots]
+    truth = {
+        (r["shot"], name)
+        for name, wkt in aois.items()
+        for r, hit in zip(shots, intersects_reference(xs, ys, wkt))
+        if hit
+    }
+    got = {(r["shot"], r["aoi_name"]) for r in
+           spatial_join_aoi(shots_l2a(spark, sf), aoi_from_wkt(spark, aois))
+           .select("shot", "aoi_name").collect()}
+    assert got == truth and {n for _, n in got} == set(aois)
     # the hole actually excludes something: holed count < full-rect count
     full = {
         "holed_full": "POLYGON ((-8 41, -2 41, -2 52, -8 52, -8 41))",
     }
     af = spatial_join_aoi(shots_l2a(spark, sf), aoi_from_wkt(spark, full)).count()
-    assert sum(1 for s, n in a if n == "holed") < af
+    assert sum(1 for s, n in got if n == "holed") < af
 
 
 def test_rectilinear_aois_refine_without_udf(spark):
-    """Holed/multi RECTANGLE AOIs take the pure-column-math path: the
-    contract's spatial_join_holed plan has NO Python UDF node."""
+    """Holed/multi RECTANGLE AOIs refine JVM-side: the contract's
+    spatial_join_holed plan has NO Python UDF node."""
     from gedixr_spark.contract import q_spatial_join_holed
 
     out = q_spatial_join_holed(spark, "/root/testdata/sf0.001")
@@ -85,34 +94,25 @@ def test_rectilinear_aois_refine_without_udf(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_rect_rings_predicate_matches_raycast(spark):
-    """Column-math even-odd (boundary OR odd strict containment) agrees
-    with the generic ray-cast UDF on a grid of probe points, including
-    ring boundaries."""
-    from gedixr_spark.geo import (
-        named_polygons_pip_udf,
-        parse_wkt_rings,
-        rect_rings_predicate,
-    )
-
-    rings = parse_wkt_rings(HOLED)
+def test_rectilinear_membership_matches_pip_reference(spark):
+    """st_intersects_polygon over all-rectangle rings (a holed square,
+    two disjoint squares) agrees with the numpy reference on a grid of
+    probe points, ring boundaries included."""
     pts = [
         (x / 2.0, y / 2.0) for x in range(-2, 24) for y in range(-2, 24)
     ]
-    df = spark.createDataFrame(pts, "x double, y double")
-    jvm = rect_rings_predicate(F.col("x"), F.col("y"), rings)
-    pip = named_polygons_pip_udf({"h": rings})
-    udf = pip(F.col("x"), F.col("y"), F.lit("h"))
-    diff = df.select(jvm.alias("a"), udf.alias("b")).filter(F.col("a") != F.col("b"))
-    assert diff.count() == 0
+    xs = [x for x, _ in pts]
+    ys = [y for _, y in pts]
+    for wkt in (HOLED, MULTI):
+        assert _membership(spark, wkt, pts) == [
+            bool(v) for v in intersects_reference(xs, ys, wkt)
+        ]
 
 
 def test_indexed_join_single_udf_node_at_many_nonrect_aois(spark):
-    """VERDICT r1 'done' criterion, strengthened in r15: >=100
-    non-rectangular AOIs refine through a SINGLE JVM higher-order
-    filter over per-AOI edge arrays — zero Python-evaluation nodes
-    (the r1 criterion was ONE vectorized UDF node, not a per-AOI
-    when/udf chain; the edge-array expression removes even that)."""
+    """>=100 non-rectangular AOIs refine through a SINGLE JVM
+    higher-order filter over per-AOI edge arrays — zero
+    Python-evaluation nodes, not a per-AOI when/udf chain."""
     many = {}
     for i in range(120):
         x, y = -10 + (i % 20), 40 + (i // 20) * 0.8
@@ -120,7 +120,7 @@ def test_indexed_join_single_udf_node_at_many_nonrect_aois(spark):
         many[f"tri_{i}"] = (
             f"POLYGON (({x} {y}, {x + 0.9} {y}, {x} {y + 0.7}, {x} {y}))"
         )
-    out = spatial_join_aoi_indexed(
+    out = spatial_join_aoi(
         shots_l2a(spark, "/root/testdata/sf0.001"), aoi_from_wkt(spark, many)
     )
     plan = out._jdf.queryExecution().executedPlan().toString()

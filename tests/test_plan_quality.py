@@ -61,8 +61,8 @@ def test_spatial_join_is_single_scan_with_coarse_pushdown(spark, shots_path):
     )
     out = spatial_join_aoi(spark.read.parquet(shots_path), aois)
     plan = _plan(out)
-    assert plan.count("Scan parquet") == 1  # membership explode, not K scans
-    # the coarse OR-of-bbox prefilter reaches the scan (Or pushed filter)
+    assert plan.count("Scan parquet") == 1  # one broadcast join, not K scans
+    # the coarse envelope prefilter reaches the scan
     pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     assert "Or(" in pushed or "longitude" in pushed
 
@@ -78,14 +78,12 @@ def test_indexed_join_pushes_global_envelope(spark, shots_path):
     """The grid-indexed join prefilters by the GLOBAL AOI envelope —
     one 4-comparison range predicate that reaches the parquet scan at
     any AOI count (per-AOI ORs can't: they grow with the AOI set)."""
-    from gedixr_spark.operators.joins import spatial_join_aoi_indexed
-
     aois = aoi_from_wkt(
         spark,
         {"r1": "POLYGON ((0 44, 4 44, 4 46, 0 46, 0 44))",
          "tri": "POLYGON ((0 44, 6 44, 3 50, 0 44))"},
     )
-    df = spatial_join_aoi_indexed(spark.read.parquet(shots_path), aois)
+    df = spatial_join_aoi(spark.read.parquet(shots_path), aois)
     plan = _plan(df)
     pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     assert "longitude" in pushed and "latitude" in pushed
@@ -145,10 +143,9 @@ def test_materialize_packed_two_shuffles_max(spark):
 
 def test_ann_family_plans_are_python_free(spark):
     """r6 pin: the LSH/IVF ANN kernels evaluate as JVM column math —
-    zero ArrowEvalPython/BatchEvalPython nodes anywhere in the plans
-    (the Arrow kernels exist only behind impl='arrow'). Guards
-    against a regression re-introducing the Python worker hop on the
-    ANN hot path."""
+    zero ArrowEvalPython/BatchEvalPython nodes anywhere in the plans.
+    Guards against a regression re-introducing the Python worker hop
+    on the ANN hot path."""
     import numpy as np
 
     from gedixr_spark.operators import similarity as sim

@@ -440,10 +440,13 @@ def test_asof_bucketed_partitions_by_key_and_bucket(spark):
     assert "hashpartitioning(user_id" in plan and "__bucket" in plan
 
 
-def test_jvm_and_arrow_kernels_agree(spark):
-    """The codegen (default) and Arrow (large-dim) implementations of
-    every ANN kernel are exact-int twins — same buckets, cells, probe
-    orders on random vectors, bit for bit."""
+def test_ann_kernels_match_numpy_reference(spark):
+    """Every codegen ANN kernel matches a numpy reference on the same
+    rows, bit for bit: LSH buckets (sign bits packed LSB-first), IVF
+    cells (first max dot), probe orders (stable descending dot), the
+    multi-table buckets and PQ codes (first min squared L2 at the
+    codebook scale). All exact int64 over the engine's own quantized
+    vectors."""
     import numpy as np
 
     rng = np.random.default_rng(123)
@@ -457,26 +460,38 @@ def test_jvm_and_arrow_kernels_agree(spark):
     cbs = similarity.pq_codebooks(64, 2, 16, 13)
     got = df.select(
         "vec_id",
-        similarity.pq_codes("embedding", cbs).alias("pq_j"),
-        similarity.pq_codes("embedding", cbs, impl="arrow").alias("pq_a"),
-        similarity.lsh_bucket("embedding", planes).alias("b_j"),
-        similarity.lsh_bucket("embedding", planes, impl="arrow").alias("b_a"),
-        similarity.ivf_cell("embedding", cents).alias("c_j"),
-        similarity.ivf_cell("embedding", cents, impl="arrow").alias("c_a"),
-        similarity.ivf_probe_cells("embedding", cents, nprobe=3).alias("p_j"),
-        similarity.ivf_probe_cells(
-            "embedding", cents, nprobe=3, impl="arrow"
-        ).alias("p_a"),
-        similarity.lsh_table_buckets("embedding", tables).alias("t_j"),
-        similarity.lsh_table_buckets("embedding", tables, impl="arrow").alias(
-            "t_a"
-        ),
+        similarity.quantize("embedding").alias("q"),
+        similarity.pq_codes("embedding", cbs).alias("pq"),
+        similarity.lsh_bucket("embedding", planes).alias("b"),
+        similarity.ivf_cell("embedding", cents).alias("c"),
+        similarity.ivf_probe_cells("embedding", cents, nprobe=3).alias("p"),
+        similarity.lsh_table_buckets("embedding", tables).alias("t"),
     ).collect()
-    for r in got:
-        assert list(r["pq_j"]) == list(r["pq_a"])
-        assert r["b_j"] == r["b_a"]
-        assert r["c_j"] == r["c_a"]
-        assert list(r["p_j"]) == list(r["p_a"])
-        assert [(s["tbl"], s["bucket"]) for s in r["t_j"]] == [
-            (s["tbl"], s["bucket"]) for s in r["t_a"]
-        ]
+    q = np.asarray([r["q"] for r in got], dtype=np.int64)
+
+    def buckets(pl):
+        bits = q @ np.asarray(pl, dtype=np.int64).T > 0
+        return bits @ (2 ** np.arange(len(pl)))
+
+    dots = q @ np.asarray(cents, dtype=np.int64).T
+    lift = 10_000 // 1000  # codebook scale / quantize scale
+    codes, ofs = [], 0
+    for cb in (np.asarray(c, dtype=np.int64) for c in cbs):
+        sub = q[:, ofs : ofs + cb.shape[1]] * lift
+        ofs += cb.shape[1]
+        codes.append(np.argmin(((sub[:, None, :] - cb[None]) ** 2).sum(-1), axis=1))
+    want = {
+        "pq": np.stack(codes, axis=1).tolist(),
+        "b": buckets(planes).tolist(),
+        "c": np.argmax(dots, axis=1).tolist(),
+        "p": np.argsort(-dots, axis=1, kind="stable")[:, :3].tolist(),
+        "t": [
+            [(t, int(v)) for t, v in enumerate(row)]
+            for row in np.stack([buckets(tb) for tb in tables], axis=1)
+        ],
+    }
+    assert [list(r["pq"]) for r in got] == want["pq"]
+    assert [r["b"] for r in got] == want["b"]
+    assert [r["c"] for r in got] == want["c"]
+    assert [list(r["p"]) for r in got] == want["p"]
+    assert [[(s["tbl"], s["bucket"]) for s in r["t"]] for r in got] == want["t"]
