@@ -1,7 +1,9 @@
 """User-facing API mirroring the reference's ``extract_data`` surface
 (reference extract.py:20-27 parameters), composed from the operator
 layer. The reference's eager per-file loop (extract.py:136-194) becomes
-ONE lazy plan; its AOI dict becomes an ``aoi_name`` column.
+ONE plan; its AOI dict becomes an ``aoi_name`` column. With ``save=True``
+that plan runs once, into the GeoParquet output, and the frame returned
+reads the output files back; with ``save=False`` it is returned lazily.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from gedixr_spark.operators.joins import spatial_join_aoi
 from gedixr_spark.operators.projections import with_geometry
 from gedixr_spark.sinks.geoparquet import output_name, write_geoparquet
 from gedixr_spark.sources.hdf5 import discover_granules, read_granules
+from gedixr_spark.sources.shots import read_shots
 from gedixr_spark.sources.vector import prepare_vec
 
 
@@ -36,7 +39,7 @@ def extract_data(
     zorder: bool = False,
     zorder_files: int | None = None,
 ) -> tuple[DataFrame, str | None]:
-    """Lazy Spark re-expression of the reference's primary entry point
+    """Spark re-expression of the reference's primary entry point
     (``extract_data``, extract.py:20-229; lifecycle SURVEY.md §3.1).
 
     Plan: discover granules → month-prune the inventory (file pruning
@@ -44,6 +47,14 @@ def extract_data(
     quality filter (extract.py:303-339) → geometry (extract.py:166-171)
     → optional AOI spatial join (extract.py:175-187) → GeoParquet sink
     partitioned by aoi_name (extract.py:196-220).
+
+    Returns ``(shots, out_path)``. With ``save=True`` the plan runs once,
+    for the write, and ``shots`` reads the saved output back
+    (``read_shots`` with the written schema: same columns, order and
+    types, geometry decoded from WKB). It depends on the files under
+    ``out_path``, not on the granules: later actions open no granule and
+    leave ``error_acc`` as the write left it. With ``save=False``,
+    ``shots`` is the lazy plan and ``out_path`` is None.
     """
     if gedi_product not in ALLOWED_PRODUCTS:  # extract.py:89-91
         raise ValueError(f"gedi_product must be one of {ALLOWED_PRODUCTS}")
@@ -91,4 +102,5 @@ def extract_data(
             zorder=zorder,
             zorder_files=zorder_files,
         )
+        shots = read_shots(spark, out_path, schema=shots.schema)
     return shots, out_path

@@ -14,6 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gedixr_spark.session import local_frame
 
 
 class MergeError(ValueError):
@@ -152,8 +153,11 @@ def spatial_join_aoi(
         for cx in range(math.floor(xmin / cell_deg), math.floor(xmax / cell_deg) + 1):
             for cy in range(math.floor(ymin / cell_deg), math.floor(ymax / cell_deg) + 1):
                 index_rows.append((cx, cy, name, xmin, ymin, xmax, ymax))
+    # both broadcast sides are local relations: broadcasting them runs
+    # no Python worker
     spark = shots.sparkSession
-    index = spark.createDataFrame(
+    index = local_frame(
+        spark,
         index_rows,
         "__cx int, __cy int, __aoi string, __xmin double, __ymin double, "
         "__xmax double, __ymax double",
@@ -192,9 +196,7 @@ def spatial_join_aoi(
     # independent of its cell count. Rows of plain rectangles get NULL
     # edges from the left join and pass through.
     if edge_rows:
-        edges = spark.createDataFrame(
-            edge_rows, f"__aoi string, __edges {EDGES_SQL_TYPE}"
-        )
+        edges = local_frame(spark, edge_rows, f"__aoi string, __edges {EDGES_SQL_TYPE}")
         refined = refined.join(F.broadcast(edges), "__aoi", "left").filter(
             F.col("__edges").isNull() | pip_edges_predicate(lon, lat, F.col("__edges"))
         )

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -69,3 +72,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A small table the driver already holds (file inventory, AOIs,
+    join index) as a ``LocalRelation``.
+
+    Built from pandas, the rows cross to the JVM through Arrow (the
+    setting above) and the plan is a ``LocalRelation``: a collect runs
+    no job, filters and projections over it fold at optimization, and
+    a broadcast of it starts no Python worker. ``createDataFrame`` of a
+    Python list gives a ``LogicalRDD`` instead, whose every action runs
+    tasks that unpickle the rows in Python workers. Arrow is on in
+    ``get_spark``; a session without it falls back to the list path.
+    pyspark sends an empty pandas frame down that list path too, so an
+    empty table is built from an empty Arrow table, which stays local.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    pdf = pd.DataFrame(rows, columns=schema.names)
+    if pdf.empty:
+        return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)
+    return spark.createDataFrame(pdf, schema)

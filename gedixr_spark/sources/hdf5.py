@@ -9,6 +9,10 @@ is one granule per task:
                                                 # reference extract.py:138-146
       → repartition(n_files)                    # one straggler-isolated task/file
       → mapInPandas(read_granule)               # h5py → Arrow batches of shots
+      → format_string('%018d', shot)            # int64 shot → 18-char string
+
+The inventory is a driver-built ``LocalRelation`` (``session.local_frame``),
+so month pruning folds at optimization and sizing the read runs no job.
 
 Per-granule fault isolation matches the reference (extract.py:148,191-194):
 a corrupt granule yields zero rows plus an error-accumulator increment
@@ -30,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from gedixr_spark.constants import (
     FILENAME_DATE_FORMAT,
@@ -39,6 +44,7 @@ from gedixr_spark.constants import (
 )
 from gedixr_spark.functions.scalar import month_band
 from gedixr_spark.operators.filters import resolve_beams
+from gedixr_spark.session import local_frame
 
 
 def discover_granules(
@@ -55,7 +61,9 @@ def discover_granules(
         for p in Path(directory).rglob("*")
         if fnmatch.fnmatch(p.name, PATTERN[product])
     )
-    inv = spark.createDataFrame([(f, Path(f).name) for f in files] or [], "file_path string, file_name string")
+    inv = local_frame(
+        spark, [(f, Path(f).name) for f in files], "file_path string, file_name string"
+    )
     token = F.regexp_extract("file_name", FILENAME_DATE_REGEX, 1)
     return inv.withColumn(
         "acq_time", F.when(token != "", F.to_timestamp(token, FILENAME_DATE_FORMAT))
@@ -71,6 +79,13 @@ class GranuleSchemaError(KeyError):
     files. Schema errors are the user's bug; I/O corruption is the
     data's (reference extract.py:191-194 isolates only the latter
     meaningfully)."""
+
+
+class ShotNumberError(ValueError):
+    """A shot number does not fit the signed 64 bits the reader ships
+    it in. GEDI shot numbers are below 2^63; a larger one would wrap to
+    a negative number, so the job fails instead (like a schema error,
+    not absorbed as a corrupt granule)."""
 
 
 def _default_opener(path: str):  # pragma: no cover - requires h5py
@@ -97,16 +112,21 @@ def read_granules(
     (reference ``_from_file``, extract.py:239-300).
 
     Column semantics preserved: shot → 18-char zero-padded string
-    (extract.py:290); ``rh<N>`` → array index N, m→cm, rounded int
-    (extract.py:281-286); every row stamped with the granule's
-    filename-derived ``acq_time`` (extract.py:299); beams absent from a
-    file are skipped (extract.py:274-277); a failing granule emits zero
-    rows and bumps the accumulator (extract.py:191-194).
+    (extract.py:290), shipped across Arrow as int64 and formatted in
+    the JVM, which pads and never truncates; ``rh<N>`` → array index
+    N, m→cm, rounded int (extract.py:281-286); every row stamped with
+    the granule's filename-derived ``acq_time`` (extract.py:299); beams
+    absent from a file are skipped (extract.py:274-277); a failing
+    granule emits zero rows and bumps the accumulator
+    (extract.py:191-194).
     """
     beam_list = resolve_beams(beams)
     opener = granule_opener or _default_opener
     schema = shot_struct(product, [(n, l) for n, l in layers])
     out_names = [f.name for f in schema.fields]
+    read_schema = StructType(
+        [StructField("shot", LongType(), False) if f.name == "shot" else f for f in schema]
+    )
 
     if filter_month is not None:
         lo, hi = filter_month
@@ -119,7 +139,7 @@ def read_granules(
                     yield _extract_one(
                         opener, row["file_path"], row["acq_time"], beam_list, layers, out_names
                     )
-                except GranuleSchemaError:
+                except (GranuleSchemaError, ShotNumberError):
                     raise  # misconfiguration — fail the job, don't absorb
                 except Exception:
                     if error_acc is not None:
@@ -127,11 +147,16 @@ def read_granules(
                     yield pd.DataFrame({n: pd.Series(dtype="object") for n in out_names})
 
     # one task per granule: a granule is the indivisible unit of work and
-    # read times vary 10×, so isolate stragglers instead of packing files
-    n = inventory.count()
+    # read times vary 10×, so isolate stragglers instead of packing files.
+    # Collecting the (local) inventory runs no job.
+    n = len(inventory.select("file_path").collect())
     if n == 0:
-        return inventory.sparkSession.createDataFrame([], schema)
-    return inventory.repartition(n).mapInPandas(extract, schema=schema)
+        return local_frame(inventory.sparkSession, [], schema)
+    return (
+        inventory.repartition(n)
+        .mapInPandas(extract, schema=read_schema)
+        .withColumn("shot", F.format_string("%018d", "shot"))
+    )
 
 
 def _extract_one(opener, path, acq_time, beam_list, layers, out_names) -> pd.DataFrame:
@@ -177,7 +202,10 @@ def _extract_one(opener, path, acq_time, beam_list, layers, out_names) -> pd.Dat
     for name, _ in layers:
         arr = np.concatenate(cols[name]) if cols[name] else np.array([])
         if name == "shot":
-            data[name] = pd.Series([f"{int(v):0>18}" for v in arr], dtype="object")
+            arr = arr.astype(np.uint64)
+            if len(arr) and arr.max() >= np.uint64(2**63):
+                raise ShotNumberError(f"shot number {arr.max()} >= 2^63 in {path}")
+            data[name] = arr.astype(np.int64)
         else:
             data[name] = arr
     data["beam"] = np.concatenate(beams_seen) if beams_seen else np.array([], dtype="object")

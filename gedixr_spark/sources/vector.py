@@ -4,8 +4,9 @@ The reference's ``prepare_vec`` (ancillary.py:121-154) reads any
 fiona-supported vector file, reprojects to EPSG:4326, and explodes
 multi-feature files into named single geometries keyed ``{base}_{i}``.
 
-Here the AOI table is a small driver-side collection → a DataFrame
-``(aoi_name, geometry_wkt)`` that downstream joins broadcast. Supported
+Here the AOI table is a small driver-side collection → a local
+DataFrame ``(aoi_name, geometry_wkt)`` (``session.local_frame``) that
+downstream joins collect and index. Supported
 inputs without geo libs: WKT strings, GeoJSON files (pure json, incl.
 holed Polygons and MultiPolygons), and ESRI shapefiles via a pure-stdlib
 ``.shp`` record reader (the most common real-world AOI format —
@@ -21,8 +22,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from gedixr_spark.geo import parse_wkt_rings  # validation only
+from gedixr_spark.session import local_frame
 
-AOI_COLUMNS = ("aoi_name", "geometry_wkt")
+AOI_SCHEMA = "aoi_name string, geometry_wkt string"
 
 
 def _rings_to_wkt(rings: list[list[list[float]]]) -> str:
@@ -55,9 +57,7 @@ def aoi_from_wkt(spark: SparkSession, aois: dict[str, str]) -> DataFrame:
     flattened to an ``aoi_name`` column."""
     for name, wkt in aois.items():
         parse_wkt_rings(wkt)
-    return spark.createDataFrame(
-        list(aois.items()), schema="aoi_name string, geometry_wkt string"
-    )
+    return local_frame(spark, list(aois.items()), AOI_SCHEMA)
 
 
 def aoi_from_geojson(spark: SparkSession, path: str | Path) -> DataFrame:
@@ -84,7 +84,7 @@ def aoi_from_geojson(spark: SparkSession, path: str | Path) -> DataFrame:
             )
         name = base if len(feats) == 1 else f"{base}_{i}"
         rows.append((name, wkt))
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 def _ring_signed_area(ring: list[list[float]]) -> float:
@@ -160,7 +160,7 @@ def aoi_from_shapefile(spark: SparkSession, path: str | Path) -> DataFrame:
         rows.append((name, _polys_to_wkt(polys)))
     if not rows:
         raise ValueError(f"no polygon records in {path}")
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 
@@ -241,7 +241,7 @@ def aoi_from_kml(spark: SparkSession, path: str | Path) -> DataFrame:
         rows.append((name, _polys_to_wkt(polys)))
     if not rows:
         raise ValueError(f"no polygon Placemarks in {path}")
-    return spark.createDataFrame(rows, schema=list(AOI_COLUMNS))
+    return local_frame(spark, rows, AOI_SCHEMA)
 
 
 def prepare_vec(spark: SparkSession, vec) -> DataFrame:

@@ -4,11 +4,17 @@ isolation is real — SURVEY.md §2.1 S2). The opener is a closure so
 cloudpickle ships the fake granule data to the Python workers.
 """
 
+import numpy as np
 import pytest
 
 from gedixr_spark.constants import DEFAULT_BASE, effective_schema
 from gedixr_spark.operators.stats import error_accumulator
-from gedixr_spark.sources.hdf5 import discover_granules, read_granules
+from gedixr_spark.sources.hdf5 import (
+    ShotNumberError,
+    _extract_one,
+    discover_granules,
+    read_granules,
+)
 from gedixr_spark.testing import build_opener, make_granule
 
 
@@ -88,3 +94,40 @@ def test_read_granules_empty_inventory(spark, tmp_path, granule_env):
     layers = DEFAULT_BASE["L2A"]
     df = read_granules(inv, "L2A", layers, granule_opener=opener)
     assert df.count() == 0 and "shot" in df.columns
+
+
+def _shot_granule(tmp_path, shots):
+    g = make_granule(len(shots), ["BEAM0000"], seed=5)
+    g["BEAM0000"]["shot_number"] = np.array(shots, dtype=np.uint64)
+    name = "GEDI02_A_2020095010203_O0001_V002.h5"
+    (tmp_path / name).write_bytes(b"")
+    return str(tmp_path / name), build_opener({name: g})
+
+
+def test_shot_crosses_arrow_as_int64_and_pads_without_truncating(spark, tmp_path):
+    """The reader ships shot as int64 and formats it in the JVM: short
+    numbers pad to 18 digits, 19-digit numbers keep every digit."""
+    _, opener = _shot_granule(tmp_path, [7, 10**18 + 5, 2**63 - 1])
+    inv = discover_granules(spark, tmp_path, "L2A")
+    df = read_granules(inv, "L2A", DEFAULT_BASE["L2A"], granule_opener=opener)
+    assert dict(df.dtypes)["shot"] == "string"
+    assert sorted(r["shot"] for r in df.collect()) == [
+        "000000000000000007",
+        "1000000000000000005",
+        "9223372036854775807",
+    ]
+
+
+def test_shot_at_or_above_2_63_raises(spark, tmp_path):
+    """A shot number that int64 cannot hold fails the read instead of
+    wrapping to a negative number (or being absorbed as a corrupt
+    granule)."""
+    path, opener = _shot_granule(tmp_path, [1, 2**63, 3])
+    with pytest.raises(ShotNumberError):
+        _extract_one(opener, path, None, ["BEAM0000"], DEFAULT_BASE["L2A"], [])
+    acc = error_accumulator(spark)
+    inv = discover_granules(spark, tmp_path, "L2A")
+    df = read_granules(inv, "L2A", DEFAULT_BASE["L2A"], granule_opener=opener, error_acc=acc)
+    with pytest.raises(Exception, match="ShotNumberError"):
+        df.collect()
+    assert acc.value == 0
