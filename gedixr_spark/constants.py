@@ -12,7 +12,6 @@ from pyspark.sql.types import (
     ByteType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -110,16 +109,6 @@ def shot_struct(product: str, variables: list[tuple[str, str]] | None = None) ->
         fields.append(StructField(name, var_fields.get(name, DoubleType()), True))
     return StructType(fields)
 
-
-GRANULE_INVENTORY_SCHEMA = StructType(
-    [
-        StructField("file_path", StringType(), False),
-        StructField("file_name", StringType(), False),
-        StructField("product", StringType(), False),
-        StructField("acq_time", TimestampType(), True),
-        StructField("n_shots", LongType(), True),
-    ]
-)
 
 # Reference raster default: (-0.0003, 0.0003) degrees ≈ 30 m (xr.py:168-169).
 DEFAULT_RASTER_RESOLUTION = (-0.0003, 0.0003)

@@ -184,30 +184,6 @@ def q_minhash_lsh_neardup(spark, sf_dir):
     )
 
 
-def q_dedup_clusters(spark, sf_dir):
-    """Connected components over the LSH near-dup pair graph — the
-    cluster/survivor assignment step of real dedup. Runs the
-    large-star/small-star alternation (the O(log² n)-round 100 TB
-    path) so the scale algorithm is the one the driver checks; the
-    min-label twin stays driver-checked through q_dedup_apply's
-    survivor set. The oracle is a DuckDB recursive CTE computing the
-    same min-reachable-id labels, so convergence is fully checked."""
-    pairs = dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), k=4, bands=2)
-    return dedup.dedup_clusters_star(pairs)
-
-
-def q_dedup_apply(spark, sf_dir):
-    """End-to-end near-dedup: LSH pairs → connected components →
-    drop non-survivors from the corpus (the full pipeline the other
-    dedup queries build up to). Uses min-label CC, so with
-    q_dedup_clusters on the star variant BOTH algorithms carry a
-    driver correctness row against the same component semantics."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, k=4, bands=2)
-    clusters = dedup.dedup_clusters(pairs)
-    return dedup.apply_dedup(docs, clusters).select("doc_id", "lang", "source")
-
-
 def q_dedup_pipeline(spark, sf_dir):
     """r7 window consolidation: `dedup_clusters` (star-CC labels over
     the LSH pair graph) and `dedup_apply` (min-label CC → survivor

@@ -34,8 +34,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-POINT_FIELDS = ("x", "y")
-
 
 def st_point(lon: Column, lat: Column) -> Column:
     """Point constructor (X8; reference extract.py:167 ``Point(x, y)``)."""
@@ -54,7 +52,6 @@ def st_y(geom: Column | str) -> Column:
 
 # --- WKB boundary (sink/source only; never in the relational hot path) ---
 
-_WKB_POINT_LE = b"\x01\x01\x00\x00\x00"
 
 # NB: these codec UDFs are closure FACTORIES, not module-level
 # pandas_udfs — nested functions pickle by value, so they run on

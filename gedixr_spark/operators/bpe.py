@@ -198,29 +198,6 @@ def bpe_token_count(
     return counted.withColumn(out_col, _len(F.col("__toks"))).drop("__toks")
 
 
-def save_merges(spark, merges: list[tuple[str, str]], path: str) -> str:
-    """Persist a trained merge list as a tiny parquet (rank, left,
-    right) table — the tokenizer artifact. Mirrors
-    similarity.save_centroids: train once on a corpus sample, then
-    every encode job (and every later incremental corpus batch)
-    loads the same artifact, so token counts stay comparable across
-    pipeline runs."""
-    df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank int, left string, right string",
-    )
-    # localCheckpoint: see similarity.save_centroids — py-RDD-backed
-    # write tasks re-launch Python workers per parent partition
-    df.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
-    return path
-
-
-def load_merges(spark, path: str) -> list[tuple[str, str]]:
-    """Load a merge list saved by ``save_merges``, rank order restored."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r["left"], r["right"]) for r in rows]
-
-
 def build_vocab(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -290,137 +267,4 @@ def bpe_encode_ids(
     return df.select(id_col).join(ids, id_col, "left").select(
         id_col,
         F.coalesce(F.col(out_col), F.array().cast("array<int>")).alias(out_col),
-    )
-
-
-def export_tokenizer_json(
-    merges: list[tuple[str, str]], vocab: DataFrame, path: str
-) -> str:
-    """Write the trained tokenizer as a single JSON artifact in the
-    interoperable huggingface/tokenizers BPE layout (``{"model":
-    {"type": "BPE", "vocab": {token: id}, "merges": ["a b", ...]}}``)
-    — the file a training stack actually consumes, beside the
-    parquet-native `save_merges`/`build_vocab` artifacts. Vocab is
-    merge-bounded (driver-small by construction), so the collect is
-    ≤ alphabet+n_merges rows."""
-    import json as _json
-
-    rows = vocab.collect()
-    vocab_map = {r["token"]: int(r["token_id"]) for r in rows}
-    # guard the artifact's two implicit encodings (r7 ADVICE): dict
-    # construction would silently collapse duplicate tokens to one id,
-    # and a merge token containing a space cannot round-trip through
-    # the "a b" merge-line encoding in load_tokenizer_json
-    if len(vocab_map) != len(rows):
-        from collections import Counter
-
-        dupes = [t for t, n in Counter(r["token"] for r in rows).items() if n > 1]
-        raise ValueError(
-            f"export_tokenizer_json: duplicate vocab tokens {dupes[:5]!r} "
-            "would silently collapse to one id in the JSON artifact"
-        )
-    for a, b in merges:
-        if " " in a or " " in b:
-            raise ValueError(
-                f"export_tokenizer_json: merge ({a!r}, {b!r}) contains a "
-                "space and cannot round-trip through the 'a b' merge-line "
-                "encoding"
-            )
-    doc = {
-        "version": "1.0",
-        "model": {
-            "type": "BPE",
-            "vocab": dict(sorted(vocab_map.items(), key=lambda kv: kv[1])),
-            "merges": [f"{a} {b}" for a, b in merges],
-        },
-    }
-    with open(path, "w", encoding="utf-8") as f:
-        _json.dump(doc, f, ensure_ascii=False, indent=1)
-    return path
-
-
-def load_tokenizer_json(spark, path: str) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Inverse of `export_tokenizer_json`: (merges, vocab DataFrame)
-    ready for `bpe_encode_ids` — round-trips exactly (pinned)."""
-    import json as _json
-
-    with open(path, encoding="utf-8") as f:
-        doc = _json.load(f)
-    merges = [tuple(m.split(" ", 1)) for m in doc["model"]["merges"]]
-    vocab = spark.createDataFrame(
-        [(t, i) for t, i in doc["model"]["vocab"].items()],
-        "token string, token_id int",
-    )
-    return merges, vocab
-
-
-def tokenizer_stats(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    vocab: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-group tokenizer quality report — the numbers that decide
-    whether a trained tokenizer is fit for a corpus before you spend
-    the cluster encoding 100 TB with it:
-
-    - ``fertility``: BPE tokens per whitespace word (≈1 is ideal;
-      ≫1 means the vocab fragments this group — the classic symptom of
-      a tokenizer trained on the wrong language mix);
-    - ``chars_per_token``: compression rate (higher = cheaper);
-    - ``oov_rate``: share of produced tokens missing from ``vocab``
-      (frozen-vocab drift on a new corpus batch).
-
-    One Arrow encode pass (the same ``bpe_encode`` the id path uses),
-    one explode + broadcast vocab anti-join for OOV, one aggregate.
-    All ratios are single divisions of exact int64 sums, so the report
-    is bit-stable across partitionings and engines."""
-    enc = bpe_encode(df, merges, text_col, "__toks")
-    per_doc = enc.select(
-        id_col,
-        group_col,
-        F.size("__toks").alias("__n_bpe"),
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
-                lambda t: t != "",
-            )
-        ).alias("__n_words"),
-        F.length(text_col).alias("__n_chars"),
-        F.col("__toks"),
-    )
-    tok = per_doc.select(group_col, F.explode("__toks").alias("token"))
-    oov = (
-        tok.join(F.broadcast(vocab.select("token")), "token", "left_anti")
-        .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("__n_oov"))
-    )
-    agg = (
-        per_doc.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("__n_bpe").cast("long").alias("n_bpe_tokens"),
-            F.sum("__n_words").cast("long").alias("n_words"),
-            F.sum("__n_chars").cast("long").alias("n_chars"),
-        )
-        .join(oov, group_col, "left")
-        .withColumn("__n_oov", F.coalesce("__n_oov", F.lit(0)))
-    )
-    return agg.select(
-        group_col,
-        "n_docs",
-        "n_bpe_tokens",
-        "n_words",
-        "n_chars",
-        (F.col("n_bpe_tokens").cast("double") / F.col("n_words")).alias(
-            "fertility"
-        ),
-        (F.col("n_chars").cast("double") / F.col("n_bpe_tokens")).alias(
-            "chars_per_token"
-        ),
-        (F.col("__n_oov").cast("double") / F.col("n_bpe_tokens")).alias(
-            "oov_rate"
-        ),
     )

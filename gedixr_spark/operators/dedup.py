@@ -699,9 +699,6 @@ def simhash_neardup_pairs(
     )
 
 
-_HEX = "0123456789abcdef"
-
-
 def simhash16(col: Column | str) -> Column:
     """16-bit SimHash over word tokens: the first 4 hex digits of each
     token's md5 give a 16-bit value; per bit, sum +1/-1 across tokens;
@@ -727,25 +724,6 @@ def simhash16(col: Column | str) -> Column:
     for i in range(16):
         out = out + F.when(folded[f"b{i}"] > 0, F.lit(2**i)).otherwise(F.lit(0))
     return out
-
-
-def component_stats(clusters: DataFrame) -> DataFrame:
-    """Dedup-QA histogram over CC output (dedup_clusters/_star): one
-    row per component SIZE with the number of components and total
-    docs at that size, descending. The first thing to look at after a
-    near-dup pass — a single giant component (size ≈ corpus) means the
-    threshold/banding collapsed everything (boilerplate key, bad
-    threshold), and it shows up here as one row long before the
-    anti-join silently deletes the corpus. Ids-only double agg."""
-    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(
-            F.count(F.lit(1)).alias("n_components"),
-            F.sum("size").alias("n_docs"),
-        )
-        .orderBy(F.desc("size"))
-    )
 
 
 # --- FastSS edit-distance near-dup join ------------------------------------
@@ -864,26 +842,6 @@ def edit_distance_pairs(
         .filter(F.col("dist") <= max_dist)
         .select("id_a", "id_b", "dist")
     )
-
-
-def edit_distance_dedup(
-    df: DataFrame,
-    max_dist: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_len: int = 64,
-) -> DataFrame:
-    """End-to-end fuzzy dedup on short fields: `edit_distance_pairs`
-    → connected components → min-id survivor → anti-join, the same
-    composition every other near-dup family exposes (minhash/simhash/
-    semantic). Components and survivors are ids-only; the corpus
-    never moves for the decision (apply_dedup's anti-join)."""
-    pairs = edit_distance_pairs(
-        df, max_dist=max_dist, text_col=text_col, id_col=id_col,
-        max_len=max_len,
-    ).select(F.col("id_a"), F.col("id_b"))
-    clusters = dedup_clusters(pairs)
-    return apply_dedup(df, clusters, id_col=id_col)
 
 
 def prefix_jaccard_pairs(

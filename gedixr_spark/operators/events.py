@@ -1,9 +1,8 @@
 """Event-time operators on the events stream table (SURVEY.md §7.4,
 §2.6 note: the reference is batch-only; these are the engine's
-extension surface, with Structured Streaming variants in
-gedixr_spark.streaming).
+extension surface).
 
-Scale notes: tumbling/sliding aggs are single hash shuffles keyed by
+Scale notes: sliding aggs are single hash shuffles keyed by
 (bucket, ...); sessionization shuffles once by user and sorts within
 partitions (window functions) — the classic sessionize-at-scale plan.
 Double sums go through decimal(18,2) so results are exact and
@@ -21,24 +20,6 @@ def _exact_sum(col: str):
     """Order-independent sum of a 2-decimal double: cast to decimal,
     sum exactly, return as double."""
     return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")
-
-
-def tumbling_agg(
-    df: DataFrame, width: str = "hour", ts_col: str = "ts", value_col: str = "value"
-) -> DataFrame:
-    """Tumbling-window aggregate via date_trunc bucket keys (hour/day/
-    minute...): counts + exact value sum per (bucket, event_type)."""
-    return (
-        df.groupBy(
-            F.date_trunc(width, F.col(ts_col)).alias("window_start"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            _exact_sum(value_col).alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
 
 
 def sliding_agg(

@@ -414,70 +414,3 @@ def read_incremental_agg(spark: SparkSession, state_path: str) -> DataFrame:
         F.col("__max").alias("max"),
         (F.col("__sum") / F.col("__n")).alias("mean"),
     )
-
-
-def refresh_incremental_sketches(
-    spark: SparkSession,
-    source_path: str,
-    state_path: str,
-    keys: Sequence[str],
-    value_col: str,
-    kind: str = "distinct",
-    id_col: str = "doc_id",
-    k: int = 256,
-    lg_k: int = 12,
-) -> dict:
-    """The sketch-backed sibling of `refresh_incremental_agg`: maintain
-    a per-key HLL distinct store (``kind="distinct"``) or KMV quantile
-    store (``kind="quantile"``) from the versioned change feed. Same
-    watermark contract (rides the state commit atomically; no-op when
-    nothing is new; append-only source enforced). Because both sketch
-    families merge EXACTLY, the maintained store is identical to a
-    from-scratch sketch of the full table — so the holistic questions
-    `refresh_incremental_agg` deliberately refuses (distinct counts,
-    percentiles) stay answerable at delta cost too."""
-    from gedixr_spark.operators.sketches import (
-        distinct_sketches,
-        merge_distinct_sketches,
-        merge_quantile_sketches,
-        quantile_sketches,
-    )
-
-    if kind not in ("distinct", "quantile"):
-        raise ValueError(f"kind must be distinct|quantile, got {kind!r}")
-    src_hist = table_history(spark, source_path)
-    to_version = src_hist[-1]["version"]
-    last = None
-    for e in reversed(table_history(spark, state_path)):
-        if "source_version" in e.get("meta", {}):
-            last = e["meta"]["source_version"]
-            break
-    from_version = last if last is not None else 0
-    if from_version >= to_version:
-        return {"from_version": from_version, "to_version": to_version,
-                "n_keys": None}
-    delta = read_appended(spark, source_path, from_version, to_version)
-    if kind == "distinct":
-        fresh = distinct_sketches(delta, keys, value_col, lg_k=lg_k)
-    else:
-        fresh = quantile_sketches(delta, keys, value_col, id_col=id_col, k=k)
-    try:
-        old = read_versioned(spark, state_path)
-        has_state = len(old.columns) > 0 and old.limit(1).count() > 0
-    except ValueError:
-        has_state = False
-    if has_state:
-        both = old.unionByName(fresh)
-        merged = (
-            merge_distinct_sketches(both, list(keys))
-            if kind == "distinct"
-            else merge_quantile_sketches(both, list(keys), k=k)
-        )
-    else:
-        merged = fresh
-    n_keys = merged.count()
-    commit_overwrite(
-        spark, state_path, merged, meta={"source_version": to_version}
-    )
-    return {"from_version": from_version, "to_version": to_version,
-            "n_keys": n_keys}

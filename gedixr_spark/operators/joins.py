@@ -1,9 +1,10 @@
 """Join operators J1-J3 (SURVEY.md §2.4).
 
 J1/J3 are hash equi-joins Catalyst already handles; the engine's value-add
-is the pandas-merge *semantics* (suffixes, precondition checks) and the
-scale decisions: join on the compact unique key ``(shot, acq_time)``
-instead of geometry bytes, and broadcast the small side.
+is the pandas-merge *semantics* (suffixes, precondition checks). The
+default keys are the reference's ``(shot, acq_time, geometry)``
+(``DEFAULT_MERGE_ON``), so the point geometry struct is part of the join
+key unless the caller passes ``on``.
 """
 
 from __future__ import annotations
@@ -88,7 +89,9 @@ def merge_keyed(
     With AOIs materialized as a partition column, the reference's
     python-dict loop collapses into J1 with ``aoi_name`` prepended to
     the join keys. The reference's zero-overlapping-keys error
-    (xr.py:95-97) is checked lazily via an intersect count.
+    (xr.py:95-97) is not raised here: the check is opt-in, a separate
+    action the caller runs with `check_key_overlap`, as the J1 count
+    check is with `check_merge_counts`.
     """
     on = list(on or [c for c in DEFAULT_MERGE_ON if c in l2b.columns and c in l2a.columns])
     if key_col not in on:

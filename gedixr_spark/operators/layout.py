@@ -165,45 +165,6 @@ def compact_table(
     return {"path": final, "before": stats_before, "after": after}
 
 
-def shard_manifest(
-    spark: SparkSession, path: str, id_col: str | None = None
-) -> DataFrame:
-    """Training-shard manifest: one row per data file — (file, n_rows,
-    bytes, and min/max of ``id_col`` when given). Trainers and backfill
-    jobs consume this instead of re-listing + re-scanning the dataset:
-    it answers "which file holds doc X" (when the layout is
-    id-clustered, e.g. after compact_table(sort_by=[id])) and "how big
-    is shard k" without touching data bytes again.
-
-    One scan with an input_file_name() groupBy (file-count-sized
-    result), joined to the driver-side FS listing for byte sizes.
-    """
-    per_file = spark.read.parquet(path).groupBy(
-        F.input_file_name().alias("file")
-    )
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if id_col:
-        aggs += [F.min(id_col).alias("min_id"), F.max(id_col).alias("max_id")]
-    rows_df = per_file.agg(*aggs)
-    fs, _ = _hadoop_fs(spark, path)
-    statuses = fs.globStatus(
-        spark._jvm.org.apache.hadoop.fs.Path(path + "/*.parquet")
-    )
-    sizes = [
-        (s.getPath().getName(), s.getLen())
-        for s in (statuses or [])
-        if s.isFile()
-    ]
-    sizes_df = spark.createDataFrame(sizes, "name string, bytes long")
-    # input_file_name's URI spelling (file:/ vs file:///) differs from
-    # the FileStatus URI; the basename is unique within the directory
-    # and identical in both, so join on that
-    named = rows_df.withColumn(
-        "name", F.element_at(F.split("file", "/"), -1)
-    )
-    return named.join(sizes_df, "name", "left").drop("name").orderBy("file")
-
-
 def vacuum_staging(spark: SparkSession, path: str) -> list[str]:
     """Remove leftover staging directories from crashed in-place
     compactions/merges (``*.__compacting``, ``*.__merging``). The
@@ -289,50 +250,6 @@ def write_zordered_columns(
     return {"path": path, "bounds": bounds}
 
 
-def plan_compaction(
-    spark: SparkSession,
-    root: str,
-    target_mb: int = 128,
-    min_files: int = 8,
-) -> list[dict]:
-    """Compaction planner: walk the table tree (root itself, or its
-    Hive-style partition leaves) and return the directories whose file
-    census says compaction would pay — at least ``min_files`` data
-    files AND average file size under half the target. Feed each entry
-    to ``compact_table(path=entry['path'])``.
-
-    Policy-over-mechanism split: merge_upsert/streaming writers
-    fragment specific partitions; this ranks them (most fragmented
-    first) so a nightly janitor compacts the worst offenders within a
-    time budget instead of blind-rewriting the table. Driver-side
-    listing only — the same RPCs a scan's file index pays, no data
-    read."""
-    fs, jroot = _hadoop_fs(spark, root)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-
-    leaves = []
-    stack = [jroot]
-    while stack:
-        d = stack.pop()
-        children = fs.listStatus(d)
-        subdirs = [c.getPath() for c in children if c.isDirectory()]
-        has_data = any(
-            c.isFile() and c.getPath().getName().endswith(".parquet")
-            for c in children
-        )
-        if has_data:
-            leaves.append(str(d.toUri().getPath()))
-        stack.extend(subdirs)
-
-    plan = []
-    for leaf in leaves:
-        st = file_stats(spark, leaf)
-        if st["n_files"] >= min_files and st["avg_bytes"] < target_mb * 1024 * 1024 / 2:
-            plan.append({"path": leaf, **st})
-    plan.sort(key=lambda e: (-e["n_files"], e["avg_bytes"]))
-    return plan
-
-
 def pruning_report(
     spark: SparkSession, path: str, col: str, lo, hi
 ) -> dict:
@@ -361,50 +278,3 @@ def pruning_report(
         "n_overlapping": n_overlap,
         "ratio": n_overlap / len(spans),
     }
-
-
-def append_zordered_columns(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bounds: dict,
-    n_files: int = 4,
-    bits: int = 16,
-) -> dict:
-    """Incremental Z-ordered APPEND: lay out a new batch along the SAME
-    curve as the existing table by reusing the bounds
-    `write_zordered_columns` returned (re-deriving min/max from the
-    batch would shear the curve — identical values would land at
-    different keys in old vs new files, destroying cross-file
-    locality). Values outside the original bounds clamp to the curve's
-    edge cells — if the data distribution has genuinely drifted past
-    the bounds, re-cluster with `compact_table`/`write_zordered_columns`
-    instead of appending forever.
-
-    Append-mode write: existing files untouched; the new files carry
-    tight footer stats of their own, so `pruning_report` stays honest
-    across the whole table."""
-    if set(cols) - set(bounds):
-        raise ValueError(f"bounds missing for {sorted(set(cols) - set(bounds))}")
-    n = (1 << bits) - 1
-    ords = []
-    for c in cols:
-        lo, hi = bounds[c]
-        span = (hi - lo) or 1.0
-        clamped = F.least(F.greatest(F.col(c).cast("double"), F.lit(lo)), F.lit(hi))
-        ords.append(F.floor((clamped - lo) / span * n).cast("long"))
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, o in enumerate(ords):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(o, i).bitwiseAND(1), i * len(ords) + j)
-            )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("append")
-        .parquet(path)
-    )
-    return {"path": path, "bounds": bounds}

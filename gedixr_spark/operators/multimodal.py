@@ -1,35 +1,18 @@
-"""Multimodal columns: opaque binary payloads + typed metadata
+"""Multimodal columns: an opaque binary payload plus typed metadata
 (SURVEY.md §7.4). Image/audio libraries are NOT in this container, so
-the decode step is stubbed behind import-guards / deterministic fakes —
-but the Spark-side plumbing is real and tested: binary column schema,
-metadata struct, Arrow-batched mapInPandas feature extraction with an
-explicit output schema, and batch-shape control.
+the payload is a deterministic fake, but its schema (binary column +
+metadata struct) is the one a real ingest would produce.
 
 At 100 TB the pattern is: payloads live in parquet binary columns (or
-object-store URIs for > ~1 MB blobs); decode/resize/frame-sample runs
-as mapInPandas over row groups so one task owns a contiguous byte
-range; extracted features are small typed columns that downstream
-relational ops join/filter without touching bytes again.
+object-store URIs for > ~1 MB blobs); extracted features are small
+typed columns that downstream relational ops join/filter without
+touching bytes again.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 
 def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -45,264 +28,4 @@ def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
             (F.length(text_col) % 640 + 1).alias("width"),
             (F.length(text_col) % 480 + 1).alias("height"),
         ).alias("media_meta"),
-    )
-
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("mean_byte", DoubleType()),
-        StructField("byte_histogram4", ArrayType(LongType())),
-        StructField("decode_status", StringType()),
-    ]
-)
-
-
-def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Feature extraction over binary payloads via Arrow-batched
-    mapInPandas. The 'decode' is a deterministic fake (byte statistics)
-    because no image codec ships in this container; a real deployment
-    swaps `_decode_batch` for PIL/ffmpeg and keeps every other line.
-    """
-
-    # _decode_batch is NESTED so the mapInPandas closure pickles by
-    # value and runs on workers that can't import this package (bare
-    # driver sessions) — same rule as the geo codec factories
-    def _decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            # the real path would be: from PIL import Image  # noqa
-            raise ImportError("no image codec in this environment")
-        except ImportError:
-            status = "stub"
-        out = []
-        for _id, payload in zip(pdf[id_col], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8)
-            hist = np.bincount(arr >> 6, minlength=4).astype(np.int64)
-            out.append(
-                {
-                    "doc_id": _id,
-                    "n_bytes": int(arr.size),
-                    "mean_byte": float(arr.mean()),
-                    "byte_histogram4": hist.tolist(),
-                    "decode_status": status,
-                }
-            )
-        return pd.DataFrame(out)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf)
-
-    return df.select(id_col, "payload").mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("codec", StringType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Image resize over binary payloads: Arrow-batched mapInPandas,
-    one output row per input with a (width × height)-byte payload.
-
-    The CODEC IS A DETERMINISTIC FAKE (no PIL/opencv in this
-    container): 'resize' = cycle the source bytes to w*h length — a
-    stand-in with the same shape contract as nearest-neighbor
-    resampling (output size depends only on target dims, content is a
-    pure function of input bytes). A real deployment replaces ONLY the
-    two numpy lines marked below; schema, batching, and partitioning
-    stay. At scale this runs one task per parquet row group, and the
-    resized payloads are ~w*h bytes/row — size output partitions
-    accordingly (maxRecordsPerBatch) to keep Arrow batches bounded."""
-    if width <= 0 or height <= 0:
-        raise ValueError(f"target dims must be positive: {width}x{height}")
-    n_out = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf["payload"]):
-                src = np.frombuffer(payload, dtype=np.uint8)
-                # real impl: img = codec.decode(src); img.resize((w, h))
-                resized = np.resize(src, n_out)  # cycles bytes to length
-                out.append(
-                    {
-                        "doc_id": _id,
-                        "payload": resized.tobytes(),
-                        "width": width,
-                        "height": height,
-                        "codec": "fake-cycle",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame, every_n: int, frame_size: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Video frame sampling: emit every ``every_n``-th frame as its own
-    row — the 1→N row-explosion shape real frame extraction has.
-
-    The DEMUXER IS A DETERMINISTIC FAKE (no ffmpeg/pyav here): the
-    payload is treated as concatenated ``frame_size``-byte frames, and
-    a trailing partial frame is dropped (decoders don't emit partial
-    frames). A real deployment replaces only the split-into-frames
-    line with container demuxing; the iterator shape — one input batch
-    yielding a larger output batch — is exactly the PyAV pattern, and
-    the output stays within Arrow batch bounds because mapInPandas
-    re-batches per yielded DataFrame."""
-    if every_n <= 0 or frame_size <= 0:
-        raise ValueError(f"every_n and frame_size must be positive: {every_n}, {frame_size}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf["payload"]):
-                n_frames = len(payload) // frame_size
-                # real impl: for i, frame in enumerate(container.decode(...))
-                for i in range(0, n_frames, every_n):
-                    out.append(
-                        {
-                            "doc_id": _id,
-                            "frame_idx": i,
-                            "frame": payload[i * frame_size : (i + 1) * frame_size],
-                        }
-                    )
-            yield pd.DataFrame(out, columns=["doc_id", "frame_idx", "frame"])
-
-    return df.select(id_col, "payload").mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def attach_fake_audio(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic stand-in for real audio ingest: payload = the
-    text's md5 digest repeated 64× interpreted as little-endian int16
-    PCM (2048 samples); metadata struct carries sample rate/channels.
-    Schema-identical to a real PCM landing table."""
-    return df.select(
-        "*",
-        F.unhex(F.repeat(F.md5(F.col(text_col)), 64)).alias("audio"),
-        F.struct(
-            F.lit("audio/pcm16le").alias("media_type"),
-            F.lit(16_000).alias("sample_rate"),
-            F.lit(1).alias("n_channels"),
-        ).alias("audio_meta"),
-    )
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_samples", IntegerType()),
-        StructField("duration_s", DoubleType()),
-        StructField("rms", DoubleType()),
-        StructField("zero_crossing_rate", DoubleType()),
-    ]
-)
-
-
-def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Audio feature extraction over int16-PCM payloads — fully REAL
-    (unlike the image/video codecs): raw PCM needs no external decoder,
-    numpy.frombuffer IS the decode. Emits duration, RMS amplitude
-    (normalized to [-1, 1] full scale) and zero-crossing rate — the
-    cheap audio-quality gates a corpus pass runs before any model
-    embedding. mapInPandas keeps it one Arrow pass per row group."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload, meta in zip(
-                pdf[id_col], pdf["audio"], pdf["audio_meta"]
-            ):
-                pcm = np.frombuffer(payload[: len(payload) - len(payload) % 2], dtype="<i2")
-                x = pcm.astype(np.float64) / 32768.0
-                n = len(x)
-                zc = float(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                out.append(
-                    {
-                        "doc_id": _id,
-                        "n_samples": n,
-                        "duration_s": n / float(meta["sample_rate"]),
-                        "rms": float(np.sqrt(np.mean(x * x))) if n else 0.0,
-                        "zero_crossing_rate": zc / (n - 1) if n > 1 else 0.0,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_samples", "duration_s", "rms", "zero_crossing_rate",
-                ],
-            )
-
-    return df.select(id_col, "audio", "audio_meta").mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
-    )
-
-
-RESAMPLED_AUDIO_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("audio", BinaryType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_samples", IntegerType()),
-    ]
-)
-
-
-def resample_audio(df: DataFrame, target_rate: int, id_col: str = "doc_id") -> DataFrame:
-    """Linear-interpolation resample of int16-PCM payloads to
-    ``target_rate`` — REAL DSP in numpy (np.interp over the time grid),
-    the standard-rate normalization step before batch feature
-    extraction. Output is again little-endian int16 bytes so the
-    column stays a compact binary payload."""
-    if target_rate <= 0:
-        raise ValueError(f"target_rate must be positive: {target_rate}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload, meta in zip(
-                pdf[id_col], pdf["audio"], pdf["audio_meta"]
-            ):
-                src_rate = int(meta["sample_rate"])
-                pcm = np.frombuffer(payload[: len(payload) - len(payload) % 2], dtype="<i2")
-                n_out = max(1, int(round(len(pcm) * target_rate / src_rate)))
-                t_src = np.arange(len(pcm)) / src_rate
-                t_dst = np.arange(n_out) / target_rate
-                y = np.interp(t_dst, t_src, pcm.astype(np.float64))
-                res = np.clip(np.rint(y), -32768, 32767).astype("<i2")
-                out.append(
-                    {
-                        "doc_id": _id,
-                        "audio": res.tobytes(),
-                        "sample_rate": target_rate,
-                        "n_samples": n_out,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "audio", "sample_rate", "n_samples"]
-            )
-
-    return df.select(id_col, "audio", "audio_meta").mapInPandas(
-        run, schema=RESAMPLED_AUDIO_SCHEMA
     )

@@ -268,43 +268,6 @@ def leakage_safe_split(
     return out.drop("__group_key", "__cluster_id")
 
 
-def build_eval_set(
-    df: DataFrame,
-    strata: Sequence[str],
-    per_stratum: int = 100,
-    id_col: str = "doc_id",
-    seed: str = "eval",
-) -> DataFrame:
-    """Balanced evaluation-set construction: exactly
-    ``min(per_stratum, stratum size)`` docs from EVERY stratum,
-    deterministic and order-independent.
-
-    Selection is rank-by-hash within each stratum — the same
-    md5-bucket primitive as ``hash_split``, so membership is a pure
-    function of (seed, id): re-running on a grown corpus keeps
-    previously-selected docs selected as long as they stay in the
-    per-stratum hash top-n (no reshuffling eval sets every ingest,
-    which would silently contaminate train with yesterday's eval).
-
-    Plan: one shuffle on the strata key for the rank window —
-    partitioned by stratum, so no global sort; a stratum is a skew
-    hazard only if a single stratum dominates the corpus AND
-    per_stratum is huge (then sort-within-stratum cost, not
-    correctness, degrades).
-    """
-    if per_stratum <= 0:
-        raise ValueError(f"per_stratum must be > 0, got {per_stratum}")
-    from pyspark.sql.window import Window
-
-    h = F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")))
-    w = Window.partitionBy(*strata).orderBy(F.asc(h), F.asc(id_col))
-    return (
-        df.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= per_stratum)
-        .drop("__r")
-    )
-
-
 def bottomk_sample(
     df: DataFrame, k: int, id_col: str = "doc_id", seed: int = 0
 ) -> DataFrame:

@@ -20,7 +20,6 @@ of embeddings.)
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -198,8 +197,8 @@ def lsh_ann_topk(
     """ANN top-k: score only candidates in the query's LSH bucket.
     Join on the bucket id (equi-join, broadcastable) instead of a cross
     join — at 1000 executors this is the difference between |Q|·|C|
-    and |Q|·|C|/2^planes comparisons. Recall < 1 by construction; raise
-    n_planes bands or multi-probe for more."""
+    and |Q|·|C|/2^planes comparisons. Recall < 1 by construction; use
+    more hash tables (`lsh_ann_topk_multitable`) for more."""
     planes = hyperplanes(dim, n_planes, seed)
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -482,64 +481,6 @@ def lsh_ann_topk_multitable(
     )
 
 
-def lsh_probe_buckets(
-    vec_col: Column | str,
-    planes: list[list[int]],
-    n_probes: int = 1,
-    scale: int = 1000,
-) -> Column:
-    """Multi-probe LSH: the vector's bucket plus the buckets reached by
-    flipping each of the first ``n_probes`` sign bits (nearest
-    alternative hypotheses). Returns an array of bucket ids — explode
-    and equi-join to trade 1+n_probes× candidate work for recall
-    without adding hash tables."""
-    base = lsh_bucket(vec_col, planes, scale)
-    buckets = [base]
-    for i in range(min(n_probes, len(planes))):
-        buckets.append(base.bitwiseXOR(F.lit(2**i)))
-    return F.array(*buckets)
-
-
-def lsh_ann_topk_multiprobe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    n_probes: int = 2,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    seed: int = 42,
-) -> DataFrame:
-    """lsh_ann_topk with multi-probe queries: each query searches its
-    own bucket AND n_probes bit-flip neighbors; corpus vectors stay
-    single-bucketed (index unchanged — only query fan-out grows)."""
-    planes = hyperplanes(dim, n_planes, seed)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize(vec_col, scale).alias("qv"),
-        F.explode(lsh_probe_buckets(vec_col, planes, n_probes, scale)).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        quantize(vec_col, scale).alias("cv"),
-        lsh_bucket(vec_col, planes, scale).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", cosine_q(F.col("qv"), F.col("cv")).alias("cosine"))
-        .dropDuplicates(["query_id", "cand_id"])
-    )
-    return _topk_per_query(
-        scored,
-        [F.desc("cosine"), F.asc("cand_id")],
-        k,
-        ["query_id", "cand_id", "cosine", "rank"],
-    )
-
-
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.99,
@@ -624,42 +565,6 @@ def pq_codebooks(
         ]
         for _ in range(m)
     ]
-
-
-def save_pq_codebooks(
-    spark, codebooks: list[list[list[int]]], path: str
-) -> str:
-    """Persist trained PQ codebooks as a tiny parquet (subspace, code,
-    centroid) table — the index artifact, symmetric with
-    ``save_centroids`` (IVF) and ``bpe.save_merges``: train once on a
-    corpus sample, then every encode/ADC job (today's and every later
-    batch's) loads the same artifact so codes stay comparable across
-    pipeline runs."""
-    rows = [
-        (j, c, list(map(int, cent)))
-        for j, cb in enumerate(codebooks)
-        for c, cent in enumerate(cb)
-    ]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<long>"
-    )
-    # pin the Python-parallelized rows into JVM blocks before writing:
-    # write tasks over a py-RDD re-launch a Python worker per parent
-    # partition (~5 s for a metadata-sized frame; see save_centroids)
-    df.localCheckpoint().coalesce(1).write.mode("overwrite").parquet(path)
-    return path
-
-
-def load_pq_codebooks(spark, path: str) -> list[list[list[int]]]:
-    """Load codebooks saved by ``save_pq_codebooks``, (subspace, code)
-    order restored — plugs straight into pq_codes/pq_ann_topk."""
-    rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
-    books: list[list[list[int]]] = []
-    for r in rows:
-        if r["subspace"] == len(books):
-            books.append([])
-        books[r["subspace"]].append([int(v) for v in r["centroid"]])
-    return books
 
 
 def _let(col: Column, fn) -> Column:
@@ -945,33 +850,6 @@ def _pq_adc_dist(mat: np.ndarray, codes: np.ndarray, cbs: list[np.ndarray]) -> n
         ofs += dsub
         total += (diff * diff).sum(axis=1)
     return total
-
-
-def train_ivf_pq(
-    df: DataFrame,
-    centroids: list[list[int]],
-    m: int = 2,
-    ksub: int = 16,
-    n_iter: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[list[int]]]:
-    """Train residual PQ codebooks: assign each vector its IVF cell,
-    subtract the (float-scaled) centroid, and k-means the residuals per
-    sub-space. Training runs in floats (no parity needed); the returned
-    ×10000-scaled integer codebooks then drive the exact-int encode."""
-    cell = ivf_cell(vec_col, centroids)
-    cen_rows = [[float(w) / 10000.0 for w in c] for c in centroids]
-    cen_map = _lit_fmat(cen_rows)
-    residual = F.zip_with(
-        F.col(vec_col),
-        F.element_at(cen_map, cell + 1),
-        lambda a, b: a.cast("double") - b,
-    )
-    res_df = df.select(F.col(id_col), residual.alias(vec_col))
-    return train_pq_codebooks(
-        res_df, m=m, ksub=ksub, n_iter=n_iter, vec_col=vec_col, id_col=id_col
-    )
 
 
 def ivf_pq_ann_topk(
@@ -1328,54 +1206,6 @@ def semantic_dedup(
     return apply_dedup(df, clusters, id_col=id_col)
 
 
-def ranking_metrics(
-    approx: DataFrame, exact: DataFrame, k: int | None = None
-) -> DataFrame:
-    """MRR and NDCG@k of an ANN result against brute-force ground truth
-    — ann_recall's order-sensitive siblings (recall can't see that the
-    true nearest neighbor sits at rank 10 instead of rank 1; serving
-    quality can). Binary relevance: a candidate is relevant iff it
-    appears in the exact top-k.
-
-    Per query: ``rr`` = 1/rank of the first relevant candidate (0 if
-    none), ``ndcg`` = Σ_hits 1/log2(rank+1) over the ideal DCG for
-    |truth| relevant items. Macro averages ride as the
-    ``query_id IS NULL`` row, like ann_recall. Pure column math over
-    ids-only joins — same cost shape as ann_recall, corpus-size-
-    independent."""
-    if k is not None:
-        approx = approx.filter(F.col("rank") <= k)
-        exact = exact.filter(F.col("rank") <= k)
-    a = approx.select("query_id", "cand_id", "rank")
-    truth = exact.select("query_id", "cand_id")
-    hits = a.join(truth, ["query_id", "cand_id"])
-    per_hit = hits.groupBy("query_id").agg(
-        F.min("rank").alias("first_hit"),
-        F.sum(F.lit(1.0) / F.log2(F.col("rank") + 1)).alias("dcg"),
-    )
-    n_true = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
-    # ideal DCG for n binary-relevant items = Σ_{i=1..n} 1/log2(i+1)
-    idcg = F.aggregate(
-        F.sequence(F.lit(1), F.col("n_true")),
-        F.lit(0.0),
-        lambda acc, i: acc + F.lit(1.0) / F.log2(i.cast("double") + 1),
-    )
-    per_q = (
-        n_true.join(per_hit, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.lit(1.0) / F.col("first_hit"), F.lit(0.0)).alias("rr"),
-            (F.coalesce("dcg", F.lit(0.0)) / idcg).alias("ndcg"),
-        )
-    )
-    macro = per_q.agg(
-        F.lit(None).cast(per_q.schema["query_id"].dataType).alias("query_id"),
-        F.avg("rr").alias("rr"),
-        F.avg("ndcg").alias("ndcg"),
-    )
-    return per_q.unionByName(macro)
-
-
 # --- SQ8: per-dimension scalar quantization --------------------------------
 # The simplest point on the vector-compression curve (Faiss
 # ScalarQuantizer QT_8bit): one byte per dimension, per-dim affine
@@ -1584,134 +1414,6 @@ def ivf_sq8_ann_topk(
         k,
         ["query_id", "cand_id", "cosine", "rank"],
     )
-
-
-def mmr_rerank(
-    candidates: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    lam: float = 0.5,
-    query_col: str = "query_id",
-    cand_col: str = "cand_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """Maximal Marginal Relevance diversification (Carbonell &
-    Goldstein 1998) of a per-query shortlist: greedily pick
-
-        argmax_c  lam·sim(q, c) − (1−lam)·max_{s∈picked} sim(c, s)
-
-    — the standard rerank between ANN retrieval and serving that stops
-    a result page being five near-duplicates of the same document.
-
-    Scale shape: the EXPENSIVE part (corpus → shortlist) already
-    happened upstream (ann/bm25/hybrid top-n); MMR itself is inherently
-    sequential per query but over ≤ shortlist-size rows, so each query
-    group reranks in ONE Arrow batch (applyInPandas, numpy O(n²·dim)
-    on tens of rows) with queries parallel across the cluster. The
-    corpus is touched only to fetch the shortlist's vectors via two
-    id equi-joins.
-
-    Determinism: similarities are exact int64 dot products of
-    quantized vectors, normalized per pair by the exact norms — each
-    MMR score is single-IEEE arithmetic on exact ints; ties break on
-    lowest candidate id. ``k`` bounds the output per query; shorter
-    shortlists return fully."""
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    emb = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), quantize(vec_col, scale).alias("__v")
-    )
-
-    # LEFT joins + in-plan guards, not inner joins: a shortlist id (or
-    # query id) missing from the corpus — or carrying a NULL vector —
-    # must fail loudly at action time, not silently shrink the result
-    # page (the silent-drop failure mode r7 ADVICE flagged in
-    # mine_contrastive_triplets). Lazy: composing fires no job.
-    def _guarded(col_name: str, out: str):
-        return F.when(F.col(out).isNotNull(), F.col(out)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"mmr_rerank: {col_name}="),
-                    F.col(col_name).cast("string"),
-                    F.lit(
-                        f" has no {vec_col!r} embedding in the corpus — "
-                        "every shortlist/query id must carry a vector"
-                    ),
-                )
-            )
-        )
-
-    pairs = (
-        candidates.select(query_col, cand_col)
-        .join(
-            emb.select(
-                F.col(id_col).alias(query_col), F.col("__v").alias("__qv")
-            ),
-            query_col,
-            "left",
-        )
-        .join(
-            emb.select(
-                F.col(id_col).alias(cand_col), F.col("__v").alias("__cv")
-            ),
-            cand_col,
-            "left",
-        )
-        .withColumn("__qv", _guarded(query_col, "__qv"))
-        .withColumn("__cv", _guarded(cand_col, "__cv"))
-    )
-    out_schema = (
-        f"{pairs.schema[query_col].dataType.simpleString()}"
-    )
-    schema = (
-        f"{query_col} {out_schema}, "
-        f"{cand_col} {pairs.schema[cand_col].dataType.simpleString()}, "
-        "mmr_rank int, mmr_score double"
-    )
-    lam_f = float(lam)
-
-    def _rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        q = np.asarray(pdf["__qv"].iloc[0], dtype=np.int64)
-        ids = pdf[cand_col].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        mat = np.stack(
-            [np.asarray(v, dtype=np.int64) for v in pdf["__cv"].iloc[order]]
-        )
-        norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-        qn = np.sqrt(float((q * q).sum()))
-        rel = (mat @ q).astype(np.float64) / (norms * qn)
-        # pairwise candidate cosines (n ≤ shortlist size)
-        cc = (mat @ mat.T).astype(np.float64) / np.outer(norms, norms)
-        n = len(ids)
-        picked: list[int] = []
-        scores: list[float] = []
-        avail = np.ones(n, dtype=bool)
-        while avail.any() and len(picked) < min(k, n):
-            if picked:
-                div = cc[:, picked].max(axis=1)
-            else:
-                div = np.zeros(n)
-            mmr = lam_f * rel - (1.0 - lam_f) * div
-            mmr[~avail] = -np.inf
-            best = int(np.argmax(mmr))  # argmax takes FIRST max → min id
-            picked.append(best)
-            scores.append(float(mmr[best]))
-            avail[best] = False
-        return pd.DataFrame(
-            {
-                query_col: pdf[query_col].iloc[0],
-                cand_col: ids[picked],
-                "mmr_rank": np.arange(1, len(picked) + 1, dtype=np.int32),
-                "mmr_score": scores,
-            }
-        )
-
-    return pairs.groupBy(query_col).applyInPandas(_rerank, schema)
 
 
 # ---------------------------------------------------------------------------

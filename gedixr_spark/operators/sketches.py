@@ -1,7 +1,7 @@
 """Mergeable sketches and membership filters for 100 TB-scale pruning.
 
-Four families — Bloom (membership), HLL (distinct counts), count-min
-(frequencies), KMV bottom-k (quantiles) — all chosen because they stay
+Three families — Bloom (membership), HLL (distinct counts), KMV
+bottom-k (quantiles) — all chosen because they stay
 JVM-side and their state is mergeable across partitions/executors/
 batches — the property that makes them work on a 1000-executor
 cluster and lets per-day state answer per-month questions without
@@ -258,189 +258,12 @@ def with_estimates(
     return df.withColumn(out_col, F.hll_sketch_estimate(sketch_col)).drop(sketch_col)
 
 
-def sliding_distinct(
-    df: DataFrame,
-    value_col: str,
-    ts_col: str = "ts",
-    width_minutes: int = 120,
-    slide_minutes: int = 60,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Approximate distinct counts over SLIDING windows via sketch
-    re-use: one HLL sketch per slide-aligned bucket, then each window
-    unions its width/slide member buckets — the raw rows are touched
-    ONCE regardless of overlap factor. The naive per-window
-    approx_count_distinct re-aggregates every event width/slide times;
-    this is the mergeable-sketch payoff applied to overlapping windows
-    (exactly why hll_sketch_agg exists over approx_count_distinct).
-
-    Window starts are slide-grid-aligned exact long µs (sliding_agg's
-    convention). Returns (window_start, distinct_est).
-    """
-    if width_minutes <= 0 or slide_minutes <= 0 or width_minutes < slide_minutes:
-        raise ValueError(
-            f"need width >= slide > 0: width={width_minutes}, slide={slide_minutes}"
-        )
-    import math
-
-    slide_us = slide_minutes * 60_000_000
-    n = math.ceil(width_minutes / slide_minutes)
-    us = F.unix_micros(F.col(ts_col))
-    bucket_us = us - (us % F.lit(slide_us))
-    per_bucket = (
-        df.groupBy(F.timestamp_micros(bucket_us).alias("bucket"))
-        .agg(F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch"))
-    )
-    # each bucket contributes to the n windows starting at
-    # bucket - j*slide for j in [0, n); windows wider than the data's
-    # span still only materialize where a bucket exists
-    member_of = per_bucket.select(
-        F.explode(
-            F.array(
-                *[
-                    F.timestamp_micros(
-                        F.unix_micros(F.col("bucket")) - j * slide_us
-                    )
-                    for j in range(n)
-                ]
-            )
-        ).alias("window_start"),
-        "sketch",
-    )
-    return (
-        member_of.groupBy("window_start")
-        .agg(F.hll_union_agg("sketch").alias("s"))
-        .select(
-            "window_start", F.hll_sketch_estimate("s").alias("distinct_est")
-        )
-    )
-
-
-# --- Count-min sketch: mergeable frequency state ---------------------------
-# Third sketch family (Cormode & Muthukrishnan 2005): a depth×width
-# counter matrix where every key increments one masked-hash cell per
-# row; a point query reads the MIN over rows (always >= truth, over by
-# at most εN with ε = e/width at the usual depth=ln(1/δ)). Chosen for
-# the same reason as Bloom/HLL: the state is mergeable by element-wise
-# ADDITION, so per-batch / per-partition sketches combine exactly —
-# the property a continuously-fed 100 TB corpus needs. Complements
-# heavy_hitters (exact, two passes) with a one-pass persistable
-# frequency store, and adds join-size estimation (the CMS inner
-# product) for free.
-
-
-def _check_cms_params(width: int, depth: int) -> None:
-    if width & (width - 1) or width < 64:
-        raise ValueError(f"width must be a power of two >= 64 (got {width})")
-    if not 1 <= depth <= 8:
-        raise ValueError(f"depth must be in [1, 8] (got {depth})")
-    if width * depth > (1 << 20):
-        raise ValueError(
-            f"width*depth={width * depth} cells is too large to ship as a "
-            "plan literal for estimates; cap at 2^20 cells"
-        )
-
-
-def _cms_pos(key: Column, width: int, i: int) -> Column:
-    # seed disjoint from the Bloom family's (lit(i)) so composing both
-    # sketches over one column never correlates their collisions
-    return F.xxhash64(F.lit(0xC0DE + i), key).bitwiseAND(F.lit(width - 1))
-
-
-def cms_build(
-    df: DataFrame, key: str, width: int = 4096, depth: int = 4
-) -> list[list[int]]:
-    """Build a count-min sketch over ``df[key]`` (one count per row).
-
-    Fully JVM-side: each row explodes into its ``depth`` (row, masked
-    xxhash64 position) cells, then ONE groupBy counts per cell — the
-    shuffle carries at most depth×width algebraic partials per map
-    task, never the rows. Driver state is the depth×width int matrix
-    (128 KiB at the 4096×4 default), same driver-small contract as
-    `bloom_build`."""
-    _check_cms_params(width, depth)
-    cells = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        _cms_pos(F.col(key), width, i).alias("c"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("cell")
-    )
-    rows = (
-        cells.groupBy(F.col("cell.r").alias("r"), F.col("cell.c").alias("c"))
-        .count()
-        .collect()
-    )
-    mat = [[0] * width for _ in range(depth)]
-    for row in rows:
-        mat[row["r"]][row["c"]] = row["count"]
-    return mat
-
-
-def cms_merge(a: Sequence[Sequence[int]], b: Sequence[Sequence[int]]) -> list[list[int]]:
-    """Element-wise sum — exact: merge(build(A), build(B)) ==
-    build(A ∪ B) cell for cell, so per-batch sketches maintain a
-    frequency store incrementally with no rescan."""
-    if len(a) != len(b) or any(len(ra) != len(rb) for ra, rb in zip(a, b)):
-        raise ValueError("cannot merge sketches of differing shape")
-    return [[x + y for x, y in zip(ra, rb)] for ra, rb in zip(a, b)]
-
-
-def cms_estimate(
-    df: DataFrame, key: str, sketch: Sequence[Sequence[int]], out_col: str = "freq_est"
-) -> DataFrame:
-    """Point-frequency estimates for every row's ``key``: min over the
-    sketch rows of the row's cell. The matrix rides as one nested array
-    literal; the lookup is pure column math in whole-stage codegen —
-    the same hash expressions as the build, so build and probe can
-    never disagree. Guarantees est >= true count, est <= true + εN."""
-    depth = len(sketch)
-    width = len(sketch[0]) if depth else 0
-    _check_cms_params(width, depth)
-    lit_rows = [F.lit(list(r)) for r in sketch]
-    est = F.least(
-        *[
-            F.get(lit_rows[i], _cms_pos(F.col(key), width, i).cast("int"))
-            for i in range(depth)
-        ]
-    )
-    return df.withColumn(out_col, est)
-
-
-def cms_join_size(
-    a: Sequence[Sequence[int]], b: Sequence[Sequence[int]]
-) -> int:
-    """Equi-join cardinality estimate from two sketches built with the
-    SAME shape over each side's join key: min over rows of the row dot
-    product (the CMS inner-product estimator — always >= the true join
-    size, within εN_aN_b/width). Driver-side numpy over KB-scale state:
-    what a cost-based planner consults before choosing broadcast vs
-    shuffle vs salting, without scanning either table."""
-    import numpy as np
-
-    if len(a) != len(b) or any(len(ra) != len(rb) for ra, rb in zip(a, b)):
-        raise ValueError("join-size estimate needs same-shape sketches")
-    am = np.asarray(a, dtype=np.int64)
-    bm = np.asarray(b, dtype=np.int64)
-    return int((am * bm).sum(axis=1).min())
-
-
-# --- KMV quantile sketch: mergeable rank/percentile state ------------------
-# Fourth family: per-group QUANTILES with mergeable state. Spark's
-# percentile_approx output is a number, not re-aggregatable state — a
-# persisted per-day percentile cannot answer "p95 of the month". The
-# classic fix is a mergeable sample: keep the k rows with the SMALLEST
-# deterministic hash priority (the bottom-k/KMV construction backing
-# sampling.bottomk_sample). A bottom-k-by-hash sample of a union is
-# recoverable from bottom-k samples of the parts — union + re-min —
-# so per-day sketches roll up to any coarser grain exactly as a direct
-# sketch would, raw rows untouched. Sample quantiles carry the usual
+# --- KMV quantile sketch: persistable rank/percentile state ----------------
+# Third family: per-group QUANTILES as state, not a number. Spark's
+# percentile_approx output is a number, not re-aggregatable state. The
+# sketch is a sample: the k rows with the SMALLEST deterministic hash
+# priority (the bottom-k/KMV construction backing
+# sampling.bottomk_sample). Sample quantiles carry the usual
 # ±O(1/sqrt(k)) rank error.
 
 
@@ -487,19 +310,6 @@ def quantile_sketches(
     )
 
 
-def merge_quantile_sketches(
-    df: DataFrame, keys: Sequence[str], k: int = 256, sketch_col: str = "qsketch"
-) -> DataFrame:
-    """Roll sketches to coarser groups (``keys=[]`` = grand total):
-    concatenate member arrays, re-sort by priority, keep the k
-    smallest. Exactly equals the direct sketch of the union — the
-    bottom-k merge identity (test-pinned)."""
-    agg = F.expr(
-        f"slice(array_sort(flatten(collect_list({sketch_col}))), 1, {k})"
-    ).alias(sketch_col)
-    return df.groupBy(*keys).agg(agg) if keys else df.groupBy().agg(agg)
-
-
 def quantile_estimates(
     df: DataFrame,
     qs: Sequence[float],
@@ -523,183 +333,3 @@ def quantile_estimates(
         name = f"{prefix}{str(q).replace('0.', '').replace('.', '_')}"
         out = out.withColumn(name, F.element_at(vals, idx))
     return out.drop(sketch_col)
-
-
-def update_quantile_store(
-    store: DataFrame,
-    new_batch: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    id_col: str,
-    k: int = 256,
-    sketch_col: str = "qsketch",
-) -> DataFrame:
-    """Incremental maintenance of a persisted quantile store: sketch
-    the NEW batch only, union with the existing store, re-merge per
-    key — history contributes k-row sketches, never raw rows (the
-    HLL `update_sketch_store` twin; identical per-batch shape). Exact
-    identity with the direct sketch because bottom-k merge is
-    deterministic."""
-    fresh = quantile_sketches(
-        new_batch, keys, value_col, id_col=id_col, k=k, sketch_col=sketch_col
-    )
-    return merge_quantile_sketches(
-        store.select(*keys, sketch_col).unionByName(fresh),
-        list(keys),
-        k=k,
-        sketch_col=sketch_col,
-    )
-
-
-# --- KMV distinct sketch: mergeable set-OPERATION estimates ----------------
-# Fifth family: HLL union-rollups (distinct_sketches) cannot answer
-# INTERSECTION questions — "how many users did segments A and B
-# share", "what fraction of corpus A's shingles appear in B" — because
-# HLL state only unions. The KMV bottom-k sketch over distinct VALUE
-# hashes can (Beyer et al. 2007, "On synopses for distinct-value
-# estimation under multiset operations"): the k smallest hashes are a
-# uniform sample of the distinct values, so
-#   union:        bottom-k of the two sketches' union, estimated as
-#                 (k-1) / h_(k) in normalized hash space;
-#   jaccard:      fraction of the COMBINED bottom-k present in both;
-#   intersection: jaccard × union.
-# Merge is exact (bottom-k of a union == bottom-k of the parts'
-# bottom-ks), so per-partition/per-day sketches roll up losslessly —
-# the cross-corpus overlap audit at 100 TB is sketch-sized arithmetic,
-# never a join of the corpora.
-
-
-_KMV_SPAN = float(1 << 64)
-
-
-def kmv_distinct_sketches(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    k: int = 256,
-    sketch_col: str = "kmv",
-) -> DataFrame:
-    """Per-group KMV sketch: sorted array of the k smallest DISTINCT
-    xxhash64 values of ``value_col`` (cast to string — the canonical
-    cast rule: build and any probe must hash the same bytes). One
-    groupBy shuffle; state is ≤ k longs per group."""
-    if k < 8:
-        raise ValueError(f"k must be >= 8 (got {k})")
-    from pyspark.sql import Window
-
-    h = F.xxhash64(F.lit("kmvset"), F.col(value_col).cast("string"))
-    # dedupe values, then RANK-FILTER to k before any collect — a
-    # billion-distinct group must never materialize its full hash set
-    # in one aggregation buffer (same discipline as quantile_sketches)
-    w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(
-        F.col("__h").asc()
-    )
-    return (
-        df.select(*keys, h.alias("__h"))
-        .distinct()
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
-        .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("__h")).alias(sketch_col))
-    )
-
-
-def kmv_merge_sketches(
-    df: DataFrame,
-    keys: Sequence[str],
-    k: int = 256,
-    sketch_col: str = "kmv",
-) -> DataFrame:
-    """Roll KMV sketches to coarser groups (``keys=[]`` = grand
-    total): union member arrays, keep the k smallest distinct hashes.
-    EXACTLY equals the direct sketch of the union (identity
-    test-pinned)."""
-    agg = F.expr(
-        f"slice(array_sort(array_distinct(flatten("
-        f"collect_list({sketch_col})))), 1, {k})"
-    ).alias(sketch_col)
-    return df.groupBy(*keys).agg(agg) if keys else df.groupBy().agg(agg)
-
-
-def kmv_estimate(sketch: Column, k: int) -> Column:
-    """Distinct-count estimate from a KMV sketch column: EXACT when
-    the sketch holds fewer than k hashes (every distinct value is in
-    it); else (k-1)/h_(k) with the int64 hash normalized to (0,1)."""
-    n = F.size(sketch)
-    kth = F.element_at(sketch, k).cast("double")
-    frac = (kth + F.lit(2.0**63)) / F.lit(_KMV_SPAN)
-    return F.when(n < k, n.cast("double")).otherwise(
-        F.lit(float(k - 1)) / frac
-    )
-
-
-def kmv_set_estimates(
-    df: DataFrame,
-    sketch_a: str,
-    sketch_b: str,
-    k: int = 256,
-) -> DataFrame:
-    """Given two KMV sketch columns on each row, add
-    ``union_est`` / ``intersect_est`` / ``jaccard_est``. Pure column
-    math over ≤ 2k-long arrays — comparing a billion-key segment pair
-    costs the same as a ten-key one. Combined bottom-k is itself a
-    valid KMV sketch of A∪B; jaccard = |combined ∩ A ∩ B| / |combined|
-    (ratio of a uniform distinct-value sample, Beyer et al. §4)."""
-    comb = F.slice(
-        F.array_sort(
-            F.array_distinct(F.concat(F.col(sketch_a), F.col(sketch_b)))
-        ),
-        1,
-        k,
-    )
-    out = df.withColumn("__comb", comb)
-    both = F.size(
-        F.array_intersect(
-            F.array_intersect(F.col("__comb"), F.col(sketch_a)),
-            F.col(sketch_b),
-        )
-    )
-    union_est = kmv_estimate(F.col("__comb"), k)
-    jac = both.cast("double") / F.size("__comb").cast("double")
-    return (
-        out.withColumn("union_est", union_est)
-        .withColumn("jaccard_est", jac)
-        .withColumn("intersect_est", F.col("union_est") * jac)
-        .drop("__comb")
-    )
-
-
-def corpus_overlap_estimate(
-    corpus_a: DataFrame,
-    corpus_b: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 1024,
-) -> DataFrame:
-    """Shingle-level overlap between two corpora WITHOUT joining them:
-    KMV-sketch each side's distinct n-gram shingles, then estimate
-    distinct-shingle counts, union, intersection, and Jaccard from the
-    two sketches alone. The cross-corpus contamination smell test at
-    100 TB — "how much of corpus A's content appears in B" costs two
-    map+sketch passes and 2k longs of arithmetic, vs text.contamination's
-    exact-but-joined per-doc audit (run THAT on the corpora this flags).
-    Returns one row: a_est, b_est, union_est, intersect_est,
-    jaccard_est."""
-    def sketch(df: DataFrame, name: str) -> DataFrame:
-        from gedixr_spark.operators.dedup import word_shingles
-
-        sh = df.select(
-            F.lit(0).alias("g"),
-            F.explode(word_shingles(text_col, n)).alias("sh"),
-        )
-        return kmv_distinct_sketches(sh, ["g"], "sh", k=k, sketch_col=name)
-
-    a, b = sketch(corpus_a, "ka"), sketch(corpus_b, "kb")
-    out = kmv_set_estimates(a.join(b, "g"), "ka", "kb", k=k)
-    return out.select(
-        kmv_estimate(F.col("ka"), k).alias("a_est"),
-        kmv_estimate(F.col("kb"), k).alias("b_est"),
-        "union_est",
-        "intersect_est",
-        "jaccard_est",
-    )

@@ -135,66 +135,3 @@ def key_histogram(df: DataFrame, key: str, top: int = 20) -> DataFrame:
         .orderBy(F.desc("n_rows"))
         .limit(top)
     )
-
-
-def advise_join(
-    spark,
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str | None = None,
-    broadcast_threshold_rows: int = 1_000_000,
-    skew_ratio: float = 20.0,
-    cms_width: int = 1 << 12,
-    cms_depth: int = 4,
-) -> dict:
-    """Measurement-driven join-strategy advice BEFORE running the join:
-
-    1. row counts (cheap count jobs — at real scale substitute the
-       table's manifest/log row counts, e.g. versioned-table meta);
-    2. count-min sketches of both key columns → `cms_join_size` upper
-       estimate of the output cardinality (catches key-explosion
-       many-to-many joins before they run);
-    3. hot-key probe from the sketch matrices themselves: the max cell
-       of a CMS row upper-bounds the hottest key's frequency — if it
-       exceeds ``skew_ratio`` × the mean per-distinct-key rate on the
-       bigger side, recommend salting (or rely on AQE's runtime
-       split, which only helps JOIN partitions, not the agg after).
-
-    Returns {strategy: broadcast|shuffle|salt, est_join_rows,
-    hot_key_ratio, n_left, n_right} — plumbing Catalyst doesn't expose
-    to the user: Spark's CBO needs ANALYZE TABLE stats; this works
-    from two O(sketch) passes on any DataFrame. The decision mirrors
-    what you'd hand-pick reading `.explain()` after the fact.
-    """
-    from gedixr_spark.operators.sketches import cms_build, cms_join_size
-
-    right_key = right_key or left_key
-    n_left, n_right = left.count(), right.count()
-    sl = cms_build(left, left_key, width=cms_width, depth=cms_depth)
-    sr = cms_build(right, right_key, width=cms_width, depth=cms_depth)
-    est = cms_join_size(sl, sr)
-
-    small_n = min(n_left, n_right)
-    big_sketch = sl if n_left >= n_right else sr
-    big_n = max(n_left, n_right)
-    # distinct keys >= non-zero cells in the widest row (each distinct
-    # key hits exactly one cell per row; collisions only shrink this)
-    nonzero = max(sum(1 for c in row if c) for row in big_sketch) or 1
-    hottest = min(max(row) for row in big_sketch)  # CMS point-max bound
-    mean_rate = big_n / nonzero
-    hot_ratio = hottest / mean_rate if mean_rate else 0.0
-
-    if small_n <= broadcast_threshold_rows:
-        strategy = "broadcast"  # no shuffle at all; skew irrelevant
-    elif hot_ratio >= skew_ratio:
-        strategy = "salt"
-    else:
-        strategy = "shuffle"
-    return {
-        "strategy": strategy,
-        "est_join_rows": est,
-        "hot_key_ratio": round(hot_ratio, 2),
-        "n_left": n_left,
-        "n_right": n_right,
-    }

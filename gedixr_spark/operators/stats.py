@@ -9,8 +9,6 @@ LongAccumulator for reader errors.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -179,127 +177,4 @@ def histogram(
             F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
         )
         .orderBy("bin")
-    )
-
-
-def correlation_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Pairwise Pearson correlations in ONE aggregation pass: long-form
-    (col_a, col_b, corr) for every unordered pair (a < b by position).
-
-    All C(n,2) ``corr`` aggregates lay side-by-side in a single agg —
-    one scan, one partial/final pair, like profile_table — then unpivot
-    via stack. Fine for the tens-of-numeric-columns case a census
-    meets; at hundreds of columns the n² aggregate count is the
-    limit, not the data."""
-    if len(cols) < 2:
-        raise ValueError("correlation_matrix needs >= 2 columns")
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
-    aggs = [
-        F.corr(F.col(a).cast("double"), F.col(b).cast("double")).alias(f"__c_{i}")
-        for i, (a, b) in enumerate(pairs)
-    ]
-    wide = df.agg(*aggs)
-    tuples = ", ".join(
-        f"'{a}', '{b}', `__c_{i}`" for i, (a, b) in enumerate(pairs)
-    )
-    return wide.selectExpr(
-        f"stack({len(pairs)}, {tuples}) as (col_a, col_b, corr)"
-    )
-
-
-def outlier_flags(
-    df: DataFrame, col: str, method: str = "zscore", threshold: float = 3.0
-) -> DataFrame:
-    """Row-level outlier flag for a numeric column.
-
-    - ``zscore``: |x − mean| > threshold·stddev — one tiny stats agg
-      (2 doubles to the driver), then a map-side predicate. Assumes
-      roughly symmetric data.
-    - ``iqr``: x outside [q1 − t·IQR, q3 + t·IQR] (Tukey fences,
-      t=threshold, classically 1.5) — quartiles via percentile_approx
-      (bounded-memory sketch, no sort), robust to heavy tails.
-
-    Both are two cheap jobs: stats pass + flagging pass, no shuffle in
-    the flagging (the fences ride as literals). NULLs flag false.
-    """
-    c = F.col(col).cast("double")
-    if method == "zscore":
-        row = df.agg(F.avg(c).alias("m"), F.stddev_samp(c).alias("s")).collect()[0]
-        if row["m"] is None or row["s"] is None:
-            return df.withColumn("is_outlier", F.lit(False))
-        lo = row["m"] - threshold * row["s"]
-        hi = row["m"] + threshold * row["s"]
-    elif method == "iqr":
-        row = df.agg(
-            F.percentile_approx(c, [0.25, 0.75], 10_000).alias("q")
-        ).collect()[0]
-        if row["q"] is None or row["q"][0] is None:
-            return df.withColumn("is_outlier", F.lit(False))
-        q1, q3 = float(row["q"][0]), float(row["q"][1])
-        iqr = q3 - q1
-        lo, hi = q1 - threshold * iqr, q3 + threshold * iqr
-    else:
-        raise ValueError(f"method must be zscore|iqr, got {method!r}")
-    return df.withColumn(
-        "is_outlier", F.coalesce(~c.between(lo, hi), F.lit(False))
-    )
-
-
-def histogram_by_group(
-    df: DataFrame,
-    col: str,
-    group_col: str,
-    n_bins: int = 20,
-    lo: float | None = None,
-    hi: float | None = None,
-) -> DataFrame:
-    """Per-group equi-width histograms on a SHARED bin grid —
-    (group, bin, bin_lo, bin_hi, n_rows) with every (group, bin) cell
-    present. Shared bounds (global min/max unless given) make the
-    groups directly comparable — the point of a faceted histogram;
-    per-group bounds would silently rescale every facet.
-
-    One binned groupBy over (group, bin) + a generated dense spine
-    (distinct groups × sequence of bins) left-joined on — both sides
-    output-sized."""
-    if n_bins <= 0:
-        raise ValueError(f"n_bins must be > 0, got {n_bins}")
-    if lo is None or hi is None:
-        row = df.agg(
-            F.min(F.col(col).cast("double")), F.max(F.col(col).cast("double"))
-        ).collect()[0]
-        lo = lo if lo is not None else row[0]
-        hi = hi if hi is not None else row[1]
-        if lo is None:
-            raise ValueError(f"column {col} is all-null")
-    if not hi > lo:
-        hi = lo + 1.0
-    width = (hi - lo) / n_bins
-    c = F.col(col).cast("double")
-    bin_id = F.least(
-        F.greatest(F.floor((c - lo) / width), F.lit(0)), F.lit(n_bins - 1)
-    ).cast("int")
-    counts = (
-        df.filter(c.isNotNull())
-        .groupBy(F.col(group_col).alias("group"), bin_id.alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
-    spine = (
-        df.select(F.col(group_col).alias("group"))
-        .distinct()
-        .select(
-            "group",
-            F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin"),
-        )
-    )
-    return (
-        spine.join(counts, ["group", "bin"], "left")
-        .select(
-            "group",
-            "bin",
-            (F.lit(lo) + F.col("bin") * width).alias("bin_lo"),
-            (F.lit(lo) + (F.col("bin") + 1) * width).alias("bin_hi"),
-            F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-        )
-        .orderBy("group", "bin")
     )

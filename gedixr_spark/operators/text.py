@@ -696,49 +696,6 @@ def compression_ratio(
     return df.withColumn(out_col, _ratio(F.col(text_col)))
 
 
-def unicode_normalize(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str | None = None,
-    form: str = "NFKC",
-    strip_control: bool = True,
-) -> DataFrame:
-    """Unicode normalization (NFKC by default) + control-character
-    strip — the canonicalization pass that makes hash-based dedup
-    robust: full-width forms, compatibility ligatures and combining
-    sequences all render identically but hash differently, so without
-    this the exact-dedup md5 misses visually-identical duplicates
-    (e.g. ＡＢＣ vs ABC, ﬁ vs fi). Run it BEFORE dedup.exact_dedup /
-    signature_store.
-
-    Spark SQL has no NFC/NFKC builtin, so this is an Arrow-batched
-    pandas UDF over stdlib unicodedata — map-only, no shuffle;
-    normalization is the rare text op where per-row Python-C work is
-    unavoidable and Arrow batching keeps it ~µs/doc."""
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"form must be a unicodedata form, got {form!r}")
-    import unicodedata
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def _norm(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None
-            s = unicodedata.normalize(form, t)
-            if strip_control:
-                s = "".join(
-                    ch for ch in s if ch == "\n" or unicodedata.category(ch) != "Cc"
-                )
-            return s
-
-        return texts.map(one, na_action="ignore")
-
-    return df.withColumn(out_col or text_col, _norm(F.col(text_col)))
-
-
 def build_inverted_index(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1120,228 +1077,6 @@ def update_tf_index(
     # kmeans discipline; measured 4.6 → ~2 s at sf0.1).
     merged = merged.localCheckpoint(eager=False)
     return commit_upsert(spark, path, merged, keys=["term"], meta=meta)
-
-
-def update_tf_index_from_changes(
-    spark,
-    index_path: str,
-    corpus_path: str,
-    since_version: int,
-    version: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    meta: dict | None = None,
-) -> dict:
-    """Index maintenance driven by the CORPUS table's row-level CDC
-    feed (`sinks.versioned.table_changes`): inserts add postings,
-    deletes retract them, updates do both — so the index tracks a
-    corpus taking upserts/deletes/merges, which `update_tf_index`
-    (append-only, unseen-ids contract) cannot. The feed's
-    update_preimage/delete rows carry the documents' OLD text, which
-    identifies exactly the (term, doc) postings to retract — no
-    old-corpus snapshot read needed.
-
-    One commit on the index table: touched terms' current postings
-    are read back (semi-join on the term key), retracted postings
-    anti-joined out, new postings unioned in, df recomputed — then
-    `commit_merge` applies it atomically: terms whose posting list
-    emptied are DELETED from the index (when_matched_delete), the
-    rest full-row updated, brand-new terms inserted. Work is
-    proportional to the CHANGED docs' term footprint; untouched terms'
-    files are never rewritten (commit_merge's file-granularity).
-
-    Differential-pinned: feed-driven maintenance over any
-    upsert/delete history equals `build_tf_index` over the corpus
-    snapshot, bit-for-bit."""
-    from gedixr_spark.sinks.versioned import (
-        commit_merge, read_versioned, table_changes,
-    )
-
-    from pyspark.sql.window import Window
-
-    # the feed fans out THREE ways below (bounds, added, removed) — pin
-    # it once so the per-commit diff machinery doesn't re-execute per
-    # branch (r11 VERDICT #3; job count asserted in the tests)
-    ch = table_changes(
-        spark, corpus_path, since_version, version
-    ).localCheckpoint(eager=False)
-    # NET the feed per doc FIRST. A doc changed several times in the
-    # consumed range emits a pre/post pair PER COMMIT; summing every
-    # postimage would double-count its tf and retracting only against
-    # the pre-refresh index would leave intermediate versions' postings
-    # stale (r11 review finding, empirically confirmed). What the index
-    # needs is exactly two rows per doc: its INITIAL text (to retract —
-    # only if the doc existed at since_version, i.e. its earliest
-    # change is a preimage/delete no later than any insert) and its
-    # FINAL text (to add — only if the doc still exists at the end,
-    # i.e. its latest change is an insert/postimage no earlier than any
-    # delete).
-    is_plus = F.col("_change_type").isin("insert", "update_postimage")
-    v = F.col("_commit_version")
-    bounds = ch.groupBy(id_col).agg(
-        F.max(F.when(is_plus, v)).alias("__maxp"),
-        F.min(F.when(is_plus, v)).alias("__minp"),
-        F.max(F.when(~is_plus, v)).alias("__maxm"),
-        F.min(F.when(~is_plus, v)).alias("__minm"),
-    )
-    w_desc = Window.partitionBy(id_col).orderBy(v.desc())
-    w_asc = Window.partitionBy(id_col).orderBy(v.asc())
-    added = (
-        ch.filter(is_plus)
-        .withColumn("__rn", F.row_number().over(w_desc))
-        .filter(F.col("__rn") == 1)
-        .join(
-            bounds.filter(
-                F.col("__maxp").isNotNull()
-                & (F.col("__maxm").isNull() | (F.col("__maxp") >= F.col("__maxm")))
-            ).select(id_col),
-            id_col,
-            "left_semi",
-        )
-    )
-    removed = (
-        ch.filter(~is_plus)
-        .withColumn("__rn", F.row_number().over(w_asc))
-        .filter(F.col("__rn") == 1)
-        .join(
-            bounds.filter(
-                F.col("__minm").isNotNull()
-                & (F.col("__minp").isNull() | (F.col("__minm") <= F.col("__minp")))
-            ).select(id_col),
-            id_col,
-            "left_semi",
-        )
-    )
-    add_tf = (
-        added.select(
-            F.col(id_col),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .groupBy("term", id_col)
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    rem_docs = (
-        removed.select(
-            F.col(id_col),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .select("term", id_col)
-        .distinct()
-    )
-    touched_terms = (
-        add_tf.select("term").union(rem_docs.select("term")).distinct()
-    )
-    cur = read_versioned(spark, index_path)
-    cur_post = (
-        cur.join(touched_terms, "term", "semi")
-        .select("term", F.explode("postings").alias("p"))
-        .select(
-            "term",
-            F.col("p.doc_id").alias(id_col),
-            F.col("p.tf").alias("tf"),
-        )
-    )
-    # retract by CHANGED DOC across the touched terms, not by the old
-    # text's (term, doc) pairs: the result is identical on first apply
-    # (a doc's current postings are exactly its old-text terms, all
-    # inside the touched set) but doc-keyed retraction is IDEMPOTENT —
-    # a crash-replay of the same range finds the new-text postings,
-    # removes them, and re-adds the same thing, instead of keeping
-    # new-only terms' postings AND re-adding them (double-counted df).
-    # That idempotence is what makes the at-least-once cursor loop
-    # (maintain_tf_index) exactly-once end-to-end.
-    changed_docs = (
-        added.select(id_col).union(removed.select(id_col)).distinct()
-    )
-    merged = (
-        cur_post.join(changed_docs, [id_col], "left_anti")
-        .unionByName(add_tf)
-        .groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sort_array(
-                F.collect_list(F.struct(F.col(id_col).alias("doc_id"), "tf"))
-            ).alias("postings"),
-        )
-    )
-    # terms whose postings all retracted produce no merged row — they
-    # must be DELETED from the index, not left stale
-    postings_t = dict(cur.dtypes)["postings"]
-    emptied = (
-        touched_terms.join(merged.select("term"), "term", "left_anti")
-        # only terms PRESENT in the index get a delete marker — on a
-        # crash-replay the term already left, and an unmatched 'D' row
-        # would INSERT a NULL tombstone via when_not_matched_insert
-        .join(cur.select("term"), "term", "left_semi")
-        .select(
-            "term",
-            F.lit(None).cast("long").alias("df"),
-            F.lit(None).cast(postings_t).alias("postings"),
-            F.lit("D").alias("__op"),
-        )
-    )
-    source = merged.withColumn("__op", F.lit("U")).unionByName(emptied)
-    # merge drives several actions (discovery, contract aggregate,
-    # write) — materialize the corpus-slice + index-join plan once
-    source = source.localCheckpoint(eager=False)
-    return commit_merge(
-        spark,
-        index_path,
-        source,
-        keys=["term"],
-        when_matched_delete="s.__op = 'D'",
-        when_matched_update="all",
-        when_not_matched_insert=True,
-        meta=meta,
-    )
-
-
-def maintain_tf_index(
-    spark,
-    index_path: str,
-    corpus_path: str,
-    consumer_id: str = "tf_index",
-    max_versions: int | None = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> dict:
-    """The production loop for an index tracking a churning corpus:
-    one cursor-driven poll/apply/ack cycle. Polls the corpus table's
-    unconsumed CDC range through `sinks.cursor` (named offsets, CAS
-    advance), applies it with `update_tf_index_from_changes`, then
-    commits the cursor. A crash between apply and ack re-delivers the
-    same range; the doc-keyed retraction makes re-application a no-op,
-    so the loop is exactly-once END-TO-END without any coordination
-    beyond the two tables' own logs. N indexes (or any other
-    consumers) track the same corpus under different ``consumer_id``s
-    without interfering.
-
-    Returns {"from_version", "to_version", "consumed": bool}."""
-    from gedixr_spark.sinks.cursor import commit_cursor, next_changes
-
-    batch = next_changes(
-        spark, corpus_path, consumer_id, max_versions=max_versions
-    )
-    if batch["changes"] is None:
-        return {
-            "from_version": batch["from_version"],
-            "to_version": batch["to_version"],
-            "consumed": False,
-        }
-    update_tf_index_from_changes(
-        spark, index_path, corpus_path,
-        since_version=batch["from_version"],
-        version=batch["to_version"],
-        text_col=text_col, id_col=id_col,
-        meta={"cdc_consumer": consumer_id,
-              "cdc_range": [batch["from_version"], batch["to_version"]]},
-    )
-    commit_cursor(spark, corpus_path, consumer_id, batch["to_version"])
-    return {
-        "from_version": batch["from_version"],
-        "to_version": batch["to_version"],
-        "consumed": True,
-    }
 
 
 def chunk_documents(

@@ -5597,104 +5597,6 @@ def expire_log(spark: SparkSession, path: str, force: bool = False) -> list[int]
     return expired
 
 
-def version_at_timestamp(spark: SparkSession, path: str, ts: float) -> int:
-    """Newest version committed at or before epoch-seconds ``ts`` —
-    timestamp-based time travel: pass the result to `read_versioned`.
-    Commit wall-clock rides in every log entry (entries from before
-    this field existed sort as ts=0, i.e. always eligible).
-
-    BINARY SEARCH over the version listing (r12 VERDICT #5): commit
-    timestamps are non-decreasing in version order (legacy ts=0
-    entries form a prefix), so the lookup reads O(log n) entries
-    instead of replaying all n — on a long-lived streaming log this is
-    the difference between a dashboard query and a full driver-side
-    log scan. A short forward walk past the found boundary absorbs
-    sub-second wall-clock regressions between racing commits.
-
-    Clock-skew contract (r13 ADVICE): if the probes themselves witness
-    a timestamp INVERSION (multi-writer clock skew or an NTP
-    step-back — e.g. ts 10,20,15,30), the binary search's premise is
-    void and the lookup falls back to the exact linear scan, returning
-    what the pre-r13 implementation returned. An inversion the O(log n)
-    probes never touch cannot be detected without reading every entry;
-    such a lookup behaves as if timestamps were monotone-clamped to
-    their running maximum (Delta's history-reconstruction rule), which
-    only ever errs toward an OLDER (still-existing) version, never a
-    future one."""
-    versions = _list_log_versions(spark, path)
-
-    probed: dict[int, float] = {}
-
-    def _ts(i: int) -> float:
-        if i not in probed:
-            probed[i] = _read_entry(spark, path, versions[i]).get("ts", 0.0)
-        return probed[i]
-
-    def _linear() -> int:
-        best_v = None
-        for v in versions:
-            if _read_entry(spark, path, v).get("ts", 0.0) <= ts:
-                best_v = v
-        if best_v is None:
-            raise ValueError(
-                f"no version of {path} existed at or before timestamp {ts}"
-            )
-        return best_v
-
-    if not versions or _ts(0) > ts:
-        # exact even under skew: clamped ts are all >= ts[0], so a
-        # query below the table's birth has no answer either way
-        raise ValueError(
-            f"no version of {path} existed at or before timestamp {ts}"
-        )
-    lo, hi, best = 0, len(versions) - 1, 0
-    while lo <= hi:
-        mid = (lo + hi) // 2
-        if _ts(mid) <= ts:
-            best = mid
-            lo = mid + 1
-        else:
-            hi = mid - 1
-    while best + 1 < len(versions) and _ts(best + 1) <= ts:
-        best += 1  # clock-skew guard; 0 extra reads when clocks behave
-    # the probes are free evidence: if they contradict monotonicity
-    # anywhere, the search result is unreliable — take the exact path
-    seq = [probed[i] for i in sorted(probed)]
-    if any(a > b for a, b in zip(seq, seq[1:])):
-        return _linear()
-    return versions[best]
-
-
-def table_file_stats(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    small_mb: int = 16,
-) -> dict:
-    """Live-file census for maintenance planning: {n_files,
-    total_bytes, small_files, small_bytes, p50_bytes, max_bytes}.
-    Metadata-only (one listStatus over live names — file-count cost,
-    never data); the number a scheduler checks before deciding
-    `commit_compact` is worth a commit."""
-    files = live_files(spark, path, version)
-    fs, _ = _hadoop_fs(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    data = _data_dir(path)
-    sizes = sorted(
-        fs.getFileStatus(jpath(_resolve_file(path, f))).getLen() for f in files
-    )
-    cut = small_mb * 1024 * 1024
-    small = [s for s in sizes if s < cut]
-    return {
-        "n_files": len(sizes),
-        "total_bytes": sum(sizes),
-        "small_files": len(small),
-        "small_bytes": sum(small),
-        "p50_bytes": sizes[len(sizes) // 2] if sizes else 0,
-        "max_bytes": sizes[-1] if sizes else 0,
-    }
-
-
 def snapshot_row_count(
     spark: SparkSession, path: str, version: int | None = None
 ) -> int | None:
@@ -5727,99 +5629,6 @@ def snapshot_row_count(
     for t in dvs.values():
         total -= sum(int(n) for n in t.values())
     return total
-
-
-def export_manifest(
-    spark: SparkSession, path: str, version: int | None = None
-) -> str:
-    """Export a snapshot's live-file list as a plain-text manifest
-    (one absolute parquet path per line) under
-    ``_manifests/manifest-<version>.txt`` — the symlink-manifest
-    pattern Delta uses for engines that speak parquet-but-not-our-log
-    (Presto/Trino/Athena there; DuckDB et al. here). The manifest is a
-    STATIC snapshot: later commits don't move it (re-export to
-    advance), and vacuum of pre-manifest versions can invalidate it —
-    the same caveats as Delta's. Returns the manifest file path;
-    interop is round-trip-tested by reading the manifest with DuckDB
-    and comparing against `read_versioned`.
-
-    LIVE DELETE VECTORS export too (the Iceberg v2 data-manifest +
-    delete-manifest shape, r11 VERDICT #4): alongside the data
-    manifest, ``manifest-<version>-deletes.txt`` lists the live DV
-    parquet files (schema ``file: string`` — target data-file
-    basename — and ``pos: long`` — physical row index). An external
-    reader reproduces the snapshot EXACTLY by anti-joining the delete
-    files on (data-file basename, row number); DuckDB's
-    ``filename=true, file_row_number=true`` read options give both
-    sides for free (round-trip-tested). A DV-free snapshot writes the
-    data manifest only and DELETES any stale deletes manifest at the
-    same version, so a consumer that checks for the sidecar never sees
-    a leftover."""
-    versions = _list_log_versions(spark, path)
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} does not exist at {path}")
-    files, dvs = _replay_state(spark, path, v)
-    fs, _ = _hadoop_fs(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    mdir = path.rstrip("/") + "/_manifests"
-    fs.mkdirs(jpath(mdir))
-
-    def _write(target: str, names) -> None:
-        payload = "".join(
-            os.path.abspath(_strip_scheme(_resolve_file(path, f))) + "\n"
-            for f in names
-        ).encode("utf-8")
-        # overwrite-safe: manifests are derived metadata, not commits
-        out = fs.create(jpath(target), True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-
-    target = f"{mdir}/manifest-{v:08d}.txt"
-    _write(target, files)
-    del_target = f"{mdir}/manifest-{v:08d}-deletes.txt"
-    if dvs:
-        _write(del_target, sorted(dvs))
-    elif fs.exists(jpath(del_target)):
-        fs.delete(jpath(del_target), False)
-    # column mapping: data files carry WRITE-TIME names — an external
-    # reader needs the per-file translation or a post-rename manifest
-    # read surfaces stale (or swapped!) columns. Emit the Iceberg
-    # name-mapping shape as a JSON sidecar: per-file write-name ->
-    # logical-name maps plus ADD COLUMN default fills. Absent when
-    # mapping is inactive or every file already matches (the sidecar's
-    # absence IS the "plain parquet is safe" signal).
-    col_target = f"{mdir}/manifest-{v:08d}-columns.json"
-    ctx = (
-        _colmap_context(spark, path, list(files), v) if files else None
-    )
-    if ctx is not None:
-        payload = json.dumps(
-            {
-                "columns": [f.name for f in ctx["cap_schema"].fields],
-                "renames": {
-                    os.path.abspath(_strip_scheme(_resolve_file(path, f))):
-                        ctx["renames"][f]
-                    for f in files
-                },
-                "fills": {
-                    os.path.abspath(_strip_scheme(_resolve_file(path, f))):
-                        ctx.get("fills", {}).get(f, {})
-                    for f in files
-                },
-            },
-            sort_keys=True,
-        ).encode("utf-8")
-        out = fs.create(jpath(col_target), True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-    elif fs.exists(jpath(col_target)):
-        fs.delete(jpath(col_target), False)
-    return target
 
 
 def shallow_clone(
@@ -5931,45 +5740,4 @@ def shallow_clone(
         expectations=src_exp or None,
         dv_add=dv_add or None,
         **colmap_kw,
-    )
-
-
-def find_orphan_files(
-    spark: SparkSession,
-    path: str,
-    older_than_hours: float = 168.0,
-) -> list[str]:
-    """Audit: data files present in ``data/`` that NO log version ever
-    referenced — leftovers of commits that crashed between writing
-    files and creating their log entry, or that lost their
-    optimistic-concurrency race. `vacuum_versioned` already deletes
-    them; this is the read-only census (run it on a table you don't
-    own before asking its owner to vacuum). ``older_than_hours``
-    applies the same in-flight-writer guard as vacuum: younger files
-    may belong to a commit still racing."""
-    if older_than_hours < 0:
-        raise ValueError("older_than_hours must be >= 0")
-    referenced: set[str] = set()
-    for v in _list_log_versions(spark, path):
-        e = _read_entry(spark, path, v)
-        referenced.update(e.get("add", []))
-        referenced.update(e.get("dv_add", {}))
-    for c in _list_checkpoints(spark, path):
-        ck = _read_checkpoint(spark, path, c)
-        referenced.update(ck.get("live", []))
-        referenced.update(ck.get("dvs", {}))
-    # compare by basename: external (clone) entries never appear in the
-    # local data/ listing anyway, and local entries are bare names
-    referenced = {f.rsplit("/", 1)[-1] for f in referenced}
-    cutoff_ms = (time.time() - older_than_hours * 3600.0) * 1000.0
-    fs, _ = _hadoop_fs(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    dd = jpath(_data_dir(path))
-    if not fs.exists(dd):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(dd)
-        if st.getPath().getName() not in referenced
-        and st.getModificationTime() <= cutoff_ms
     )

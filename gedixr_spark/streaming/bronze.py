@@ -289,214 +289,3 @@ def versioned_upsert_query(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def index_stream_batch(
-    batch_df: DataFrame,
-    index_path: str,
-    batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> dict | None:
-    """Idempotent per-micro-batch fold of new documents into a
-    versioned tf index (`text.update_tf_index`) — the retrieval
-    derivative stays fresh as the corpus streams in, with the same
-    commit-log ledger exactly-once guarantee as the other versioned
-    sinks: a replayed batch id no-ops, a crash between commit and
-    checkpoint cannot double-count a document's term frequencies."""
-    from gedixr_spark.operators.text import update_tf_index
-    from gedixr_spark.sinks.versioned import seen_stream_batch_ids
-
-    spark = batch_df.sparkSession
-    if batch_id in seen_stream_batch_ids(spark, index_path):
-        return None
-    if batch_df.isEmpty():
-        # empty micro-batches happen on idle triggers — don't grow the
-        # commit log with no-op upserts
-        return None
-    return update_tf_index(
-        spark, index_path, batch_df, text_col=text_col, id_col=id_col,
-        meta={"stream_batch_id": batch_id},
-    )
-
-
-def index_maintenance_query(
-    docs: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming incremental index maintenance: each micro-batch of
-    NEW documents merges into the versioned tf-index table as one
-    atomic file-granularity upsert. Query yesterday's index (time
-    travel) while today's streams in — the streaming front door for
-    `text.init_tf_index_table`/`update_tf_index`."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        index_stream_batch(
-            batch_df, index_path, batch_id, text_col=text_col, id_col=id_col
-        )
-
-    writer = docs.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def standing_sample_batch(
-    batch_df: DataFrame,
-    table_path: str,
-    batch_id: int,
-    k: int = 1000,
-    id_col: str = "doc_id",
-    weight_col: str | None = None,
-) -> dict | None:
-    """Maintain a standing uniform k-row QA sample as data streams in —
-    the mergeable-bottom-k discipline live: bottomk(old ∪ batch) ==
-    bottomk(all data ever seen) (hash priority is a pure function of
-    the id), so each micro-batch folds its own bottom-k into the
-    k-row versioned table with ONE tiny overwrite commit. The corpus
-    is touched once per batch; the standing sample never re-reads
-    history. Exactly-once via the commit-log ledger; a replayed batch
-    id no-ops. Re-sent ids ACROSS batches are handled too: the merge
-    drops duplicate ids before re-ranking (same priority hash ⇒ a
-    duplicate would otherwise occupy two of the k slots — r7 ADVICE);
-    a re-sent id is assumed to carry the same payload (the
-    update_tf_index unseen-ids convention), and the first-seen row
-    wins deterministically.
-
-    ``weight_col`` switches the priority to the Efraimidis–Spirakis
-    weighted form (sampling.weighted_priority): the standing table is
-    then a weighted-without-replacement sample of everything seen —
-    same mergeable-sketch algebra, the weight must ride the table (be
-    a column of the stream) and stay fixed per id."""
-    from gedixr_spark.operators.sampling import (
-        bottomk_sample, weighted_bottomk_sample,
-    )
-    from gedixr_spark.sinks.versioned import (
-        commit_overwrite, read_versioned, seen_stream_batch_ids,
-    )
-
-    spark = batch_df.sparkSession
-    if batch_id in seen_stream_batch_ids(spark, table_path):
-        return None
-    if batch_df.isEmpty():
-        return None
-    def _sample(df):
-        if weight_col is None:
-            return bottomk_sample(df, k, id_col=id_col)
-        return weighted_bottomk_sample(df, k, weight_col, id_col=id_col)
-
-    fresh = _sample(batch_df)
-    try:
-        current = read_versioned(spark, table_path)
-        # first-seen wins on duplicate ids: standing rows rank ahead
-        # of the fresh batch, so a re-sent id never takes a second
-        # slot AND the kept payload is deterministic (k is tiny — the
-        # window is over ≤ 2k rows)
-        merged = (
-            current.withColumn("__gen", F.lit(0))
-            .unionByName(fresh.withColumn("__gen", F.lit(1)))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.asc("__gen"))
-        merged = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__gen", "__rn")
-        )
-    except ValueError:
-        merged = fresh  # first batch: no schema recorded yet
-    new_sample = _sample(merged)
-    return commit_overwrite(
-        spark, table_path, new_sample,
-        meta={"stream_batch_id": batch_id},
-    )
-
-
-def standing_sample_query(
-    docs: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    k: int = 1000,
-    id_col: str = "doc_id",
-    available_now: bool = False,
-    weight_col: str | None = None,
-) -> StreamingQuery:
-    """Streaming front door for `standing_sample_batch`: the table at
-    any version IS a valid uniform (or, with ``weight_col``, weighted)
-    sample of everything ingested up to that commit — time travel
-    gives you 'the QA sample as of last Tuesday' for free."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        standing_sample_batch(
-            batch_df, table_path, batch_id, k=k, id_col=id_col,
-            weight_col=weight_col,
-        )
-
-    writer = docs.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def vector_stream_batch(
-    batch_df: DataFrame,
-    index_path: str,
-    batch_id: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> dict | None:
-    """Idempotent per-micro-batch fold of new/changed vectors into a
-    versioned IVF vector index (`vectorstore.update_vector_index`) —
-    cells come from the table's persisted centroids (never a refit, so
-    streamed rows agree with the initial build), the upsert rewrites
-    only files holding re-ingested ids, and the commit-log ledger
-    gives the same exactly-once guarantee as every other versioned
-    streaming sink: replayed batch ids no-op, a crash between commit
-    and checkpoint cannot double-ingest a vector."""
-    from gedixr_spark.operators.vectorstore import update_vector_index
-    from gedixr_spark.sinks.versioned import seen_stream_batch_ids
-
-    spark = batch_df.sparkSession
-    if batch_id in seen_stream_batch_ids(spark, index_path):
-        return None
-    if batch_df.isEmpty():
-        return None
-    return update_vector_index(
-        spark, index_path, batch_df, vec_col=vec_col, id_col=id_col,
-        meta={"stream_batch_id": batch_id},
-    )
-
-
-def vector_index_query(
-    emb: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming ANN-index maintenance: each micro-batch of embeddings
-    lands cell-assigned and cell-clustered in the versioned vector
-    index, so `search_vector_index` serves pruned top-k over a corpus
-    that is still streaming in — query yesterday's index via time
-    travel while today's vectors arrive. The streaming front door for
-    `vectorstore.init_vector_index`/`update_vector_index`."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        vector_stream_batch(
-            batch_df, index_path, batch_id, vec_col=vec_col, id_col=id_col
-        )
-
-    writer = emb.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,16 +1,9 @@
-"""Structured Streaming variants of the event-time operators
-(SURVEY.md §2.6: the reference is batch-only; this is extension
-surface). Batch and streaming share semantics: the batch operators in
-operators/events.py are the oracle-checkable twins.
-
-Tested with file-source + Trigger.AvailableNow → memory sink, which
-exercises the real micro-batch engine incl. watermark bookkeeping.
-"""
+"""The event stream source the streaming sinks read (SURVEY.md §2.6:
+the reference is batch-only; this is extension surface)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_event_stream(
@@ -24,309 +17,3 @@ def read_event_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def streaming_tumbling_counts(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts: late events beyond the
-    watermark are dropped and window state is evicted — bounded state
-    at any scale."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), width).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def streaming_sliding_counts(
-    events: DataFrame,
-    width: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked SLIDING-window counts + exact value sums — the
-    streaming twin of operators/events.sliding_agg (same window/slide
-    semantics via the built-in window(width, slide), which assigns each
-    event to its ceil(width/slide) containing windows; Spark manages
-    the per-window state and watermark eviction)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), width, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
-    )
-
-
-def streaming_distinct_users(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Watermarked per-window APPROXIMATE distinct users — the
-    streaming face of the sketch rollup (operators/sketches.py).
-
-    Exact streaming count-distinct needs per-window per-user state
-    (unbounded in users); approx_count_distinct keeps one HLL++ sketch
-    per window — KBs of state regardless of cardinality, merged
-    map-side across micro-batch tasks — which is the only shape that
-    survives a billion-user stream. Watermark evicts closed windows'
-    sketches. Batch twin for tests: the same groupBy on the drained
-    input (estimates match exactly — same algorithm, same rsd)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), width).alias("w"))
-        .agg(F.approx_count_distinct(user_col, rsd).alias("n_users_est"))
-        .select(F.col("w.start").alias("window_start"), "n_users_est")
-    )
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Session windows with gap timeout via the built-in session_window
-    — Spark manages merge/eviction of session state with the watermark
-    (the applyInPandasWithState escape hatch is only needed for custom
-    session logic)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(user_col))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col(user_col),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_user_totals(
-    events: DataFrame,
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """CUSTOM stateful streaming operator via ``applyInPandasWithState``
-    — the escape hatch for per-key state machines that built-in
-    windowed aggregations can't express (SURVEY §2.8). Maintains a
-    running (event count, exact value total) per user in explicit
-    group state across micro-batches and emits the updated totals
-    whenever a batch touches the user.
-
-    State is (n, total_cents): the running sum is kept in integer
-    CENTS (events.value carries 2 decimals) so cross-batch
-    accumulation is exact regardless of arrival order — the same
-    exact-sum discipline as the batch operators' decimal cast.
-
-    Scale shape: state lives in the state store partitioned by user —
-    executors hold only their keys' (int, long) pairs; no global
-    state, no driver involvement."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = f"{user_col} bigint, n_events bigint, sum_value double"
-    state_schema = "n bigint, total_cents bigint"
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # round per element, THEN sum: exact at any batch size
-            cents += int((pdf[value_col] * 100).round().astype("int64").sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {user_col: [key[0]], "n_events": [n], "sum_value": [cents / 100.0]}
-        )
-
-    return events.groupBy(F.col(user_col)).applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_asof_enrich(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    payload_col: str = "value",
-    left_id_col: str = "event_id",
-    strict: bool = True,
-) -> DataFrame:
-    """Streaming as-of enrichment — the stateful twin of
-    ``operators.events.asof_join`` (same semantics, same tag-ordered
-    tie rule) and the state-hand-off design ``asof_join_bucketed``
-    mirrors in batch. Both sides are STREAMS: union them tagged, group
-    by key, and keep one (carry_ts, carry_payload) pair per key in
-    explicit group state — each left row is enriched with the most
-    recent right row at or before it; right rows update the carry.
-
-    Ordering contract: rows are sorted (ts, tag) WITHIN each
-    micro-batch, and state carries across batches, so output matches
-    batch asof_join exactly when each key's rows arrive time-ordered
-    across micro-batches (the append-only ingest pattern). A right row
-    arriving late — after a left row with a later ts was already
-    emitted — enriches only subsequent lefts; streams cannot
-    retroactively re-emit without full retraction support.
-
-    Scale shape: state is ONE (long, double) pair per key in the state
-    store — no history buffering, bounded regardless of stream volume;
-    the only shuffle is the groupBy(key) the state store needs anyway.
-    Payload is a single double column (the state-schema struct is
-    fixed); pack wider payloads into cents/ids the way
-    streaming_user_totals keeps exact totals."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    left_tag, right_tag = (0, 1) if strict else (1, 0)
-    l = left.select(
-        F.col(key_col),
-        F.col(ts_col),
-        F.lit(left_tag).alias("__tag"),
-        F.col(left_id_col).cast("long").alias("__lid"),
-        F.lit(None).cast("double").alias("__p"),
-    )
-    r = right.select(
-        F.col(key_col),
-        F.col(ts_col),
-        F.lit(right_tag).alias("__tag"),
-        F.lit(None).cast("long").alias("__lid"),
-        F.col(payload_col).cast("double").alias("__p"),
-    )
-    u = l.unionByName(r)
-
-    out_schema = (
-        f"{left_id_col} bigint, {key_col} bigint, {ts_col} timestamp, "
-        f"asof_{ts_col} timestamp, asof_{payload_col} double"
-    )
-    state_schema = "carry_us bigint, carry_p double"
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        carry_us, carry_p = state.get if state.exists else (None, None)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        # in-batch replay in exact asof order: (ts, tag) — ties resolve
-        # by the same tag rule as the batch operator. Positional access
-        # (itertuples would mangle the __-prefixed names).
-        batch = batch.sort_values([ts_col, "__tag"], kind="mergesort")
-        tags = batch["__tag"].to_numpy()
-        tss = batch[ts_col].reset_index(drop=True)
-        lids = batch["__lid"].reset_index(drop=True)
-        ps = batch["__p"].reset_index(drop=True)
-        out_lid, out_ts, out_ats, out_ap = [], [], [], []
-        for i in range(len(batch)):
-            if tags[i] == right_tag and pd.notna(ps.iloc[i]):
-                carry_us = tss.iloc[i].value // 1000  # ns → µs, exact
-                carry_p = float(ps.iloc[i])
-            if tags[i] == left_tag and pd.notna(lids.iloc[i]):
-                out_lid.append(int(lids.iloc[i]))
-                out_ts.append(tss.iloc[i])
-                out_ats.append(
-                    pd.Timestamp(carry_us * 1000) if carry_us is not None else pd.NaT
-                )
-                out_ap.append(carry_p if carry_p is not None else float("nan"))
-        if carry_us is not None:
-            state.update((int(carry_us), float(carry_p)))
-        yield pd.DataFrame(
-            {
-                left_id_col: pd.array(out_lid, dtype="Int64"),
-                key_col: pd.array([key[0]] * len(out_lid), dtype="Int64"),
-                ts_col: out_ts,
-                f"asof_{ts_col}": out_ats,
-                f"asof_{payload_col}": out_ap,
-            }
-        )
-
-    return u.groupBy(F.col(key_col)).applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_window_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    within: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stream-stream INNER join — Spark's native
-    symmetric-hash streaming join, the canonical two-live-streams
-    operator (impressions ⋈ clicks): each left row pairs with same-key
-    right rows whose timestamp falls in [left.ts, left.ts + within].
-
-    Scale shape: BOTH sides carry a watermark and the join condition
-    carries the time-range bound — together they let the engine compute
-    exactly how long a buffered row can still find a partner and evict
-    state past it (without the range bound, stream-stream join state
-    grows forever). The only shuffle is the key hash both sides need
-    anyway; per-key state is bounded by rows inside the watermark
-    horizon. Batch twin: the identical join predicate on static frames
-    (tests pin equality with a horizon-covering watermark; with a tight
-    watermark the streaming result is a subset — late rows are dropped,
-    never wrong).
-
-    Output: ``key_col``, ``l_ts``/``r_ts``, and every non-key payload
-    column prefixed ``l_``/``r_``."""
-    l_pay = [c for c in left.columns if c not in (key_col, ts_col)]
-    r_pay = [c for c in right.columns if c not in (key_col, ts_col)]
-    l = left.select(
-        F.col(key_col),
-        F.col(ts_col).alias("l_ts"),
-        *[F.col(c).alias(f"l_{c}") for c in l_pay],
-    ).withWatermark("l_ts", watermark)
-    r = right.select(
-        F.col(key_col).alias("__r_key"),
-        F.col(ts_col).alias("r_ts"),
-        *[F.col(c).alias(f"r_{c}") for c in r_pay],
-    ).withWatermark("r_ts", watermark)
-    cond = (
-        (F.col(key_col) == F.col("__r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return l.join(r, cond, "inner").drop("__r_key")
-
-
-def run_available_now(stream_df: DataFrame, query_name: str, output_mode: str = "complete") -> list:
-    """Drain a file stream with Trigger.AvailableNow into a memory sink
-    and return the rows — the test/verification harness for streaming
-    operators. Use output_mode='append' for session windows (complete
-    mode isn't supported for session aggregations)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}").collect()

@@ -58,41 +58,6 @@ def test_expire_evicts_warm_walks_below_cutoff(spark, tmp_path):
         vt.read_versioned(spark, t, version=2).collect()
 
 
-def _hand_log(vt, t, stamps):
-    os.makedirs(vt._log_dir(t))
-    for v, ts in stamps.items():
-        e = {"version": v, "op": "create" if v == 0 else "note",
-             "add": [], "remove": [], "schema": None, "meta": {}, "ts": ts}
-        with open(os.path.join(vt._log_dir(t), vt._entry_name(v)), "w") as f:
-            json.dump(e, f)
-
-
-def test_version_at_timestamp_witnessed_inversion_falls_back(spark, tmp_path):
-    """Probes that see out-of-order stamps take the exact linear path:
-    ts [10,50,20,30,40,45,60] queried at 25 probes 10,50,30 (inverted)
-    and must return the raw-linear answer v2 (ts=20)."""
-    vt = _vt()
-    t = str(tmp_path / "skew1")
-    _hand_log(vt, t, {0: 10.0, 1: 50.0, 2: 20.0, 3: 30.0, 4: 40.0,
-                      5: 45.0, 6: 60.0})
-    vt.reset_metadata_cache()
-    assert vt.version_at_timestamp(spark, t, 25.0) == 2
-
-
-def test_version_at_timestamp_unwitnessed_inversion_is_clamped(spark, tmp_path):
-    """The documented monotone-clamp contract for inversions the
-    O(log n) probes never touch: ts [10,20,15,30] queried at 16 —
-    clamped stamps are [10,20,20,30], so the newest qualifying version
-    is 0 (an OLDER, still-existing version; never a future one)."""
-    vt = _vt()
-    t = str(tmp_path / "skew2")
-    _hand_log(vt, t, {0: 10.0, 1: 20.0, 2: 15.0, 3: 30.0})
-    vt.reset_metadata_cache()
-    assert vt.version_at_timestamp(spark, t, 16.0) == 0
-    # and above the skew window everything agrees again
-    assert vt.version_at_timestamp(spark, t, 30.0) == 3
-
-
 def test_out_of_band_recreate_evicts_caches(spark, tmp_path):
     """Simulate ANOTHER process wiping and re-creating the table at
     the same path (this session's _atomic_create hook never fires):

@@ -137,23 +137,6 @@ def test_bpe_train_early_stop_and_validation(spark):
         bpe.bpe_train(bpe.word_counts(df), n_merges=0)
 
 
-def test_merge_list_persistence_roundtrip(spark, tmp_path):
-    """save_merges/load_merges: the tokenizer artifact round-trips with
-    rank order intact and reproduces identical encodings."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CORPUS)], ["doc_id", "text"]
-    )
-    merges = bpe.bpe_train(bpe.word_counts(df), n_merges=8)
-    assert merges  # fixture must actually learn something
-    path = str(tmp_path / "merges.parquet")
-    bpe.save_merges(spark, merges, path)
-    loaded = bpe.load_merges(spark, path)
-    assert loaded == merges
-    a = {r["doc_id"]: r["toks"] for r in bpe.bpe_encode(df, merges, out_col="toks").collect()}
-    b = {r["doc_id"]: r["toks"] for r in bpe.bpe_encode(df, loaded, out_col="toks").collect()}
-    assert a == b
-
-
 # --- vocab + token-id materialization (r6) ----------------------------------
 
 
@@ -213,59 +196,3 @@ def test_encode_ids_roundtrip_and_unk(spark):
     }
     assert len(out[3]) == n_toks[3] and -1 in out[3]
     assert out[4] == []  # empty doc survives as an empty array
-
-
-def test_tokenizer_json_round_trip(spark, tmp_path):
-    """export_tokenizer_json → load_tokenizer_json reproduces the
-    merges and vocab exactly, and encoding with the loaded artifact
-    yields identical token ids."""
-    from gedixr_spark.operators.bpe import (
-        bpe_encode_ids,
-        bpe_train,
-        build_vocab,
-        export_tokenizer_json,
-        load_tokenizer_json,
-        word_counts,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "low lower lowest newer newest " * 2) for i in range(4)],
-        "doc_id long, text string",
-    )
-    merges = bpe_train(word_counts(docs), n_merges=12)
-    vocab = build_vocab(docs, merges)
-    path = str(tmp_path / "tokenizer.json")
-    export_tokenizer_json(merges, vocab, path)
-    m2, v2 = load_tokenizer_json(spark, path)
-    assert m2 == merges
-    assert sorted(map(tuple, v2.collect())) == sorted(
-        map(tuple, vocab.select("token", "token_id").collect())
-    )
-    a = bpe_encode_ids(docs, merges, vocab).collect()
-    b = bpe_encode_ids(docs, m2, v2).collect()
-    assert sorted((r["doc_id"], tuple(r["token_ids"])) for r in a) == sorted(
-        (r["doc_id"], tuple(r["token_ids"])) for r in b
-    )
-
-
-def test_tokenizer_json_export_guards(spark, tmp_path):
-    """The JSON artifact's two implicit encodings are guarded (r7
-    ADVICE): duplicate vocab tokens would silently collapse to one id
-    in the dict, and a merge token containing a space cannot round-trip
-    through the 'a b' merge-line encoding — both must raise, not write
-    a corrupt artifact."""
-    from gedixr_spark.operators.bpe import export_tokenizer_json
-
-    dup_vocab = spark.createDataFrame(
-        [("a", 0), ("b", 1), ("a", 2)], "token string, token_id int"
-    )
-    with pytest.raises(ValueError, match="duplicate vocab tokens"):
-        export_tokenizer_json([], dup_vocab, str(tmp_path / "t1.json"))
-
-    ok_vocab = spark.createDataFrame(
-        [("a", 0), ("b", 1)], "token string, token_id int"
-    )
-    with pytest.raises(ValueError, match="contains a space"):
-        export_tokenizer_json(
-            [("a b", "c")], ok_vocab, str(tmp_path / "t2.json")
-        )

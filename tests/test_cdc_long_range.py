@@ -80,171 +80,6 @@ def test_append_runs_split_by_other_ops_keep_exact_semantics(spark, tmp_path):
     assert early == [(1, 1), (2, 2)]
 
 
-def test_index_maintainer_pins_feed_once(spark, tmp_path, monkeypatch):
-    """update_tf_index_from_changes fans the feed out three ways
-    (bounds / added / removed); the feed must be derived ONCE
-    (localCheckpoint), so table_changes is invoked exactly once per
-    refresh."""
-    import gedixr_spark.operators.text as text_mod
-    from gedixr_spark.operators.text import (
-        build_tf_index, update_tf_index_from_changes,
-    )
-    from gedixr_spark.sinks import versioned as vt
-
-    corpus = str(tmp_path / "corpus")
-    idx = str(tmp_path / "idx")
-    init_versioned(spark, corpus)
-    commit_append(
-        spark, corpus,
-        spark.createDataFrame(
-            [Row(doc_id=1, text="alpha beta"), Row(doc_id=2, text="beta gamma")]
-        ),
-    )
-    init_versioned(spark, idx)
-    vt.commit_append(
-        spark, idx,
-        build_tf_index(
-            vt.read_versioned(spark, corpus), text_col="text", id_col="doc_id"
-        ),
-    )
-    commit_upsert(
-        spark, corpus,
-        spark.createDataFrame([Row(doc_id=1, text="alpha delta")]),
-        keys=["doc_id"],
-    )
-    calls = []
-    real = vt.table_changes
-
-    def counting(*a, **kw):
-        calls.append(a)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(vt, "table_changes", counting)
-    update_tf_index_from_changes(
-        spark, idx, corpus, since_version=1,
-        text_col="text", id_col="doc_id",
-    )
-    assert len(calls) == 1
-    # and the maintained index equals a from-scratch rebuild
-    want = sorted(
-        (r["term"], sorted(p["doc_id"] for p in r["postings"]))
-        for r in build_tf_index(
-            vt.read_versioned(spark, corpus),
-            text_col="text", id_col="doc_id",
-        ).collect()
-    )
-    got = sorted(
-        (r["term"], sorted(p["doc_id"] for p in r["postings"]))
-        for r in vt.read_versioned(spark, idx).collect()
-    )
-    assert got == want
-
-
-def test_feed_application_is_idempotent_on_replay(spark, tmp_path):
-    """Crash-replay safety: applying the SAME CDC range twice must
-    leave the index unchanged (doc-keyed retraction) — the property
-    that makes the cursor loop exactly-once end-to-end."""
-    from gedixr_spark.operators.text import (
-        build_tf_index, update_tf_index_from_changes,
-    )
-    from gedixr_spark.sinks import versioned as vt
-
-    corpus = str(tmp_path / "c2")
-    idx = str(tmp_path / "i2")
-    init_versioned(spark, corpus)
-    commit_append(
-        spark, corpus,
-        spark.createDataFrame(
-            [Row(doc_id=1, text="alpha beta"), Row(doc_id=2, text="beta gamma")]
-        ),
-    )
-    init_versioned(spark, idx)
-    vt.commit_append(
-        spark, idx,
-        build_tf_index(
-            vt.read_versioned(spark, corpus), text_col="text", id_col="doc_id"
-        ),
-    )
-    # update doc 1: old term beta retained, alpha dropped, DELTA added
-    commit_upsert(
-        spark, corpus,
-        spark.createDataFrame([Row(doc_id=1, text="beta delta")]),
-        keys=["doc_id"],
-    )
-    commit_delete(spark, corpus, F.col("doc_id") == 2, mode="dv")
-
-    def snapshot():
-        return sorted(
-            (r["term"], r["df"],
-             sorted((p["doc_id"], p["tf"]) for p in r["postings"]))
-            for r in vt.read_versioned(spark, idx).collect()
-        )
-
-    update_tf_index_from_changes(
-        spark, idx, corpus, since_version=1, text_col="text", id_col="doc_id"
-    )
-    first = snapshot()
-    # replay the SAME range (the crash-before-ack case)
-    update_tf_index_from_changes(
-        spark, idx, corpus, since_version=1, text_col="text", id_col="doc_id"
-    )
-    assert snapshot() == first
-    # and the content is right: beta df=1 (doc1), delta df=1, no gamma
-    terms = {t: (d, p) for t, d, p in first}
-    assert terms["beta"] == (1, [(1, 1)])
-    assert terms["delta"] == (1, [(1, 1)])
-    assert "gamma" not in terms and "alpha" not in terms
-
-
-def test_maintain_tf_index_cursor_loop(spark, tmp_path):
-    """The production loop: poll/apply/ack cycles consume the corpus
-    feed exactly once; a second call with nothing new no-ops; two
-    consumer ids are independent."""
-    from gedixr_spark.operators.text import build_tf_index, maintain_tf_index
-    from gedixr_spark.sinks import versioned as vt
-    from gedixr_spark.sinks.cursor import commit_cursor, cursor_position
-
-    corpus = str(tmp_path / "c3")
-    idx = str(tmp_path / "i3")
-    init_versioned(spark, corpus)
-    commit_append(
-        spark, corpus,
-        spark.createDataFrame([Row(doc_id=1, text="alpha beta")]),
-    )
-    init_versioned(spark, idx)
-    vt.commit_append(
-        spark, idx,
-        build_tf_index(
-            vt.read_versioned(spark, corpus), text_col="text", id_col="doc_id"
-        ),
-    )
-    # the index was built from v1 — start its cursor there, not at 0
-    commit_cursor(spark, corpus, "tf_index", 1)
-    commit_upsert(
-        spark, corpus,
-        spark.createDataFrame([Row(doc_id=1, text="alpha delta")]),
-        keys=["doc_id"],
-    )
-    r1 = maintain_tf_index(spark, idx, corpus)
-    assert r1["consumed"] and (r1["from_version"], r1["to_version"]) == (1, 2)
-    assert cursor_position(spark, corpus, "tf_index") == 2
-    # index equals a from-scratch rebuild
-    want = sorted(
-        (r["term"], r["df"])
-        for r in build_tf_index(
-            vt.read_versioned(spark, corpus), text_col="text", id_col="doc_id"
-        ).collect()
-    )
-    got = sorted(
-        (r["term"], r["df"]) for r in vt.read_versioned(spark, idx).collect()
-    )
-    assert got == want
-    # nothing new -> no-op, cursor unmoved
-    r2 = maintain_tf_index(spark, idx, corpus)
-    assert not r2["consumed"]
-    assert cursor_position(spark, corpus, "tf_index") == 2
-
-
 def test_fifty_upsert_range_plans_bounded_scan_legs(spark, tmp_path):
     """r12 VERDICT #3: a catch-up range of N same-keyed DV-free upserts
     must coalesce into ONE scan + ONE counting diff (bounded plan), and

@@ -627,62 +627,6 @@ def test_add_column_validation(spark, tmp_path):
     assert [r["x"] for r in read_versioned(spark, t).collect()] == [None]
 
 
-def test_manifest_columns_sidecar_roundtrips_externally(spark, tmp_path):
-    """A column-mapped snapshot's manifest carries a name-mapping
-    sidecar; an external DuckDB reader applying the per-file rename +
-    default-fill maps reproduces read_versioned exactly. No sidecar =
-    plain parquet is safe."""
-    import json as _json
-    import os
-
-    from gedixr_spark.sinks.versioned import add_column, export_manifest
-
-    t = str(tmp_path / "mext")
-    init_versioned(spark, t)
-    commit_append(
-        spark, t, spark.createDataFrame([Row(k=1, v=10), Row(k=2, v=20)])
-    )
-    m0 = export_manifest(spark, t)
-    assert not os.path.exists(m0.replace(".txt", "-columns.json"))
-    rename_column(spark, t, "v", "val")
-    add_column(spark, t, "tier", "string", default="bronze")
-    commit_append(
-        spark, t, spark.createDataFrame([Row(k=3, val=30, tier="gold")])
-    )
-    m = export_manifest(spark, t)
-    side = m.replace(".txt", "-columns.json")
-    assert os.path.exists(side)
-    meta = _json.loads(open(side).read())
-    con = duckdb.connect()
-    parts = []
-    for fpath in [ln for ln in open(m).read().splitlines() if ln]:
-        ren = meta["renames"][fpath]
-        fill = meta["fills"][fpath]
-        sel = []
-        for c in meta["columns"]:
-            src = next((w for w, l in ren.items() if l == c), None)
-            if src is not None:
-                sel.append(f'"{src}" AS "{c}"')
-            elif c in fill:
-                sel.append(f"{fill[c]!r} AS \"{c}\"")
-            else:
-                sel.append(f'NULL AS "{c}"')
-        parts.append(
-            f"SELECT {', '.join(sel)} FROM read_parquet('{fpath}')"
-        )
-    rows = sorted(
-        tuple(r) for r in con.execute(" UNION ALL ".join(parts)).fetchall()
-    )
-    con.close()
-    want = sorted(
-        tuple(r[c] for c in meta["columns"])
-        for r in read_versioned(spark, t).collect()
-    )
-    assert rows == want
-    assert ("1", ) != rows  # sanity: non-empty comparison happened
-    assert any(r[-1] == "bronze" for r in rows)  # defaults surfaced
-
-
 def test_table_changes_straddling_defaulted_add(spark, tmp_path):
     """A CDC range crossing ADD COLUMN DEFAULT surfaces cap's schema
     with the default filled for pre-add slices — insert rows from

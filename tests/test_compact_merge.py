@@ -178,21 +178,6 @@ def test_merge_upsert_validates(spark, part_table):
         merge_upsert(spark, part_table, ok, keys=["day"], partition_col="day")
 
 
-def test_shard_manifest_rows_bytes_and_ranges(spark, tmp_path):
-    path = str(tmp_path / "shards")
-    df = spark.range(1000).withColumn("v", F.col("id") * 3)
-    df.repartition(5).write.parquet(path)
-    layout.compact_table(spark, path, sort_by=["id"], n_files=4)
-    man = layout.shard_manifest(spark, path, id_col="id").collect()
-    assert len(man) == 4
-    assert sum(r["n_rows"] for r in man) == 1000
-    assert all(r["bytes"] and r["bytes"] > 0 for r in man)
-    # id-clustered layout → manifest ranges are disjoint
-    spans = sorted((r["min_id"], r["max_id"]) for r in man)
-    for (_, hi1), (lo2, _) in zip(spans, spans[1:]):
-        assert hi1 < lo2, spans
-
-
 def test_vacuum_staging_removes_leftovers(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(10).write.parquet(path)
@@ -205,31 +190,6 @@ def test_vacuum_staging_removes_leftovers(spark, tmp_path):
     assert not os.path.exists(path + ".__merging")
     assert spark.read.parquet(path).count() == 10  # target untouched
     assert layout.vacuum_staging(spark, path) == []  # idempotent
-
-
-def test_plan_compaction_flags_fragmented_partitions(spark, tmp_path):
-    # healthy table: exactly one file per partition...
-    part_table = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(i, f"v{i}", i % 3) for i in range(30)], "id long, val string, day int"
-    )
-    base.repartition("day").write.partitionBy("day").parquet(part_table)
-    # ...then fragment day=0 with CDC batches (each rewrite emits
-    # task-count files); day=1/2 stay healthy
-    for batch in range(5):
-        updates = spark.createDataFrame(
-            [(batch * 3 + j, f"b{batch}", 0) for j in range(3)],
-            "id long, val string, day int",
-        )
-        merge_upsert(spark, part_table, updates, keys=["id"], partition_col="day")
-    plan = layout.plan_compaction(spark, part_table, target_mb=128, min_files=4)
-    assert plan, "fragmented partition not flagged"
-    assert all(e["path"].endswith("day=0") for e in plan), plan
-    assert plan[0]["n_files"] >= 4
-    # executing the plan heals it
-    for e in plan:
-        layout.compact_table(spark, e["path"], target_mb=128)
-    assert layout.plan_compaction(spark, part_table, target_mb=128, min_files=4) == []
 
 
 def test_merge_upsert_rejects_duplicate_key_batches(spark, part_table):

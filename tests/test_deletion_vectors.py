@@ -11,7 +11,6 @@ proportional to deleted ROWS, not touched FILES.
 
 from __future__ import annotations
 
-import os
 import random
 
 import duckdb
@@ -27,7 +26,6 @@ from gedixr_spark.sinks.versioned import (
     commit_merge,
     commit_upsert,
     expire_log,
-    export_manifest,
     init_versioned,
     live_delete_vectors,
     live_files,
@@ -298,66 +296,6 @@ def test_shallow_clone_carries_dvs(spark, tmp_path):
     assert _rows(read_versioned(spark, src)) == [
         (k, "s") for k in range(4, 10)
     ]
-
-
-def _manifest_read_duckdb(manifest_path: str):
-    """External-reader reproduction of a manifest snapshot: data files
-    anti-joined against the deletes manifest on (data-file basename,
-    physical row number) — the Iceberg v2 position-delete contract."""
-    con = duckdb.connect()
-    data_files = [
-        ln for ln in open(manifest_path).read().splitlines() if ln
-    ]
-    del_path = manifest_path.replace(".txt", "-deletes.txt")
-    try:
-        if os.path.exists(del_path):
-            dv_files = [
-                ln for ln in open(del_path).read().splitlines() if ln
-            ]
-            q = """
-                SELECT d.k, d.v FROM (
-                  SELECT *,
-                         regexp_extract(filename, '[^/]+$') AS __base,
-                         file_row_number AS __pos
-                  FROM read_parquet(?, filename=true, file_row_number=true)
-                ) d
-                ANTI JOIN (SELECT file, pos FROM read_parquet(?)) x
-                ON d.__base = x.file AND d.__pos = x.pos
-            """
-            rows = con.execute(q, [data_files, dv_files]).fetchall()
-        else:
-            rows = con.execute(
-                "SELECT k, v FROM read_parquet(?)", [data_files]
-            ).fetchall()
-        return sorted(tuple(r) for r in rows)
-    finally:
-        con.close()
-
-
-def test_export_manifest_with_live_dvs_roundtrips(spark, table):
-    """r11 VERDICT #4: live DVs export as a delete manifest instead of
-    refusing; an external DuckDB reader over (data manifest ANTI-JOIN
-    delete manifest) reproduces read_versioned exactly — with and
-    without live DVs."""
-    commit_append(spark, table, _mk(spark, [(1, "a"), (2, "b"), (3, "c")]))
-    commit_delete(spark, table, F.col("k") == 1, mode="dv")
-    m = export_manifest(spark, table)
-    assert os.path.exists(m.replace(".txt", "-deletes.txt"))
-    assert _manifest_read_duckdb(m) == _rows(read_versioned(spark, table))
-    # stacked DVs at a later version
-    commit_delete(spark, table, F.col("k") == 3, mode="dv")
-    m2 = export_manifest(spark, table)
-    assert _manifest_read_duckdb(m2) == _rows(read_versioned(spark, table))
-    assert _manifest_read_duckdb(m2) == [(2, "b")]
-    # purge → DV-free manifest, stale deletes sidecar removed
-    commit_compact(spark, table, purge_dvs=True)
-    m3 = export_manifest(spark, table)
-    assert not os.path.exists(m3.replace(".txt", "-deletes.txt"))
-    assert _manifest_read_duckdb(m3) == [(2, "b")]
-    # time-travel export of the DV version still carries its deletes
-    hist_m = export_manifest(spark, table, version=2)
-    assert os.path.exists(hist_m.replace(".txt", "-deletes.txt"))
-    assert _manifest_read_duckdb(hist_m) == [(2, "b"), (3, "c")]
 
 
 def test_randomized_dv_history_matches_duckdb_replay(spark, tmp_path):

@@ -87,19 +87,3 @@ def test_max_len_guard_names_alternative(spark):
 def test_bad_max_dist_rejected(spark):
     with pytest.raises(ValueError, match="max_dist"):
         edit_distance_pairs(_pairs_df(spark, [(1, "a")]), max_dist=3)
-
-
-def test_edit_distance_dedup_end_to_end(spark):
-    from gedixr_spark.operators.dedup import edit_distance_dedup
-
-    rows = [
-        (1, "flour"), (2, "flout"), (3, "flour "),  # one fuzzy family
-        (4, "zebra"), (5, "zebr"),                  # another
-        (6, "unrelated"),
-    ]
-    out = edit_distance_dedup(
-        _pairs_df(spark, rows), max_dist=1
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    # min-id survivor per component + untouched singleton
-    assert kept == [1, 4, 6]

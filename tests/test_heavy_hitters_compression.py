@@ -90,40 +90,3 @@ def test_compression_ratio_is_map_only(spark, sf_dir):
         .toString()
     )
     assert "Exchange" not in plan, plan
-
-
-def test_unicode_normalize_canonicalizes_and_dedups(spark):
-    """NFKC collapses full-width/ligature variants so exact dedup sees
-    them as duplicates — differential vs stdlib unicodedata."""
-    import unicodedata
-
-    from gedixr_spark.operators import dedup
-    from gedixr_spark.operators.text import unicode_normalize
-
-    rows = [
-        (0, "ABC fi ligature"),
-        (1, "ＡＢＣ ﬁ ligature"),  # full-width + U+FB01
-        (2, "clean\x00control\x07chars\nkept newline"),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"] for r in unicode_normalize(df).collect()}
-    assert out[0] == out[1] == unicodedata.normalize("NFKC", rows[1][1])
-    assert out[2] == "cleancontrolchars\nkept newline"
-    assert out[3] is None
-    # composition: the variants now exact-dedup to one survivor
-    survivors = dedup.exact_dedup(
-        unicode_normalize(df).filter(F.col("text").isNotNull())
-    )
-    kept = {r["doc_id"] for r in survivors.collect()}
-    assert 0 in kept and 1 not in kept
-
-
-def test_unicode_normalize_validates_form(spark):
-    from gedixr_spark.operators.text import unicode_normalize
-
-    df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="form"):
-        unicode_normalize(df, form="NFX")

@@ -95,66 +95,3 @@ def test_state_commit_carries_watermark_atomically(spark, tmp_path):
     last = table_history(spark, state)[-1]
     assert last["op"] == "overwrite"
     assert last["meta"]["source_version"] == 1
-
-
-def test_incremental_sketches_equal_direct(spark, tmp_path):
-    """Maintained distinct and quantile stores == from-scratch sketch
-    of the full source after every refresh (exact merge identity)."""
-    from pyspark.sql import functions as F
-
-    from gedixr_spark.operators.incremental import refresh_incremental_sketches
-    from gedixr_spark.operators.sketches import (
-        distinct_sketches, quantile_sketches, with_estimates,
-    )
-
-    source = str(tmp_path / "src")
-    d_state = str(tmp_path / "dstate")
-    q_state = str(tmp_path / "qstate")
-    init_versioned(spark, source)
-    init_versioned(spark, d_state)
-    init_versioned(spark, q_state)
-
-    def _batch(ids):
-        return spark.createDataFrame(
-            [Row(g="a" if i % 2 == 0 else "b", u=i % 7, doc_id=i, x=float(i))
-             for i in ids]
-        )
-
-    for ids in (range(0, 40), range(40, 70), range(70, 100)):
-        commit_append(spark, source, _batch(ids))
-        refresh_incremental_sketches(
-            spark, source, d_state, ["g"], "u", kind="distinct"
-        )
-        refresh_incremental_sketches(
-            spark, source, q_state, ["g"], "x", kind="quantile", id_col="doc_id",
-            k=32,
-        )
-        full = read_versioned(spark, source)
-        d_got = {
-            r["g"]: r["distinct_est"]
-            for r in with_estimates(read_versioned(spark, d_state)).collect()
-        }
-        d_want = {
-            r["g"]: r["distinct_est"]
-            for r in with_estimates(
-                distinct_sketches(full, ["g"], "u")
-            ).collect()
-        }
-        assert d_got == d_want
-        q_got = {
-            r["g"]: [tuple(x) for x in r["qsketch"]]
-            for r in read_versioned(spark, q_state).collect()
-        }
-        q_want = {
-            r["g"]: [tuple(x) for x in r["qsketch"]]
-            for r in quantile_sketches(
-                full, ["g"], "x", id_col="doc_id", k=32
-            ).collect()
-        }
-        assert q_got == q_want
-
-    # no new data → no-op
-    out = refresh_incremental_sketches(
-        spark, source, d_state, ["g"], "u", kind="distinct"
-    )
-    assert out["n_keys"] is None

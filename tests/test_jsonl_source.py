@@ -93,55 +93,3 @@ def test_blank_means_python_strip_blank(spark, tmp_path):
 
 
 # ---------------------------------------------------------------- CSV
-
-
-def test_csv_quarantine_split(spark, tmp_path):
-    from gedixr_spark.sources.csvq import read_csv_quarantine
-
-    p = tmp_path / "labels.csv"
-    p.write_text(
-        "doc_id,label,score\n"
-        "1,spam,0.9\n"
-        "2,ham,0.1\n"
-        "3,bad_score,not_a_number\n"
-        "4,ok,0.5\n"
-        "\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("label", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    good, bad = read_csv_quarantine(spark, str(p), schema, header=True)
-    rows = {r["doc_id"]: r for r in good.collect()}
-    assert set(rows) == {1, 2, 4}
-    assert rows[1]["label"] == "spam" and rows[1]["score"] == 0.9
-    q = bad.collect()
-    assert len(q) == 1 and "not_a_number" in q[0]["raw"]
-
-
-def test_csv_custom_separator_no_header(spark, tmp_path):
-    from gedixr_spark.sources.csvq import read_csv_quarantine
-
-    p = tmp_path / "d.tsv"
-    p.write_text("1\tx\n2\ty\nbroken_line_without_tab_number\tz\textra\n")
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    good, bad = read_csv_quarantine(spark, str(p), schema, sep="\t")
-    assert {(r["k"], r["v"]) for r in good.collect()} == {(1, "x"), (2, "y")}
-    assert bad.count() == 1
-
-
-def test_csv_whitespace_only_line_is_blank(spark, tmp_path):
-    from gedixr_spark.sources.csvq import read_csv_quarantine
-
-    p = tmp_path / "ws.csv"
-    p.write_text("1,x\n\x0c\n2,y\n", encoding="utf-8")
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    good, bad = read_csv_quarantine(spark, str(p), schema)
-    assert good.count() == 2 and bad.count() == 0

@@ -244,33 +244,3 @@ def test_pruning_report_before_and_after_clustering(spark, tmp_path):
     after = pruning_report(spark, path, "k", 0, 99)
     assert after["n_files"] == 10
     assert after["ratio"] <= 0.2, after  # clustered: ~1 of 10 files
-
-
-def test_append_zordered_keeps_pruning_healthy(spark, tmp_path):
-    from gedixr_spark.operators.layout import (
-        append_zordered_columns,
-        pruning_report,
-        write_zordered_columns,
-    )
-
-    path = str(tmp_path / "zinc")
-    mk = lambda seed_off: spark.range(10_000).select(
-        ((F.col("id") * 7919 + seed_off) % 141).cast("double").alias("x"),
-        ((F.col("id") * 104729 + seed_off) % 141).cast("double").alias("y"),
-    )
-    res = write_zordered_columns(mk(0), path, ["x", "y"], n_files=8, bits=8)
-    gen1 = pruning_report(spark, path, "x", 0.0, 14.0)
-    append_zordered_columns(mk(17), path, ["x", "y"], res["bounds"], n_files=8, bits=8)
-    assert spark.read.parquet(path).count() == 20_000
-    # the appended generation prunes comparably to the first — same
-    # curve, same bounds; range-partition boundaries are sample-derived
-    # per write, so allow one file of slack per generation
-    rep = pruning_report(spark, path, "x", 0.0, 14.0)
-    assert rep["n_files"] == 16
-    gen2_overlap = rep["n_overlapping"] - gen1["n_overlapping"]
-    assert gen2_overlap <= gen1["n_overlapping"] + 1, (gen1, rep)
-    assert rep["ratio"] < 1.0  # layout still prunes across generations
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="bounds missing"):
-        append_zordered_columns(mk(0), path, ["x", "z"], res["bounds"])

@@ -80,49 +80,6 @@ def test_plain_hash_split_does_leak(corpus, clusters):
 # -------------------------------------------------------- build_eval_set
 
 
-def test_eval_set_quota_per_stratum(spark, sf_dir):
-    from gedixr_spark.operators.sampling import build_eval_set
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = build_eval_set(docs, ["lang"], per_stratum=10)
-    sizes = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    avail = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert set(sizes) == set(avail)
-    for lang, n in sizes.items():
-        assert n == min(10, avail[lang]), (lang, n, avail[lang])
-
-
-def test_eval_set_deterministic_and_sticky_under_growth(spark):
-    """Same seed → same set; growing the corpus keeps prior members
-    unless pushed out of the hash top-n (sticky membership)."""
-    from gedixr_spark.operators.sampling import build_eval_set
-
-    base = spark.createDataFrame(
-        [(i, "s") for i in range(50)], "doc_id long, stratum string"
-    )
-    grown = spark.createDataFrame(
-        [(i, "s") for i in range(80)], "doc_id long, stratum string"
-    )
-    pick = lambda df: {r["doc_id"] for r in build_eval_set(df, ["stratum"], 10).collect()}
-    a, b = pick(base), pick(base)
-    assert a == b and len(a) == 10
-    g = pick(grown)
-    # every base doc still selected in the grown corpus was already
-    # selected before (new docs can only push members out, not swap
-    # arbitrary ones in)
-    assert g & set(range(50)) <= a
-
-
-def test_eval_set_validates(spark):
-    from gedixr_spark.operators.sampling import build_eval_set
-
-    df = spark.createDataFrame([(1, "s")], "doc_id long, stratum string")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="per_stratum"):
-        build_eval_set(df, ["stratum"], per_stratum=0)
-
-
 # --- bottom-k deterministic sample -----------------------------------------
 
 

@@ -1,12 +1,8 @@
-"""Multimodal binary plumbing + Structured Streaming variants."""
+"""Multimodal binary plumbing."""
 
-import datetime
-
-import pytest
 from pyspark.sql import functions as F
 
 from gedixr_spark.operators import multimodal
-from gedixr_spark.streaming import events as st
 
 
 def _docs(spark):
@@ -23,392 +19,3 @@ def test_attach_payload_schema(spark):
     r = df.filter(F.col("doc_id") == 1).first()
     assert len(r["payload"]) == 16  # md5 digest bytes
     assert r["media_meta"]["media_type"] == "image/fake"
-
-
-def test_extract_features_mapinpandas(spark):
-    feats = multimodal.extract_features(multimodal.attach_fake_payload(_docs(spark)))
-    rows = {r["doc_id"]: r for r in feats.collect()}
-    assert rows[1]["n_bytes"] == 16
-    assert rows[1]["decode_status"] == "stub"
-    assert sum(rows[1]["byte_histogram4"]) == 16
-    assert 0.0 <= rows[1]["mean_byte"] <= 255.0
-
-
-def test_resize_shape_contract(spark):
-    df = multimodal.attach_fake_payload(_docs(spark))
-    rows = {r["doc_id"]: r for r in multimodal.resize_images(df, 8, 4).collect()}
-    # every payload resized to exactly w*h bytes; deterministic fake codec
-    assert all(len(r["payload"]) == 32 for r in rows.values())
-    assert all(r["width"] == 8 and r["height"] == 4 for r in rows.values())
-    # cycle semantics: first 16 bytes == original md5 payload
-    src = {r["doc_id"]: r["payload"] for r in df.collect()}
-    assert rows[1]["payload"][:16] == src[1]
-    assert rows[1]["payload"][16:] == src[1]  # cycled
-
-
-def test_resize_rejects_bad_dims(spark):
-    df = multimodal.attach_fake_payload(_docs(spark))
-    with pytest.raises(ValueError):
-        multimodal.resize_images(df, 0, 4)
-
-
-def test_frame_sample_explodes_rows(spark):
-    df = multimodal.attach_fake_payload(_docs(spark))  # 16-byte payloads
-    out = multimodal.sample_frames(df, every_n=2, frame_size=4)
-    rows = [r for r in out.collect() if r["doc_id"] == 1]
-    # 4 frames of 4 bytes, every 2nd -> frames 0 and 2
-    assert sorted(r["frame_idx"] for r in rows) == [0, 2]
-    src = {r["doc_id"]: r["payload"] for r in df.collect()}
-    by_idx = {r["frame_idx"]: r["frame"] for r in rows}
-    assert by_idx[0] == src[1][0:4] and by_idx[2] == src[1][8:12]
-
-
-def test_frame_sample_drops_partial_trailing_frame(spark):
-    df = multimodal.attach_fake_payload(_docs(spark))
-    out = multimodal.sample_frames(df, every_n=1, frame_size=5)  # 16 // 5 = 3
-    n = len([r for r in out.collect() if r["doc_id"] == 1])
-    assert n == 3
-
-
-@pytest.fixture()
-def event_dir(spark, tmp_path):
-    ts0 = datetime.datetime(2024, 1, 1)
-    rows = [
-        (1, ts0, 1, "click", 1.0),
-        (2, ts0 + datetime.timedelta(minutes=10), 1, "view", 2.0),
-        (3, ts0 + datetime.timedelta(hours=2), 2, "click", 3.0),
-        # watermark sentinel: pushes event-time far past the sessions
-        # above so append-mode emits them in the no-data finalization
-        # micro-batch
-        (99, ts0 + datetime.timedelta(hours=10), 9, "click", 0.0),
-    ]
-    df = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value"])
-    p = str(tmp_path / "stream_in")
-    df.write.parquet(p)
-    return p, df.schema
-
-
-def test_streaming_tumbling_counts(spark, event_dir):
-    path, schema = event_dir
-    stream = st.read_event_stream(spark, path, schema)
-    assert stream.isStreaming
-    agg = st.streaming_tumbling_counts(stream, width="1 hour")
-    rows = st.run_available_now(agg, "t_tumble", output_mode="complete")
-    got = {(r["window_start"], r["event_type"]): r["n_events"] for r in rows}
-    ts0 = datetime.datetime(2024, 1, 1)
-    assert got[(ts0, "click")] == 1 and got[(ts0, "view")] == 1
-    assert got[(ts0 + datetime.timedelta(hours=2), "click")] == 1
-
-
-def test_streaming_sliding_counts(spark, event_dir):
-    path, schema = event_dir
-    stream = st.read_event_stream(spark, path, schema)
-    agg = st.streaming_sliding_counts(stream, width="2 hours", slide="1 hour")
-    rows = st.run_available_now(agg, "t_slide", output_mode="complete")
-    got = {r["window_start"]: (r["n_events"], r["sum_value"]) for r in rows}
-    ts0 = datetime.datetime(2024, 1, 1)
-    h = datetime.timedelta(hours=1)
-    # events at 0:00, 0:10 land in windows starting -1:00 and 0:00;
-    # the 2:00 event in windows starting 1:00 and 2:00
-    assert got[ts0 - h] == (2, 3.0)
-    assert got[ts0] == (2, 3.0)
-    assert got[ts0 + h] == (1, 3.0)
-    assert got[ts0 + 2 * h][0] == 1
-    # streaming result == batch sliding_agg on the same data (minus the
-    # sentinel-only windows both engines also emit)
-    from gedixr_spark.operators.events import sliding_agg
-
-    batch = {
-        r["window_start"]: (r["n_events"], r["sum_value"])
-        for r in sliding_agg(spark.read.schema(schema).parquet(path), 120, 60).collect()
-    }
-    assert batch == got
-
-
-def test_streaming_distinct_users_matches_batch_sketch(spark, tmp_path):
-    """Per-window approx distinct users across MULTIPLE micro-batches
-    (maxFilesPerTrigger=1 forces cross-batch sketch merges) must equal
-    the batch twin exactly: HLL++ register merge is order-free, so the
-    micro-batch partial order can't change the estimate."""
-    ts0 = datetime.datetime(2024, 1, 1)
-    rows = [
-        (i, ts0 + datetime.timedelta(minutes=(i * 7) % 120), i % 37, "click", 1.0)
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, ["event_id", "ts", "user_id", "event_type", "value"]
-    )
-    path = str(tmp_path / "stream_in")
-    # three files → three micro-batches
-    df.repartition(3).write.parquet(path)
-
-    stream = st.read_event_stream(spark, path, df.schema, max_files_per_trigger=1)
-    agg = st.streaming_distinct_users(stream, width="1 hour")
-    got = {
-        r["window_start"]: r["n_users_est"]
-        for r in st.run_available_now(agg, "t_distinct", output_mode="complete")
-    }
-
-    want = {
-        r["window_start"]: r["n_users_est"]
-        for r in (
-            df.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.approx_count_distinct("user_id", 0.05).alias("n_users_est"))
-            .select(F.col("w.start").alias("window_start"), "n_users_est")
-            .collect()
-        )
-    }
-    assert got == want
-    # sanity: estimates close to exact distinct counts
-    exact = {
-        r["window_start"]: r["n"]
-        for r in (
-            df.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.countDistinct("user_id").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-            .collect()
-        )
-    }
-    for w, est in got.items():
-        assert abs(est - exact[w]) <= max(2, 0.15 * exact[w]), (w, est, exact[w])
-
-
-def test_streaming_custom_stateful_user_totals(spark, event_dir):
-    """applyInPandasWithState: running per-user totals must survive
-    ACROSS micro-batches (maxFilesPerTrigger=1 forces several), and the
-    final update per user must equal the batch aggregation."""
-    path, schema = event_dir
-    stream = st.read_event_stream(spark, path, schema, max_files_per_trigger=1)
-    totals = st.streaming_user_totals(stream)
-    rows = st.run_available_now(totals, "t_state", output_mode="update")
-    # update mode appends one row per (batch, touched user); the final
-    # state per user is the row with the max n_events
-    final = {}
-    for r in rows:
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[0]:
-            final[r["user_id"]] = (r["n_events"], r["sum_value"])
-    import pyspark.sql.functions as F
-
-    batch = {
-        r["user_id"]: (r["n"], float(r["s"]))
-        for r in spark.read.schema(schema).parquet(path)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"))
-        .collect()
-    }
-    assert final == batch and len(final) >= 2
-
-
-def test_streaming_sessionize(spark, event_dir):
-    path, schema = event_dir
-    stream = st.read_event_stream(spark, path, schema)
-    sess = st.streaming_sessionize(stream, gap="30 minutes", watermark="30 minutes")
-    rows = st.run_available_now(sess, "t_sess", output_mode="append")
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    # user 1: events 10 min apart merge into one session of 2
-    assert len(by_user.get(1, [])) == 1 and by_user[1][0]["n_events"] == 2
-    assert len(by_user.get(2, [])) == 1 and by_user[2][0]["n_events"] == 1
-
-
-def test_audio_features_real_pcm(spark):
-    import numpy as np
-
-    from gedixr_spark.operators import multimodal as mm
-
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "another doc")], "doc_id long, text string"
-    )
-    feats = {r["doc_id"]: r for r in mm.audio_features(mm.attach_fake_audio(docs)).collect()}
-    assert feats[1]["n_samples"] == 512  # 32 hex chars x64 -> 1024 bytes -> 512 int16
-    assert abs(feats[1]["duration_s"] - 512 / 16_000) < 1e-12
-    assert 0.0 < feats[1]["rms"] < 1.0 and 0.0 < feats[1]["zero_crossing_rate"] <= 1.0
-    # deterministic: identical text -> identical features
-    again = {
-        r["doc_id"]: r for r in mm.audio_features(mm.attach_fake_audio(docs)).collect()
-    }
-    assert again[1]["rms"] == feats[1]["rms"]
-
-
-def test_resample_audio_halves_and_roundtrips_rate(spark):
-    import numpy as np
-
-    from gedixr_spark.operators import multimodal as mm
-
-    docs = spark.createDataFrame([(1, "resample me")], "doc_id long, text string")
-    audio = mm.attach_fake_audio(docs)
-    down = mm.resample_audio(audio, 8_000).collect()[0]
-    assert down["sample_rate"] == 8_000
-    assert abs(down["n_samples"] - 256) <= 1
-    assert len(down["audio"]) == 2 * down["n_samples"]
-    # a constant signal resamples to the same constant
-    const = np.full(100, 1234, dtype="<i2").tobytes()
-    cdf = spark.createDataFrame(
-        [(7, const, {"media_type": "audio/pcm16le", "sample_rate": 16_000, "n_channels": 1})],
-        "doc_id long, audio binary, audio_meta struct<media_type:string,sample_rate:int,n_channels:int>",
-    )
-    out = mm.resample_audio(cdf, 8_000).collect()[0]
-    vals = np.frombuffer(out["audio"], dtype="<i2")
-    assert (vals == 1234).all()
-
-
-def test_streaming_asof_enrich_carries_state_across_batches(spark, tmp_path):
-    """Streaming as-of (applyInPandasWithState): carry state must
-    survive micro-batch boundaries (maxFilesPerTrigger=1), in-batch
-    ties must follow the strict tag rule, and the drained result must
-    equal batch asof_join on the same data."""
-    ts0 = datetime.datetime(2024, 1, 1)
-
-    def m(minutes):
-        return ts0 + datetime.timedelta(minutes=minutes)
-
-    lp, rp = str(tmp_path / "asof_left"), str(tmp_path / "asof_right")
-    lschema = "event_id long, ts timestamp, user_id long"
-    rschema = "user_id long, ts timestamp, value double"
-    # batch 1 files (earlier data)
-    spark.createDataFrame(
-        [(10, m(1), 2), (1, m(10), 1), (2, m(20), 1)], lschema
-    ).coalesce(1).write.mode("append").parquet(lp)
-    spark.createDataFrame([(1, m(5), 1.0)], rschema).coalesce(1).write.mode(
-        "append"
-    ).parquet(rp)
-    import time
-
-    time.sleep(1.1)  # distinct mtimes → deterministic file order
-    # batch 2 files (later data): right at 35 must serve left at 40;
-    # u2's first right arrives here and serves the 55-min left only
-    spark.createDataFrame([(3, m(40), 1), (11, m(55), 2)], lschema).coalesce(
-        1
-    ).write.mode("append").parquet(lp)
-    spark.createDataFrame(
-        [(1, m(35), 2.0), (2, m(50), 9.0)], rschema
-    ).coalesce(1).write.mode("append").parquet(rp)
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    lstream = st.read_event_stream(
-        spark, lp, _parse_datatype_string(lschema), max_files_per_trigger=1
-    )
-    rstream = st.read_event_stream(
-        spark, rp, _parse_datatype_string(rschema), max_files_per_trigger=1
-    )
-    enriched = st.streaming_asof_enrich(lstream, rstream)
-    rows = st.run_available_now(enriched, "t_asof", output_mode="append")
-    got = {r["event_id"]: (r["asof_ts"], r["asof_value"]) for r in rows}
-    assert len(got) == 5
-    assert got[10] == (None, None) or (
-        got[10][0] is None and (got[10][1] is None or got[10][1] != got[10][1])
-    )  # no right yet for u2
-    assert got[1] == (m(5), 1.0)
-    assert got[2] == (m(5), 1.0)
-    assert got[3] == (m(35), 2.0)  # in-batch right beats batch-1 carry
-    assert got[11] == (m(50), 9.0)  # u2 carry arrives in batch 2
-
-    # equivalence with the batch operator on the full data
-    from gedixr_spark.operators.events import asof_join
-
-    lb = spark.read.schema(lschema).parquet(lp)
-    rb = spark.read.schema(rschema).parquet(rp)
-    want = {
-        r["event_id"]: (r["asof_ts"], r["asof_value"])
-        for r in asof_join(lb, rb).collect()
-    }
-
-    def norm(v):
-        ts, p = v
-        return (ts, None if p is None or p != p else p)
-
-    assert {k: norm(v) for k, v in got.items()} == {
-        k: norm(v) for k, v in want.items()
-    }
-
-
-def test_stream_static_dim_enrichment(spark, event_dir):
-    """Stream-static join: a micro-batch stream enriched against a
-    static broadcast dimension — Spark re-plans the join per batch, so
-    the static side needs no watermark/state. The remaining streaming
-    join shape next to the as-of and stateful operators."""
-    path, schema = event_dir
-    users = spark.createDataFrame(
-        [(1, "alice"), (2, "bob"), (9, "sentinel")], ["user_id", "name"]
-    )
-    stream = st.read_event_stream(spark, path, schema)
-    enriched = stream.join(F.broadcast(users), "user_id", "left")
-    rows = st.run_available_now(enriched, "t_dim", output_mode="append")
-    by_event = {r["event_id"]: r["name"] for r in rows}
-    assert by_event[1] == "alice" and by_event[2] == "alice"
-    assert by_event[3] == "bob" and by_event[99] == "sentinel"
-    assert len(rows) == 4
-
-
-def test_streaming_window_join_matches_batch(spark, tmp_path):
-    """Native stream-stream window join across micro-batch boundaries
-    (maxFilesPerTrigger=1): with a horizon-covering watermark the
-    drained result equals the identical join predicate on static
-    frames — including a pair whose two halves arrive in DIFFERENT
-    micro-batches (the buffered-state path)."""
-    ts0 = datetime.datetime(2024, 1, 1)
-
-    def m(minutes):
-        return ts0 + datetime.timedelta(minutes=minutes)
-
-    lp, rp = str(tmp_path / "swj_left"), str(tmp_path / "swj_right")
-    lschema = "event_id long, ts timestamp, user_id long"
-    rschema = "click_id long, ts timestamp, user_id long"
-    # batch 1: left rows for u1/u2; one right for u1 inside the bound
-    spark.createDataFrame(
-        [(1, m(0), 1), (2, m(5), 2)], lschema
-    ).coalesce(1).write.mode("append").parquet(lp)
-    spark.createDataFrame([(100, m(10), 1)], rschema).coalesce(1).write.mode(
-        "append"
-    ).parquet(rp)
-    import time
-
-    time.sleep(1.1)  # distinct mtimes → deterministic file order
-    # batch 2: u2's click arrives ONE BATCH LATER than its impression
-    # (cross-batch buffered match); u1 gets a too-late click (> within)
-    spark.createDataFrame([(3, m(40), 1)], lschema).coalesce(1).write.mode(
-        "append"
-    ).parquet(lp)
-    spark.createDataFrame(
-        [(101, m(20), 2), (102, m(90), 1)], rschema
-    ).coalesce(1).write.mode("append").parquet(rp)
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    lstream = st.read_event_stream(
-        spark, lp, _parse_datatype_string(lschema), max_files_per_trigger=1
-    )
-    rstream = st.read_event_stream(
-        spark, rp, _parse_datatype_string(rschema), max_files_per_trigger=1
-    )
-    joined = st.streaming_window_join(
-        lstream, rstream, within="30 minutes", watermark="10 hours"
-    )
-    rows = st.run_available_now(joined, "t_swjoin", output_mode="append")
-    got = sorted((r["l_event_id"], r["r_click_id"]) for r in rows)
-    # u1: (1 @0) x (100 @10) in-bound; (3 @40) x (102 @90) too late?
-    # 90-40=50 > 30 -> no. (1,102): 90 > 30 -> no. u2: (2 @5) x (101 @20).
-    assert got == [(1, 100), (2, 101)]
-
-    # batch twin: identical predicate on the static frames
-    lb = spark.read.schema(lschema).parquet(lp)
-    rb = spark.read.schema(rschema).parquet(rp)
-    import pyspark.sql.functions as SF
-
-    want = sorted(
-        (r["event_id"], r["click_id"])
-        for r in lb.alias("l")
-        .join(
-            rb.alias("r"),
-            (SF.col("l.user_id") == SF.col("r.user_id"))
-            & (SF.col("r.ts") >= SF.col("l.ts"))
-            & (SF.col("r.ts") <= SF.col("l.ts") + SF.expr("INTERVAL 30 minutes")),
-        )
-        .select(SF.col("l.event_id"), SF.col("r.click_id"))
-        .collect()
-    )
-    assert got == want

@@ -147,27 +147,6 @@ def test_ivf_pq_nprobe_superset(spark):
     assert one <= two and len(two) > len(one)
 
 
-def test_train_ivf_pq_runs_and_plugs_in(spark):
-    from pyspark.sql import functions as F
-
-    from gedixr_spark.operators.similarity import (
-        ivf_centroids,
-        ivf_pq_ann_topk,
-        train_ivf_pq,
-    )
-
-    df = _emb_df(spark, n=60, dim=8, seed=4)
-    cen = ivf_centroids(8, 4, seed=7)
-    cbs = train_ivf_pq(df, cen, m=2, ksub=4, n_iter=2)
-    assert len(cbs) == 2 and len(cbs[0]) == 4 and len(cbs[0][0]) == 4
-    out = ivf_pq_ann_topk(
-        df.filter(F.col("vec_id") < 2), df, k=3,
-        centroids=cen, codebooks=cbs, dim=8, n_cells=4,
-    )
-    rows = out.collect()
-    assert all(r["rank"] <= 3 for r in rows)
-
-
 def test_pq_scale_must_divide_codebook_scale(spark):
     """ADVICE r4: non-default scale used to silently mis-scale ADC; now
     the lift is derived (10000//scale) and non-divisors error."""
@@ -179,54 +158,3 @@ def test_pq_scale_must_divide_codebook_scale(spark):
     for bad in (0, -5, 300, 20_000):
         with pytest.raises(ValueError, match="divisor"):
             _pq_lift(bad)
-
-
-def test_pq_codebook_persistence_roundtrip(spark, tmp_path):
-    """save/load_pq_codebooks: the index artifact round-trips exactly
-    and reproduces identical codes — train once, encode anywhere."""
-    cbs = sim.pq_codebooks(dim=8, m=2, ksub=4, seed=5)
-    path = str(tmp_path / "codebooks.parquet")
-    sim.save_pq_codebooks(spark, cbs, path)
-    loaded = sim.load_pq_codebooks(spark, path)
-    assert loaded == cbs
-    df = spark.createDataFrame(
-        [(i, [float(i + j) / 7 for j in range(8)]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    a = {r["vec_id"]: r["c"] for r in df.select("vec_id", sim.pq_codes("embedding", cbs).alias("c")).collect()}
-    b = {r["vec_id"]: r["c"] for r in df.select("vec_id", sim.pq_codes("embedding", loaded).alias("c")).collect()}
-    assert a == b
-
-
-def test_full_ivf_pq_index_persistence_roundtrip(spark, tmp_path):
-    """The complete index artifact — IVF centroids (save_centroids) +
-    residual PQ codebooks (save_pq_codebooks) — persists and reloads
-    into BIT-IDENTICAL ivf_pq_ann_topk results: the train-once /
-    serve-everywhere contract for the 100 TB vector store."""
-    rng = np.random.default_rng(11)
-    dim, n = 8, 80
-    rows = [
-        (i, [float(v) for v in (2.0 + rng.standard_normal(dim))]) for i in range(n)
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(rows[::17][:4], "vec_id long, embedding array<double>")
-
-    cents = sim.ivf_centroids(dim=dim, n_cells=4, seed=3)
-    cbs = sim.train_ivf_pq(corpus, cents, m=2, ksub=4, n_iter=3)
-
-    sim.save_centroids(spark, cents, str(tmp_path / "cent"))
-    sim.save_pq_codebooks(spark, cbs, str(tmp_path / "cb"))
-    cents2 = sim.load_centroids(spark, str(tmp_path / "cent"))
-    cbs2 = sim.load_pq_codebooks(spark, str(tmp_path / "cb"))
-    assert cents2 == cents and cbs2 == cbs
-
-    def run(c, b):
-        return sorted(
-            tuple(r)
-            for r in sim.ivf_pq_ann_topk(
-                queries, corpus, k=3, centroids=c, codebooks=b,
-                nprobe=2, dim=dim, n_cells=4,
-            ).collect()
-        )
-
-    assert run(cents, cbs) == run(cents2, cbs2)

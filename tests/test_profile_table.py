@@ -141,82 +141,3 @@ def test_histogram_constant_and_validation(spark):
     allnull = spark.createDataFrame([(None,)], "x double")
     with _pytest.raises(ValueError, match="all-null"):
         histogram(allnull, "x")
-
-
-def test_correlation_matrix_matches_duckdb(spark, sf_dir):
-    from gedixr_spark.operators.stats import correlation_matrix
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    got = {
-        (r["col_a"], r["col_b"]): r["corr"]
-        for r in correlation_matrix(
-            orders, ["o_orderkey", "o_custkey", "o_totalprice"]
-        ).collect()
-    }
-    assert len(got) == 3
-    for (a, b), v in got.items():
-        want = duckdb.sql(
-            f"SELECT corr({a}, {b}) FROM '{sf_dir}/orders.parquet'"
-        ).fetchone()[0]
-        assert v == pytest.approx(want, rel=1e-9)
-
-
-def test_correlation_matrix_single_pass_plan(spark, sf_dir):
-    from gedixr_spark.operators.stats import correlation_matrix
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    plan = (
-        correlation_matrix(orders, ["o_orderkey", "o_custkey", "o_totalprice"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Scan parquet") == 1
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match=">= 2"):
-        correlation_matrix(orders, ["o_orderkey"])
-
-
-def test_outlier_flags_zscore_and_iqr(spark):
-    from gedixr_spark.operators.stats import outlier_flags
-
-    rows = [(float(i),) for i in range(100)] + [(10_000.0,), (None,)]
-    df = spark.createDataFrame(rows, "x double")
-    z = {r["x"]: r["is_outlier"] for r in outlier_flags(df, "x", "zscore").collect()}
-    assert z[10_000.0] is True
-    assert z[50.0] is False and z[None] is False
-    i = {r["x"]: r["is_outlier"] for r in outlier_flags(df, "x", "iqr", 1.5).collect()}
-    assert i[10_000.0] is True and i[50.0] is False
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="method"):
-        outlier_flags(df, "x", "mad")
-
-
-def test_outlier_flags_degenerate_inputs(spark):
-    from gedixr_spark.operators.stats import outlier_flags
-
-    allnull = spark.createDataFrame([(None,), (None,)], "x double")
-    assert all(
-        r["is_outlier"] is False for r in outlier_flags(allnull, "x").collect()
-    )
-    single = spark.createDataFrame([(5.0,)], "x double")
-    assert outlier_flags(single, "x").collect()[0]["is_outlier"] is False
-
-
-def test_histogram_by_group_shared_grid(spark):
-    from gedixr_spark.operators.stats import histogram_by_group
-
-    df = spark.createDataFrame(
-        [("a", float(i)) for i in range(10)] + [("b", 9.0), ("b", 0.0)],
-        "g string, x double",
-    )
-    rows = histogram_by_group(df, "x", "g", n_bins=5).collect()
-    # dense spine: 2 groups × 5 bins
-    assert len(rows) == 10
-    by = {(r["group"], r["bin"]): r["n_rows"] for r in rows}
-    assert sum(v for (g, _), v in by.items() if g == "a") == 10
-    assert by[("b", 0)] == 1 and by[("b", 4)] == 1
-    assert by[("b", 2)] == 0  # empty cell present
-    # shared grid: identical bin edges across groups
-    edges = {(r["bin"], r["bin_lo"], r["bin_hi"]) for r in rows}
-    assert len(edges) == 5

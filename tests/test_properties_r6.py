@@ -1,12 +1,10 @@
 """Property-based laws for the round-6 operators: edit-distance join
-completeness+soundness vs brute force, KMV merge identity under
-arbitrary grouping, PageRank mass conservation."""
+completeness+soundness vs brute force, PageRank mass conservation."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 SETTINGS = dict(
     max_examples=6,
@@ -52,30 +50,6 @@ def test_edit_distance_join_equals_bruteforce(spark, words, k):
             if d <= k:
                 want.add((ia, ib, d))
     assert got == want
-
-
-@given(
-    values=st.lists(st.integers(0, 300), min_size=1, max_size=120),
-    n_groups=st.integers(1, 4),
-)
-@settings(**SETTINGS)
-def test_kmv_merge_identity_any_grouping(spark, values, n_groups):
-    """Bottom-k distinct sketches merge EXACTLY: however the data is
-    split into groups, merging the per-group sketches equals the
-    direct sketch of everything."""
-    from gedixr_spark.operators.sketches import (
-        kmv_distinct_sketches, kmv_merge_sketches,
-    )
-
-    rows = [(v % n_groups, f"v{v}") for v in values]
-    df = spark.createDataFrame(rows, "g int, u string")
-    direct = kmv_distinct_sketches(
-        df.withColumn("g", F.lit(0)), ["g"], "u", k=16
-    ).collect()[0]["kmv"]
-    merged = kmv_merge_sketches(
-        kmv_distinct_sketches(df, ["g"], "u", k=16), [], k=16
-    ).collect()[0]["kmv"]
-    assert list(merged) == list(direct)
 
 
 @given(

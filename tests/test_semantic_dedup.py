@@ -116,21 +116,6 @@ def test_semantic_dedup_no_pairs_is_identity(spark):
     assert sim.semantic_dedup(df, k=3, threshold=0.9999).count() == 12
 
 
-def test_component_stats_histogram(spark):
-    """component_stats: sizes histogram over CC output; the giant-
-    component pathology is visible as a single large-size row."""
-    from gedixr_spark.operators import dedup
-
-    pairs = spark.createDataFrame(
-        # one 4-clique (0-1-2-3) and two pairs (10,11), (20,21)
-        [(0, 1), (1, 2), (2, 3), (10, 11), (20, 21)],
-        "id_a long, id_b long",
-    )
-    clusters = dedup.dedup_clusters(pairs)
-    got = {r["size"]: (r["n_components"], r["n_docs"]) for r in dedup.component_stats(clusters).collect()}
-    assert got == {4: (1, 4), 2: (2, 4)}
-
-
 def test_degenerate_mega_cluster_raises_with_named_alternative(spark):
     """All-identical vectors collapse into one k-means cluster (and
     one LSH sub-bucket — the sub-key can't split identical vectors),

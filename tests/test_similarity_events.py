@@ -86,13 +86,6 @@ def test_session_stats(spark):
     assert by_key[(2, 1)]["sum_value"] == 9.0
 
 
-def test_tumbling_agg_buckets_by_hour(spark):
-    out = events.tumbling_agg(_events(spark), width="hour").collect()
-    assert {r["window_start"] for r in out} == {TS0}
-    total = sum(r["n_events"] for r in out)
-    assert total == 5
-
-
 def test_sliding_agg_two_buckets_per_event(spark):
     out = events.sliding_agg(_events(spark)).collect()
     # every event lands in its hour and the previous hour

@@ -213,184 +213,10 @@ def test_bloom_semi_join_null_keys_behave_like_semijoin(spark):
     assert got == want == [1]
 
 
-def test_sliding_distinct_matches_naive_per_window(spark, sf_dir):
-    """Sketch-union sliding distinct == the naive per-window
-    approx_count_distinct with the same window assignment (identical
-    HLL algorithm + lossless union ⇒ identical estimates), and both
-    are near the exact distinct counts."""
-    from gedixr_spark.contract_ext import load_events
-
-    events = load_events(spark, sf_dir)
-    width, slide = 720, 360  # 12h windows sliding 6h
-    naive = (
-        events.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.timestamp_micros(
-                            F.unix_micros("ts")
-                            - (F.unix_micros("ts") % (slide * 60_000_000))
-                            - j * slide * 60_000_000
-                        )
-                        for j in range(width // slide)
-                    ]
-                )
-            ).alias("window_start"),
-            "user_id",
-        )
-        .groupBy("window_start")
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12))).alias("est"))
-    )
-    want = {r["window_start"]: r["est"] for r in naive.collect()}
-    got = {
-        r["window_start"]: r["distinct_est"]
-        for r in sk.sliding_distinct(
-            events, "user_id", width_minutes=width, slide_minutes=slide
-        ).collect()
-    }
-    assert got == want
-    exact = (
-        events.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.timestamp_micros(
-                            F.unix_micros("ts")
-                            - (F.unix_micros("ts") % (slide * 60_000_000))
-                            - j * slide * 60_000_000
-                        )
-                        for j in range(width // slide)
-                    ]
-                )
-            ).alias("window_start"),
-            "user_id",
-        )
-        .groupBy("window_start")
-        .agg(F.countDistinct("user_id").alias("n"))
-    )
-    for r in exact.collect():
-        assert got[r["window_start"]] == pytest.approx(r["n"], rel=0.06)
-
-
-def test_sliding_distinct_validates(spark, sf_dir):
-    from gedixr_spark.contract_ext import load_events
-
-    with pytest.raises(ValueError, match="width >= slide"):
-        sk.sliding_distinct(
-            load_events(spark, sf_dir), "user_id", width_minutes=30, slide_minutes=60
-        )
-
-
 # --- count-min sketch ------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def lineitem(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-
-
-def test_cms_estimate_bounds(lineitem):
-    """est >= truth always; est <= truth + eps*N with the matrix sized
-    so the slack is tight on this cardinality."""
-    li = lineitem.limit(20000).cache()
-    n = li.count()
-    sketch = sk.cms_build(li, "l_suppkey", width=1 << 12, depth=4)
-    exact = li.groupBy("l_suppkey").count().withColumnRenamed("count", "truth")
-    est = sk.cms_estimate(exact, "l_suppkey", sketch)
-    bad_under = est.filter(F.col("freq_est") < F.col("truth")).count()
-    assert bad_under == 0
-    # eps = e/width; allow the full theoretical slack
-    eps_n = int(2.7182818 * n / (1 << 12)) + 1
-    bad_over = est.filter(F.col("freq_est") > F.col("truth") + eps_n).count()
-    assert bad_over == 0
-    li.unpersist()
-
-
-def test_cms_exact_when_sparse(spark):
-    """Few distinct keys vs a wide matrix: collisions are practically
-    impossible at every depth, so min-over-rows is exact."""
-    df = spark.range(0, 1000).select(
-        (F.col("id") % 7).cast("string").alias("k")
-    )
-    sketch = sk.cms_build(df, "k", width=1 << 12, depth=4)
-    exact = df.groupBy("k").count().withColumnRenamed("count", "truth")
-    est = sk.cms_estimate(exact, "k", sketch)
-    assert est.filter(F.col("freq_est") != F.col("truth")).count() == 0
-
-
-def test_cms_merge_equals_direct(lineitem):
-    """Mergeability is EXACT: build(A)+build(B) == build(A ∪ B) cell
-    for cell — the per-batch maintenance identity."""
-    li = lineitem.limit(8000).cache()
-    half_a = li.filter(F.col("l_orderkey") % 2 == 0)
-    half_b = li.filter(F.col("l_orderkey") % 2 == 1)
-    merged = sk.cms_merge(
-        sk.cms_build(half_a, "l_suppkey", width=1 << 10, depth=3),
-        sk.cms_build(half_b, "l_suppkey", width=1 << 10, depth=3),
-    )
-    direct = sk.cms_build(li, "l_suppkey", width=1 << 10, depth=3)
-    assert merged == direct
-    li.unpersist()
-
-
-def test_cms_join_size_estimate(orders, customer):
-    """CMS inner product >= true equi-join size and within the
-    theoretical slack — the planner probe that never scans the table."""
-    o = orders.limit(5000).cache()
-    c = customer.limit(2000).cache()
-    so = sk.cms_build(o, "o_custkey", width=1 << 12, depth=4)
-    sc = sk.cms_build(c, "c_custkey", width=1 << 12, depth=4)
-    est = sk.cms_join_size(so, sc)
-    true_size = o.join(
-        c.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-    ).count()
-    assert est >= true_size
-    slack = 2.7182818 * o.count() * c.count() / (1 << 12)
-    assert est <= true_size + slack
-    o.unpersist(); c.unpersist()
-
-
-def test_cms_param_validation(spark):
-    df = spark.range(3).select(F.col("id").cast("string").alias("k"))
-    with pytest.raises(ValueError, match="power of two"):
-        sk.cms_build(df, "k", width=100, depth=2)
-    with pytest.raises(ValueError, match="depth"):
-        sk.cms_build(df, "k", width=64, depth=0)
-    with pytest.raises(ValueError, match="differing shape"):
-        sk.cms_merge([[0] * 64], [[0] * 128])
-    with pytest.raises(ValueError, match="same-shape"):
-        sk.cms_join_size([[0] * 64], [[0] * 64, [0] * 64])
-
-
-def test_cms_estimate_plan_stays_jvm_side(spark):
-    """The probe is pure column math — no Python eval node in the
-    plan, matching the bloom_filter_rows contract."""
-    df = spark.range(100).select(F.col("id").cast("string").alias("k"))
-    sketch = sk.cms_build(df, "k", width=64, depth=2)
-    plan = sk.cms_estimate(df, "k", sketch)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-
-
 # --- KMV quantile sketches -------------------------------------------------
-
-
-def test_quantile_sketch_merge_equals_direct(events):
-    """Union of per-day sketches re-merged == sketch built directly on
-    the union — the bottom-k identity, exact because priorities are
-    deterministic."""
-    ev = events.limit(20000).select(
-        "event_id", "user_id", F.to_date("ts").alias("day"),
-        F.col("value").cast("double").alias("v"),
-    ).cache()
-    per_day = sk.quantile_sketches(ev, ["day"], "v", id_col="event_id", k=64)
-    rolled = sk.merge_quantile_sketches(per_day, [], k=64)
-    direct = sk.quantile_sketches(
-        ev.withColumn("g", F.lit(1)), ["g"], "v", id_col="event_id", k=64
-    )
-    got = rolled.collect()[0]["qsketch"]
-    want = direct.collect()[0]["qsketch"]
-    assert [tuple(x) for x in got] == [tuple(x) for x in want]
-    ev.unpersist()
 
 
 def test_quantile_estimates_within_rank_tolerance(events):
@@ -425,174 +251,4 @@ def test_quantile_sketch_validates(spark):
 # --- join advisor ----------------------------------------------------------
 
 
-def test_advise_join_broadcast_small_dim(spark, orders, customer):
-    from gedixr_spark.operators.skew import advise_join
-
-    out = advise_join(
-        spark, orders.limit(20000), customer.limit(500),
-        "o_custkey", "c_custkey",
-    )
-    assert out["strategy"] == "broadcast"
-    true_rows = (
-        orders.limit(20000)
-        .join(
-            customer.limit(500).withColumnRenamed("c_custkey", "o_custkey"),
-            "o_custkey",
-        )
-        .count()
-    )
-    assert out["est_join_rows"] >= true_rows
-
-
-def test_advise_join_salt_on_hot_key(spark):
-    from gedixr_spark.operators.skew import advise_join
-
-    # 90% of the fact side is ONE key; dim side too big to broadcast
-    fact = spark.range(0, 40000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id")).alias("k")
-    )
-    dim = spark.range(0, 30000).select(F.col("id").alias("k"))
-    out = advise_join(
-        spark, fact, dim, "k", broadcast_threshold_rows=1000
-    )
-    assert out["strategy"] == "salt"
-    assert out["hot_key_ratio"] > 20
-
-
-def test_advise_join_shuffle_uniform_big(spark):
-    from gedixr_spark.operators.skew import advise_join
-
-    a = spark.range(0, 50000).select((F.col("id") % 9973).alias("k"))
-    b = spark.range(0, 50000).select((F.col("id") % 9973).alias("k"))
-    out = advise_join(spark, a, b, "k", broadcast_threshold_rows=1000)
-    assert out["strategy"] == "shuffle"
-
-
-def test_update_quantile_store_equals_direct(events):
-    """Per-batch maintenance identity: update(store(batch1), batch2)
-    == direct sketch of batch1 ∪ batch2, exactly."""
-    ev = events.limit(10000).select(
-        "event_id", F.to_date("ts").alias("day"),
-        F.col("value").cast("double").alias("v"),
-    ).cache()
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-    store = sk.quantile_sketches(b1, ["day"], "v", id_col="event_id", k=64)
-    updated = sk.update_quantile_store(
-        store, b2, ["day"], "v", id_col="event_id", k=64
-    )
-    direct = sk.quantile_sketches(ev, ["day"], "v", id_col="event_id", k=64)
-    got = {r["day"]: [tuple(x) for x in r["qsketch"]] for r in updated.collect()}
-    want = {r["day"]: [tuple(x) for x in r["qsketch"]] for r in direct.collect()}
-    assert got == want
-    ev.unpersist()
-
-
 # --- KMV distinct sketch: set-operation estimates (r6) ----------------------
-
-
-def test_kmv_merge_equals_direct_sketch(spark):
-    from gedixr_spark.operators.sketches import (
-        kmv_distinct_sketches, kmv_merge_sketches,
-    )
-
-    rows = [(i % 7, f"u{i % 400}") for i in range(3000)]
-    df = spark.createDataFrame(rows, "g int, u string")
-    direct = kmv_distinct_sketches(
-        df.withColumn("g", F.lit(0)), ["g"], "u", k=64
-    ).collect()[0]["kmv"]
-    per_group = kmv_distinct_sketches(df, ["g"], "u", k=64)
-    merged = kmv_merge_sketches(per_group, [], k=64).collect()[0]["kmv"]
-    assert list(merged) == list(direct)  # exact bottom-k merge identity
-
-
-def test_kmv_estimate_exact_below_k(spark):
-    from gedixr_spark.operators.sketches import (
-        kmv_distinct_sketches, kmv_estimate,
-    )
-
-    df = spark.createDataFrame([(0, f"v{i}") for i in range(30)], "g int, u string")
-    sk = kmv_distinct_sketches(df, ["g"], "u", k=64)
-    est = sk.select(kmv_estimate(F.col("kmv"), 64).alias("e")).collect()[0]["e"]
-    assert est == 30.0  # fewer than k distinct: exact by construction
-
-
-def test_kmv_set_estimates_overlap(spark):
-    from gedixr_spark.operators.sketches import (
-        kmv_distinct_sketches, kmv_set_estimates,
-    )
-
-    # A = 0..5999, B = 3000..8999 → union 9000, intersection 3000, J=1/3
-    a = spark.createDataFrame([(0, f"v{i}") for i in range(6000)], "g int, u string")
-    b = spark.createDataFrame(
-        [(0, f"v{i}") for i in range(3000, 9000)], "g int, u string"
-    )
-    ka = kmv_distinct_sketches(a, ["g"], "u", k=256, sketch_col="ka")
-    kb = kmv_distinct_sketches(b, ["g"], "u", k=256, sketch_col="kb")
-    row = kmv_set_estimates(ka.join(kb, "g"), "ka", "kb", k=256).collect()[0]
-    # 1/sqrt(256) ≈ 6% 1-sigma: assert a generous 20% band
-    assert abs(row["union_est"] - 9000) / 9000 < 0.2
-    assert abs(row["intersect_est"] - 3000) / 3000 < 0.25
-    assert abs(row["jaccard_est"] - 1 / 3) < 0.1
-
-
-def test_kmv_disjoint_sets(spark):
-    from gedixr_spark.operators.sketches import (
-        kmv_distinct_sketches, kmv_set_estimates,
-    )
-
-    a = spark.createDataFrame([(0, f"a{i}") for i in range(500)], "g int, u string")
-    b = spark.createDataFrame([(0, f"b{i}") for i in range(500)], "g int, u string")
-    ka = kmv_distinct_sketches(a, ["g"], "u", k=128, sketch_col="ka")
-    kb = kmv_distinct_sketches(b, ["g"], "u", k=128, sketch_col="kb")
-    row = kmv_set_estimates(ka.join(kb, "g"), "ka", "kb", k=128).collect()[0]
-    assert row["jaccard_est"] == 0.0 and row["intersect_est"] == 0.0
-
-
-def test_corpus_overlap_estimate(spark):
-    """Sketch-only cross-corpus overlap: two corpora sharing half
-    their shingle space — estimates land near truth without any join
-    of the corpora; disjoint corpora estimate ~zero overlap."""
-    from gedixr_spark.operators.sketches import corpus_overlap_estimate
-
-    mk = lambda lo, hi: spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(i, i + 6))) for i in range(lo, hi)],
-        "doc_id long, text string",
-    )
-    a, b = mk(0, 400), mk(200, 600)  # heavy shingle overlap in 200..400
-    row = corpus_overlap_estimate(a, b, k=512).collect()[0]
-    assert row["intersect_est"] > 0
-    assert row["union_est"] > max(row["a_est"], row["b_est"]) * 0.9
-    # exact truth for the 4-gram... compute shingle sets in python? n=3 shingles of 6 words: 4 per doc
-    import itertools
-    sh = lambda lo, hi: {
-        " ".join(f"w{j}" for j in range(i + p, i + p + 3))
-        for i in range(lo, hi) for p in range(4)
-    }
-    A, B = sh(0, 400), sh(200, 600)
-    truth_j = len(A & B) / len(A | B)
-    assert abs(row["jaccard_est"] - truth_j) < 0.12
-
-    disj = corpus_overlap_estimate(mk(0, 100), mk(5000, 5100), k=256).collect()[0]
-    assert disj["jaccard_est"] < 0.02
-
-
-def test_table_file_stats(spark, tmp_path):
-    from pyspark.sql import Row
-
-    from gedixr_spark.sinks.versioned import (
-        commit_append, init_versioned, table_file_stats,
-    )
-
-    path = str(tmp_path / "t")
-    init_versioned(spark, path)
-    df = spark.createDataFrame([Row(k=i) for i in range(100)]).coalesce(5)
-    commit_append(spark, path, df)
-    st = table_file_stats(spark, path)
-    # partition->file mapping is Spark's call; census must agree with
-    # the live set and classify every tiny file as small
-    from gedixr_spark.sinks.versioned import live_files
-    assert st["n_files"] == len(live_files(spark, path)) >= 1
-    assert st["small_files"] == st["n_files"]  # tiny test files < 16 MB
-    assert st["total_bytes"] == st["small_bytes"] > 0
-    assert st["max_bytes"] >= st["p50_bytes"] > 0

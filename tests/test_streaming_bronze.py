@@ -182,275 +182,6 @@ def test_versioned_upsert_stream_cdc(spark, tmp_path):
     assert len(table_history(spark, table)) == n
 
 
-def test_streaming_index_maintenance_exactly_once(spark, tmp_path):
-    """Docs streamed in two waves fold into the versioned tf index;
-    the maintained index equals a from-scratch build on everything
-    seen, a replayed batch id no-ops, and time travel reaches the
-    first wave's index."""
-    from gedixr_spark.operators.text import build_tf_index, init_tf_index_table
-    from gedixr_spark.sinks.versioned import read_versioned, table_history
-    from gedixr_spark.streaming.bronze import (
-        index_stream_batch, index_maintenance_query,
-    )
-
-    landing = tmp_path / "docs"
-    index = str(tmp_path / "tfidx")
-    ckpt = str(tmp_path / "ckpt")
-
-    wave1 = [(0, "alpha beta gamma"), (1, "beta delta")]
-    wave2 = [(2, "alpha alpha epsilon"), (3, "delta zeta")]
-    df1 = spark.createDataFrame(wave1, "doc_id long, text string")
-    df1.write.mode("append").parquet(str(landing))
-    init_tf_index_table(
-        spark, index, spark.createDataFrame([], "doc_id long, text string")
-    )
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        str(landing)
-    )
-    q = index_maintenance_query(stream, index, ckpt, available_now=True)
-    q.awaitTermination()
-    df2 = spark.createDataFrame(wave2, "doc_id long, text string")
-    df2.write.mode("append").parquet(str(landing))
-    q2 = index_maintenance_query(
-        spark.readStream.schema("doc_id long, text string").parquet(str(landing)),
-        index, ckpt, available_now=True,
-    )
-    q2.awaitTermination()
-
-    def snap(df):
-        return {r["term"]: (r["df"], r["postings"]) for r in df.collect()}
-
-    full = spark.createDataFrame(wave1 + wave2, "doc_id long, text string")
-    assert snap(read_versioned(spark, index)) == snap(build_tf_index(full))
-
-    # replay of an already-committed batch id: no-op
-    hist = table_history(spark, index)
-    bids = [e["meta"].get("stream_batch_id") for e in hist if e["op"] == "upsert"]
-    n_before = len(hist)
-    assert index_stream_batch(df1, index, bids[0]) is None
-    assert len(table_history(spark, index)) == n_before
-
-    # time travel: the first upsert version is wave1's index alone
-    first_v = next(e["version"] for e in hist if e["op"] == "upsert")
-    assert snap(read_versioned(spark, index, version=first_v)) == snap(
-        build_tf_index(df1)
-    )
-
-
-def test_standing_sample_equals_bottomk_over_everything(spark, tmp_path):
-    """Three streamed waves: the maintained k-row table equals
-    bottomk over the union of everything seen (the mergeable-sketch
-    identity), every intermediate version is the valid sample of its
-    prefix, and a replayed batch id no-ops."""
-    from gedixr_spark.operators.sampling import bottomk_sample
-    from gedixr_spark.sinks.versioned import (
-        init_versioned, read_versioned, table_history,
-    )
-    from gedixr_spark.streaming.bronze import (
-        standing_sample_batch, standing_sample_query,
-    )
-
-    landing = tmp_path / "docs"
-    table = str(tmp_path / "sample")
-    ckpt = str(tmp_path / "ckpt")
-    init_versioned(spark, table)
-
-    waves = [
-        [(i, f"doc {i}") for i in range(0, 40)],
-        [(i, f"doc {i}") for i in range(40, 55)],
-        [(i, f"doc {i}") for i in range(55, 90)],
-    ]
-    seen = []
-    for w in waves:
-        spark.createDataFrame(w, "doc_id long, text string").write.mode(
-            "append"
-        ).parquet(str(landing))
-        seen.extend(w)
-        q = standing_sample_query(
-            spark.readStream.schema("doc_id long, text string").parquet(
-                str(landing)
-            ),
-            table, ckpt, k=10, available_now=True,
-        )
-        q.awaitTermination()
-        got = sorted(r["doc_id"] for r in read_versioned(spark, table).collect())
-        want = sorted(
-            r["doc_id"]
-            for r in bottomk_sample(
-                spark.createDataFrame(seen, "doc_id long, text string"), 10
-            ).collect()
-        )
-        assert got == want, (len(seen), got, want)
-
-    # replay no-op
-    hist = table_history(spark, table)
-    bids = [e["meta"].get("stream_batch_id") for e in hist if e["op"] == "overwrite"]
-    n = len(hist)
-    df0 = spark.createDataFrame(waves[0], "doc_id long, text string")
-    assert standing_sample_batch(df0, table, bids[0], k=10) is None
-    assert len(table_history(spark, table)) == n
-
-
-def test_standing_sample_resent_ids_take_one_slot(spark, tmp_path):
-    """A document re-sent in a later batch (same id, possibly different
-    payload) must occupy ONE slot of the k-row sample, not two (r7
-    ADVICE): the merge dedups ids with first-seen-wins before the
-    final bottom-k, so the table stays a valid uniform sample of the
-    DISTINCT ids ever seen."""
-    from gedixr_spark.operators.sampling import bottomk_sample
-    from gedixr_spark.sinks.versioned import init_versioned, read_versioned
-    from gedixr_spark.streaming.bronze import standing_sample_batch
-
-    table = str(tmp_path / "sample")
-    init_versioned(spark, table)
-
-    first = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(30)], "doc_id long, text string"
-    )
-    standing_sample_batch(first, table, 0, k=8)
-    kept = {r["doc_id"]: r["text"] for r in read_versioned(spark, table).collect()}
-
-    # second batch re-sends every id of the first (mutated payload) —
-    # plus nothing new, so the sample membership must not change
-    resent = spark.createDataFrame(
-        [(i, f"doc {i} v2") for i in range(30)], "doc_id long, text string"
-    )
-    standing_sample_batch(resent, table, 1, k=8)
-    rows = read_versioned(spark, table).collect()
-    ids = [r["doc_id"] for r in rows]
-    assert len(ids) == len(set(ids)) == 8, ids
-    # membership identical to bottom-k over the distinct id set
-    want = sorted(
-        r["doc_id"] for r in bottomk_sample(first, 8).collect()
-    )
-    assert sorted(ids) == want
-    # first-seen payload wins deterministically
-    assert {r["doc_id"]: r["text"] for r in rows} == kept
-
-
-def test_standing_weighted_sample_equals_weighted_bottomk(spark, tmp_path):
-    """weight_col switches the standing sample to the E-S weighted
-    form; after three streamed waves the table equals
-    weighted_bottomk over the union of everything seen (the same
-    mergeable-sketch identity as the uniform case)."""
-    from gedixr_spark.operators.sampling import weighted_bottomk_sample
-    from gedixr_spark.sinks.versioned import init_versioned, read_versioned
-    from gedixr_spark.streaming.bronze import standing_sample_batch
-
-    table = str(tmp_path / "wsample")
-    init_versioned(spark, table)
-    waves = [
-        [(i, f"doc {i}", float(1 + i % 9)) for i in rng]
-        for rng in (range(0, 30), range(30, 55), range(55, 80))
-    ]
-    schema = "doc_id long, text string, w double"
-    seen = []
-    for bid, wv in enumerate(waves):
-        seen.extend(wv)
-        standing_sample_batch(
-            spark.createDataFrame(wv, schema), table, bid, k=12,
-            weight_col="w",
-        )
-        got = sorted(
-            r["doc_id"] for r in read_versioned(spark, table).collect()
-        )
-        want = sorted(
-            r["doc_id"]
-            for r in weighted_bottomk_sample(
-                spark.createDataFrame(seen, schema), 12, "w"
-            ).collect()
-        )
-        assert got == want, (bid, got, want)
-
-
-def test_streaming_vector_index_exactly_once(spark, tmp_path):
-    """Embeddings streamed in two waves fold into the versioned IVF
-    index; pruned search over the maintained table equals flat
-    ivf_ann_topk over everything seen, a replayed batch id no-ops, and
-    time travel searches the index as of the first wave."""
-    import numpy as np
-
-    from gedixr_spark.operators import similarity as sim
-    from gedixr_spark.operators.vectorstore import (
-        init_vector_index, search_vector_index,
-    )
-    from gedixr_spark.sinks.versioned import table_history
-    from gedixr_spark.streaming.bronze import (
-        vector_stream_batch, vector_index_query,
-    )
-
-    def emb(ids, seed):
-        rng = np.random.default_rng(seed)
-        rows = [
-            (int(i), [float(x) for x in rng.standard_normal(8)])
-            for i in ids
-        ]
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    landing = tmp_path / "emb"
-    index = str(tmp_path / "vidx")
-    ckpt = str(tmp_path / "ckpt")
-    base, w1, w2 = emb(range(30), 1), emb(range(30, 60), 2), emb(range(60, 90), 3)
-    init_vector_index(spark, index, base, dim=8, n_cells=4, n_files=2)
-
-    schema = "vec_id long, embedding array<double>"
-    w1.write.mode("append").parquet(str(landing))
-    q = vector_index_query(
-        spark.readStream.schema(schema).parquet(str(landing)),
-        index, ckpt, available_now=True,
-    )
-    q.awaitTermination()
-    w2.write.mode("append").parquet(str(landing))
-    q2 = vector_index_query(
-        spark.readStream.schema(schema).parquet(str(landing)),
-        index, ckpt, available_now=True,
-    )
-    q2.awaitTermination()
-
-    cents = sim.load_centroids(spark, index + "/centroids.parquet")
-    queries = emb(range(3), 9)
-
-    def flat_topk(flat):
-        return sorted(
-            (r["query_id"], r["rank"], r["cand_id"], r["cosine"])
-            for r in sim.ivf_ann_topk(
-                queries, flat, k=3, dim=8, centroids=cents, nprobe=2
-            ).collect()
-        )
-
-    got = sorted(
-        (r["query_id"], r["rank"], r["cand_id"], r["cosine"])
-        for r in search_vector_index(
-            spark, index, queries, k=3, nprobe=2
-        ).collect()
-    )
-    assert got == flat_topk(base.unionByName(w1).unionByName(w2))
-
-    # replayed batch id: no-op (ledger exactly-once)
-    hist = table_history(spark, index)
-    bids = [
-        e["meta"].get("stream_batch_id")
-        for e in hist
-        if e["op"] == "upsert" and e["meta"].get("stream_batch_id") is not None
-    ]
-    n_before = len(hist)
-    assert vector_stream_batch(w1, index, bids[0]) is None
-    assert len(table_history(spark, index)) == n_before
-
-    # time travel: first upsert version == base + wave1 only
-    first_v = next(e["version"] for e in hist if e["op"] == "upsert")
-    got_v1 = sorted(
-        (r["query_id"], r["rank"], r["cand_id"], r["cosine"])
-        for r in search_vector_index(
-            spark, index, queries, k=3, nprobe=2, version=first_v
-        ).collect()
-    )
-    assert got_v1 == flat_topk(base.unionByName(w1))
-
-
 def test_versioned_delete_stream_tombstones(spark, tmp_path):
     """The delete half of a CDC feed: streamed tombstone keys remove
     their rows exactly-once (DV mode — no data file rewritten per

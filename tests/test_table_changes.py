@@ -257,64 +257,3 @@ def test_randomized_history_feed_matches_duckdb_replay(spark, tmp_path):
         assert got_plus == [tuple(r) for r in want_plus], f"step {step} ({op})"
     _assert_reconstructs(spark, path, 0, ver)
     _assert_reconstructs(spark, path, ver // 2, ver)
-
-
-def test_feed_driven_index_maintenance_equals_rebuild(spark, tmp_path):
-    """The CDC consumer: an index maintained from the corpus table's
-    change feed across insert/update/delete commits equals a
-    from-scratch build over the corpus snapshot, bit-for-bit —
-    including TERM DELETION when a doc removal empties a posting
-    list."""
-    from gedixr_spark.operators.text import (
-        build_tf_index, update_tf_index_from_changes,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "idx")
-    init_versioned(spark, corpus)
-    init_versioned(spark, index)
-    docs0 = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="alpha beta gamma"),
-            Row(doc_id=2, text="beta beta delta"),
-            Row(doc_id=3, text="unique_term only here"),
-        ]
-    )
-    commit_append(spark, corpus, docs0.coalesce(1))  # v1
-    commit_append(spark, index, build_tf_index(docs0))
-    # corpus churn: update doc 2 (drops delta, adds alpha), delete doc 3
-    # (kills unique_term/only/here entirely), insert doc 4
-    commit_upsert(
-        spark, corpus,
-        spark.createDataFrame(
-            [Row(doc_id=2, text="beta alpha"), Row(doc_id=4, text="gamma gamma")]
-        ),
-        keys=["doc_id"],
-    )  # v2
-    commit_delete(spark, corpus, F.col("doc_id") == 3, mode="dv")  # v3
-    # multi-churn in ONE consumed range (r11 review finding — the
-    # naive per-commit fold double-counted and left stale postings):
-    # doc 2 changes AGAIN (its v2 'beta alpha' text must leave no
-    # trace), doc 5 is inserted then deleted (must never appear),
-    # doc 1 is deleted then re-inserted with new text
-    commit_upsert(
-        spark, corpus,
-        spark.createDataFrame(
-            [Row(doc_id=2, text="zeta only"), Row(doc_id=5, text="ghost words")]
-        ),
-        keys=["doc_id"],
-    )  # v4
-    commit_delete(spark, corpus, F.col("doc_id").isin(1, 5), mode="cow")  # v5
-    commit_append(
-        spark, corpus,
-        spark.createDataFrame([Row(doc_id=1, text="reborn alpha")]),
-    )  # v6
-    update_tf_index_from_changes(spark, index, corpus, since_version=1)
-    got = read_versioned(spark, index)
-    want = build_tf_index(read_versioned(spark, corpus))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # emptied terms really are gone (not present with stale postings)
-    assert got.filter(F.col("term") == "unique_term").count() == 0
-    # intermediate-version terms left no trace
-    assert got.filter(F.col("term").isin("beta", "ghost")).count() == 0

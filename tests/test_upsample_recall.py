@@ -86,37 +86,3 @@ def test_pq_recall_against_brute_force(spark):
         sim.ann_recall(approx, exact).filter(F.col("query_id").isNull()).collect()[0]
     )
     assert macro["recall"] > 0.2  # ≈10× over chance with floor codebooks
-
-
-def test_ranking_metrics_exact_math(spark):
-    """Hand-computed MRR/NDCG on a tiny fixture: q1's first hit at
-    rank 2, two hits total; q2 has no hits."""
-    import math
-
-    approx = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2), (1, 12, 3), (2, 20, 1)],
-        "query_id long, cand_id long, rank int",
-    )
-    exact = spark.createDataFrame(
-        [(1, 11, 1), (1, 12, 2), (2, 99, 1)],
-        "query_id long, cand_id long, rank int",
-    )
-    rows = {r["query_id"]: r for r in sim.ranking_metrics(approx, exact).collect()}
-    # q1: first relevant at rank 2 → rr=0.5;
-    # dcg = 1/log2(3) + 1/log2(4); idcg (2 rel) = 1/log2(2)+1/log2(3)
-    dcg = 1 / math.log2(3) + 1 / math.log2(4)
-    idcg = 1 / math.log2(2) + 1 / math.log2(3)
-    assert rows[1]["rr"] == pytest.approx(0.5)
-    assert rows[1]["ndcg"] == pytest.approx(dcg / idcg)
-    assert rows[2]["rr"] == 0.0 and rows[2]["ndcg"] == 0.0
-    macro = rows[None]
-    assert macro["rr"] == pytest.approx(0.25)
-    assert macro["ndcg"] == pytest.approx((dcg / idcg) / 2)
-
-
-def test_ranking_metrics_perfect_result_is_one(spark):
-    top = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2)], "query_id long, cand_id long, rank int"
-    )
-    rows = {r["query_id"]: r for r in sim.ranking_metrics(top, top).collect()}
-    assert rows[1]["rr"] == 1.0 and rows[1]["ndcg"] == pytest.approx(1.0)

@@ -515,23 +515,6 @@ def test_checkpoint_log_replay_and_expiry(spark, table):
         read_versioned(spark, table, version=1)
 
 
-def test_timestamp_time_travel(spark, table):
-    import time as _time
-
-    from gedixr_spark.sinks.versioned import version_at_timestamp
-
-    commit_append(spark, table, _mk(spark, [(1, "a")]))
-    t_mid = _time.time()
-    _time.sleep(0.01)
-    commit_append(spark, table, _mk(spark, [(2, "b")]))
-    v = version_at_timestamp(spark, table, t_mid)
-    assert v == 1
-    assert _rows(read_versioned(spark, table, version=v)) == [(1, "a")]
-    assert version_at_timestamp(spark, table, _time.time()) == 2
-    with pytest.raises(ValueError, match="no version"):
-        version_at_timestamp(spark, table, 0.0)
-
-
 def test_change_feed_is_transparent_to_compaction(spark, table):
     from gedixr_spark.sinks.versioned import commit_compact, read_appended
 
@@ -938,37 +921,6 @@ def test_clone_at_version_and_vacuum_safety(spark, table, tmp_path):
     assert _rows(read_versioned(spark, table)) == [(9, "z")]
 
 
-def test_find_orphan_files_census(spark, table):
-    """A file in data/ that no log version references (crashed commit
-    leftover) is reported by the census — subject to the same
-    in-flight-writer age guard as vacuum — and a plain read never sees
-    it."""
-    from gedixr_spark.sinks.versioned import find_orphan_files
-
-    commit_append(spark, table, _mk(spark, [(1, "a")]))
-    stray = os.path.join(table, "data", "v99999999-dead-part-0.parquet")
-    _mk(spark, [(8, "x")]).coalesce(1).write.mode("overwrite").parquet(
-        str(stray) + ".dir"
-    )
-    import shutil
-
-    part = next(
-        f for f in os.listdir(stray + ".dir") if f.startswith("part-")
-    )
-    shutil.move(os.path.join(stray + ".dir", part), stray)
-    shutil.rmtree(stray + ".dir")
-
-    # age guard: a fresh file is NOT an orphan yet
-    assert find_orphan_files(spark, table) == []
-    got = find_orphan_files(spark, table, older_than_hours=0.0)
-    assert got == ["v99999999-dead-part-0.parquet"]
-    # reads replay the log, so the orphan never leaks into results
-    assert _rows(read_versioned(spark, table)) == [(1, "a")]
-    # vacuum collects it
-    deleted = vacuum_versioned(spark, table, keep_last=1, retention_hours=0.0)
-    assert "v99999999-dead-part-0.parquet" in deleted
-
-
 def test_clone_compaction_localizes_files(spark, table, tmp_path):
     """commit_compact on a clone reads the external references and
     rewrites them as LOCAL files — the clone detaches from the source
@@ -1091,35 +1043,6 @@ def test_snapshot_row_count_is_metadata_only(spark, table, tmp_path):
     # a stats-less commit poisons the metadata count -> None, not wrong
     commit_append(spark, table, _mk(spark, [(9, "z")]))
     assert snapshot_row_count(spark, table) is None
-
-
-def test_export_manifest_duckdb_interop(spark, table):
-    """The symlink-manifest pattern: an engine that speaks parquet but
-    not our log (DuckDB here, standing in for Trino/Athena) reads the
-    manifest's file list and sees EXACTLY the pinned snapshot — even
-    after later commits move the table on."""
-    import duckdb
-
-    from gedixr_spark.sinks.versioned import commit_upsert, export_manifest
-
-    commit_append(spark, table, _mk(spark, [(1, "a"), (2, "b")]))
-    m1 = export_manifest(spark, table)
-    commit_upsert(spark, table, _mk(spark, [(2, "B"), (3, "c")]), keys=["k"])
-    m2 = export_manifest(spark, table)
-
-    def via_duckdb(manifest):
-        files = [l for l in open(manifest).read().splitlines() if l]
-        con = duckdb.connect()
-        rows = con.execute(
-            "SELECT k, v FROM read_parquet(?) ORDER BY k", [files]
-        ).fetchall()
-        con.close()
-        return rows
-
-    assert via_duckdb(m1) == [(1, "a"), (2, "b")]
-    assert via_duckdb(m2) == [(1, "a"), (2, "B"), (3, "c")]
-    # manifests are static snapshots: m1 still reads the old state
-    assert via_duckdb(m1) == [(1, "a"), (2, "b")]
 
 
 def test_stats_nrows_does_not_break_pruning(spark, table):
