@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 from gedixr_spark.constants import ALL_BEAMS
 from gedixr_spark.functions.scalar import (
     acq_time_from_filename,
-    month_band,
-    pct,
     rh_percentile,
     shot_id_str,
 )

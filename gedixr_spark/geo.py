@@ -370,17 +370,6 @@ def parse_wkt_rings(wkt: str) -> list[list[tuple[float, float]]]:
     raise ValueError(f"unsupported WKT (POLYGON/MULTIPOLYGON only): {wkt[:60]}...")
 
 
-def parse_wkt_polygon(wkt: str) -> list[tuple[float, float]]:
-    """Parse a single-ring WKT POLYGON into a vertex list (closed ring).
-    Multi-ring/multi-part geometries go through ``parse_wkt_rings``."""
-    rings = parse_wkt_rings(wkt)
-    if len(rings) != 1:
-        raise ValueError(
-            f"expected single-ring POLYGON, got {len(rings)} rings: {wkt[:60]}..."
-        )
-    return rings[0]
-
-
 def polygon_bounds(verts: list[tuple[float, float]]) -> tuple[float, float, float, float]:
     xs = [v[0] for v in verts]
     ys = [v[1] for v in verts]

@@ -238,18 +238,15 @@ def search_vector_index(
     from gedixr_spark.sinks.versioned import _scan_files, read_versioned
 
     centroids = load_centroids(spark, _centroid_path(path))
-    from gedixr_spark.sinks.versioned import _one_job_action
-
-    with _one_job_action(spark):  # metadata-sized planning read
-        probe = (
-            queries.select(
-                F.explode(
-                    ivf_probe_cells(vec_col, centroids, nprobe, scale)
-                ).alias("cell")
-            )
-            .distinct()
-            .collect()
+    probe = (
+        queries.select(
+            F.explode(
+                ivf_probe_cells(vec_col, centroids, nprobe, scale)
+            ).alias("cell")
         )
+        .distinct()
+        .collect()
+    )
     cells = sorted(r["cell"] for r in probe)
     keep, n_live, dvs = _files_for_cells(spark, path, cells, version)
     if not keep:

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 import os
 

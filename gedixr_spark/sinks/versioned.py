@@ -44,12 +44,10 @@ this is §7.4 extension surface composing with merge/compact/layout.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import math
 import os
 import re
-import threading
 import time
 import uuid
 from collections import OrderedDict
@@ -211,44 +209,6 @@ def reset_metadata_cache(stats_only: bool = False) -> None:
 
 def _is_local_path(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
-
-
-# serializes _one_job_action regions across driver threads (threaded
-# writers share one session conf — see the context manager below)
-_AQE_TOGGLE_LOCK = threading.RLock()
-
-
-@contextlib.contextmanager
-def _one_job_action(spark: SparkSession):
-    """Run a METADATA-SIZED collect as ONE classic job instead of an
-    AQE stage-job cascade (r16, r15 VERDICT #1: the scheduler floor
-    owns the lifecycle family — a single pre-write collect was
-    measured as EIGHT jobs, one per materialized AQE stage).
-
-    Scope and why it is scale-safe, not a local-mode tune: the wrapped
-    actions are the commit machinery's pre-write aggregates — global
-    (single-row) aggregates and explicitly-broadcast key-set joins
-    whose every exchange is SinglePartition or a broadcast. AQE has
-    nothing to adapt in that shape AT ANY SCALE: there is no
-    post-shuffle partitioning to coalesce (partial-agg output is one
-    row per task), no skew to split (broadcast joins have no shuffle),
-    and no join strategy to revise (the broadcast is an explicit hint
-    on provably-small metadata). Its per-stage jobs are pure scheduler
-    overhead here — locally ~67 ms each, on a cluster a scheduler
-    round trip added to every commit's latency. Data-scale plans (the
-    returned query frames, scans, staged writes) keep AQE on.
-
-    Thread-safe via a lock: the session conf is global, so concurrent
-    committers (tests/test_rebase_threaded.py) serialize these tiny
-    collects rather than race the toggle — commits to one table
-    serialize at the log CAS anyway."""
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _read_small_file(spark: SparkSession, full_path: str) -> bytes:
@@ -2777,7 +2737,7 @@ def commit_upsert(
     # new schema and poison later mergeSchema reads.
     _check_schema_compat(spark, path, updates.schema, cap=base)
     files, dvs = _replay_state(spark, path, base)
-    # ONE job for every batch fact: count + distinct keys + any
+    # ONE aggregate for every batch fact: count + distinct keys + any
     # table-level expectation sums (set_table_expectations) ride the
     # same aggregate — constraints cost zero extra actions here in
     # fail mode. drop/quarantine policies split the batch FIRST (one
@@ -2859,8 +2819,7 @@ def commit_upsert(
         )
 
     if not files:
-        with _one_job_action(spark):
-            n_upserted, _ = _validate_facts(facts.collect()[0])
+        n_upserted, _ = _validate_facts(facts.collect()[0])
         qnames = _qnames()
         names = _write_data_files(spark, path, updates, base + 1)
         st, bl = _indexes(names)
@@ -2900,14 +2859,12 @@ def commit_upsert(
         )
     updates = updates.select(*t_cols)
     # ONE pre-write action: batch facts and the touched-file set are
-    # both single-row aggregates — crossJoin them and collect once, as
-    # one classic job (the AQE cascade here was 8 stage jobs)
-    with _one_job_action(spark):
-        row = facts.crossJoin(
-            target.join(
-                F.broadcast(updates.select(*keys).distinct()), on=list(keys)
-            ).agg(F.collect_set("__file").alias("__hit_files"))
-        ).collect()[0]
+    # both single-row aggregates — crossJoin them and collect once
+    row = facts.crossJoin(
+        target.join(
+            F.broadcast(updates.select(*keys).distinct()), on=list(keys)
+        ).agg(F.collect_set("__file").alias("__hit_files"))
+    ).collect()[0]
     n_upserted, _ = _validate_facts(row)
     qnames = _qnames()
     touched = _touched_entries(files, row["__hit_files"])
@@ -3103,16 +3060,15 @@ def commit_merge(
             spark, path, files, dvs, merge_schema=ms, file_col="__file",
             cap=base,
         )
-        with _one_job_action(spark):
-            hit = (
-                target.join(
-                    F.broadcast(source.select(*keys).distinct()),
-                    on=list(keys),
-                )
-                .select(F.col("__file").alias("name"))
-                .distinct()
-                .collect()
+        hit = (
+            target.join(
+                F.broadcast(source.select(*keys).distinct()),
+                on=list(keys),
             )
+            .select(F.col("__file").alias("name"))
+            .distinct()
+            .collect()
+        )
         touched = _touched_entries(files, (r["name"] for r in hit))
     if when_not_matched_insert:
         missing = [c for c in target_cols if c not in source.columns]
@@ -3228,21 +3184,15 @@ def commit_merge(
     # the ONLY pre-write action besides file discovery (and the
     # expectations gate above, when set): contract check
     # + every log count in one aggregate over the pinned join.
-    # _one_job_action is safe here even though this collect can
-    # materialize the lazy checkpoint: the tree BELOW the checkpoint
-    # has no AQE-adaptable exchange (broadcast join over the scan;
-    # fan_out's repartition is REPARTITION_BY_NUM, which AQE respects
-    # as-is), so the pinned partitioning is identical either way
-    with _one_job_action(spark):
-        crow = joined.agg(
-            F.count_distinct(F.col("s.__merge_sid")).alias("n_src"),
-            F.count_distinct(*[F.col(f"s.{k}") for k in keys]).alias("nk"),
-            F.sum(F.when(del_cond, 1).otherwise(0)).alias("n_del"),
-            F.sum(
-                F.when(matched & upd_cond & ~del_cond, 1).otherwise(0)
-            ).alias("n_upd"),
-            F.sum(F.when(src_only, 1).otherwise(0)).alias("n_ins"),
-        ).collect()[0]
+    crow = joined.agg(
+        F.count_distinct(F.col("s.__merge_sid")).alias("n_src"),
+        F.count_distinct(*[F.col(f"s.{k}") for k in keys]).alias("nk"),
+        F.sum(F.when(del_cond, 1).otherwise(0)).alias("n_del"),
+        F.sum(
+            F.when(matched & upd_cond & ~del_cond, 1).otherwise(0)
+        ).alias("n_upd"),
+        F.sum(F.when(src_only, 1).otherwise(0)).alias("n_ins"),
+    ).collect()[0]
     if crow["nk"] != crow["n_src"]:
         raise ValueError(
             f"source batch has {crow['n_src']} rows but {crow['nk']} distinct "
@@ -3747,21 +3697,20 @@ def _commit_delete_impl(
         )
         if not dv_names:
             return {"op": "noop", "n_deleted": 0, "version": base}
-        # per-(dv file, target file) row counts: one job over the
-        # freshly-written DV files (deleted-rows-sized, two columns)
-        with _one_job_action(spark):
-            rows = (
-                spark.read.schema(_DV_SCHEMA)
-                .parquet(*_file_paths(path, dv_names))
-                .groupBy(
-                    F.element_at(
-                        F.split(F.input_file_name(), "/"), -1
-                    ).alias("__dv"),
-                    "file",
-                )
-                .count()
-                .collect()
+        # per-(dv file, target file) row counts: one aggregate over
+        # the freshly-written DV files (deleted-rows-sized, two columns)
+        rows = (
+            spark.read.schema(_DV_SCHEMA)
+            .parquet(*_file_paths(path, dv_names))
+            .groupBy(
+                F.element_at(
+                    F.split(F.input_file_name(), "/"), -1
+                ).alias("__dv"),
+                "file",
             )
+            .count()
+            .collect()
+        )
         if not rows:
             # nothing matched: the empty DV files are orphans (vacuum
             # collects them); don't burn a version on a no-op
@@ -3788,13 +3737,12 @@ def _commit_delete_impl(
             },
             base, probe=_delete_probe, dv_add=dv_add,
         )
-    with _one_job_action(spark):
-        hit = (
-            match(target)
-            .select(F.col("__file").alias("name"))
-            .distinct()
-            .collect()
-        )
+    hit = (
+        match(target)
+        .select(F.col("__file").alias("name"))
+        .distinct()
+        .collect()
+    )
     touched = _touched_entries(files, (r["name"] for r in hit))
     if not touched:
         return {"op": "noop", "n_files_rewritten": 0, "version": base}
@@ -4583,15 +4531,14 @@ def _file_column_stats(
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    with _one_job_action(spark):
-        rows = (
-            df.withColumn(
-                "__f", F.element_at(F.split(F.input_file_name(), "/"), -1)
-            )
-            .groupBy("__f")
-            .agg(*aggs)
-            .collect()
+    rows = (
+        df.withColumn(
+            "__f", F.element_at(F.split(F.input_file_name(), "/"), -1)
         )
+        .groupBy("__f")
+        .agg(*aggs)
+        .collect()
+    )
     # every committed file gets an entry; files the groupBy never saw
     # (zero rows) keep [None, None] — "no non-null values", which the
     # pruner may skip for any range predicate — and __nrows 0
@@ -5127,26 +5074,25 @@ def _file_bloom_filters(
             )
         ]
     )
-    with _one_job_action(spark):
-        pos = (
-            df.select(
-                F.element_at(
-                    F.split(F.input_file_name(), "/"), -1
-                ).alias("__f"),
-                F.explode(tagged).alias("e"),
-            )
-            .groupBy(
-                "__f",
-                F.col("e.c").alias("c"),
-                F.shiftright(F.col("e.pos"), 6).alias("w"),
-            )
-            .agg(
-                F.bit_or(
-                    F.expr("shiftleft(1L, cast(e.pos % 64 as int))")
-                ).alias("bits")
-            )
-            .collect()
+    pos = (
+        df.select(
+            F.element_at(
+                F.split(F.input_file_name(), "/"), -1
+            ).alias("__f"),
+            F.explode(tagged).alias("e"),
         )
+        .groupBy(
+            "__f",
+            F.col("e.c").alias("c"),
+            F.shiftright(F.col("e.pos"), 6).alias("w"),
+        )
+        .agg(
+            F.bit_or(
+                F.expr("shiftleft(1L, cast(e.pos % 64 as int))")
+            ).alias("bits")
+        )
+        .collect()
+    )
     per_col: dict = {c: {} for c in cols}
     for r in pos:
         per_col[r["c"]].setdefault(
@@ -5395,7 +5341,7 @@ def check_expectations(
     unique: Sequence[str] = (),
     checks: dict | None = None,
 ) -> dict:
-    """Data-quality expectations, evaluated in ONE aggregate job:
+    """Data-quality expectations, evaluated in ONE aggregate action:
     per-column null counts for ``not_null``, a duplicate-key count
     for ``unique`` (a column LIST forming one composite key), and a
     violation count per named CHECK expression. Returns {null_counts,
@@ -5404,8 +5350,7 @@ def check_expectations(
     needs (catching bad batches at the door is 10^6× cheaper than
     repairing a 100 TB table after the fact)."""
     aggs, validate = _expectation_aggs(not_null, unique, checks)
-    with _one_job_action(df.sparkSession):
-        return validate(df.agg(*aggs).collect()[0])
+    return validate(df.agg(*aggs).collect()[0])
 
 
 def checkpoint_log(

@@ -19,7 +19,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 from gedixr_spark.constants import ALLOWED_PRODUCTS, PRODUCT_MAPPING
-from gedixr_spark.geo import parse_wkt_polygon, polygon_bounds
 
 CHECKPOINT_NAME = ".gedixr_harmony_job"
 

@@ -2,12 +2,11 @@
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from gedixr_spark.geo import (
     is_rectangle,
-    parse_wkt_polygon,
+    parse_wkt_rings,
     point_struct_to_wkb,
     polygon_bounds,
     st_intersects_polygon,
@@ -19,22 +18,17 @@ from gedixr_spark.geo import (
 
 
 def test_parse_wkt_polygon_closes_ring():
-    verts = parse_wkt_polygon("POLYGON ((0 0, 1 0, 1 1, 0 1))")
+    verts = parse_wkt_rings("POLYGON ((0 0, 1 0, 1 1, 0 1))")[0]
     assert verts[0] == verts[-1] and len(verts) == 5
 
 
-def test_parse_wkt_rejects_holes():
-    with pytest.raises(ValueError):
-        parse_wkt_polygon("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))")
-
-
 def test_is_rectangle():
-    assert is_rectangle(parse_wkt_polygon("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"))
-    assert not is_rectangle(parse_wkt_polygon("POLYGON ((0 0, 6 0, 3 5, 0 0))"))
+    assert is_rectangle(parse_wkt_rings("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")[0])
+    assert not is_rectangle(parse_wkt_rings("POLYGON ((0 0, 6 0, 3 5, 0 0))")[0])
 
 
 def test_polygon_bounds():
-    assert polygon_bounds(parse_wkt_polygon("POLYGON ((0 1, 2 1, 2 3, 0 3, 0 1))")) == (
+    assert polygon_bounds(parse_wkt_rings("POLYGON ((0 1, 2 1, 2 3, 0 3, 0 1))")[0]) == (
         0.0, 1.0, 2.0, 3.0,
     )
 

@@ -4,16 +4,23 @@ test_rebase_and_cdc_view.py stages interleavings sequentially; here N
 writer threads race M commits each on ONE table through the real
 exclusive-create commit path. Asserted: every logical commit lands
 exactly once (history length), no version is skipped or duplicated,
-and the final table equals a sequential dict model.
+and the final table equals a sequential dict model. A last test has a
+second thread watch the session's AQE setting while every commit type
+runs: no commit may write session conf another thread can observe.
 """
 
 import threading
 
 from pyspark.sql import Row
 
+from pyspark.sql import functions as F
+
 from gedixr_spark.sinks.versioned import (
     ConcurrentCommitError,
     commit_append,
+    commit_compact,
+    commit_delete,
+    commit_merge,
     commit_upsert,
     init_versioned,
     read_versioned,
@@ -120,3 +127,50 @@ def test_threaded_disjoint_upserts_match_dict_model(spark, tmp_path):
     assert n_upserts == N * M
     got = {r["k"]: r["val"] for r in read_versioned(spark, t).collect()}
     assert got == model
+
+
+def test_commits_leave_session_aqe_setting_untouched(spark, tmp_path):
+    """The session conf is shared by every driver thread, so a commit
+    that flipped ``spark.sql.adaptive.enabled`` around its own collects
+    would plan another thread's data-scale frame without AQE. A poller
+    thread reads the setting in a loop while the main thread runs every
+    commit type — append (with an expectation), upsert, merge,
+    copy-on-write delete, DV delete and compact — on a table with
+    stats and bloom columns; the poller must only ever read "true"."""
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    t = str(tmp_path / "aqe")
+    init_versioned(spark, t)
+    seen = set()
+    n_polls = [0]
+    stop = threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            seen.add(spark.conf.get(key))
+            n_polls[0] += 1
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [Row(k=k, v=f"v{k % 5}") for k in rows]
+        ).coalesce(2)
+
+    idx = {"stats_cols": ["k"], "bloom_cols": ["k", "v"]}
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        commit_append(
+            spark, t, batch(range(40)), expect={"not_null": ["k"]}, **idx
+        )
+        commit_upsert(spark, t, batch(range(30, 50)), keys=["k"], **idx)
+        commit_merge(spark, t, batch(range(45, 60)), keys=["k"], **idx)
+        commit_delete(spark, t, F.col("k") < 5, stats_cols=["k"])
+        commit_delete(spark, t, F.col("k") >= 55, mode="dv")
+        commit_compact(spark, t, n_files=1, **idx)
+    finally:
+        stop.set()
+        poller.join(timeout=60)
+    assert n_polls[0] > 0
+    assert seen == {"true"}, f"poller read {sorted(seen)}"
+    got = sorted(r["k"] for r in read_versioned(spark, t).collect())
+    assert got == list(range(5, 55))

@@ -17,11 +17,10 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-LOGDIR = "/tmp/gedixr_eventlogs"
 
 
 def parse_log(log_dir: str) -> list[dict]:
@@ -79,9 +78,16 @@ def main() -> None:
         sf_dir = args[i + 1]
         del args[i:i + 2]
 
-    shutil.rmtree(LOGDIR, ignore_errors=True)
-    os.makedirs(LOGDIR, exist_ok=True)
+    # a private event-log dir per run: concurrent runs must neither
+    # delete nor parse each other's log
+    log_dir = tempfile.mkdtemp(prefix="gedixr_eventlogs_")
+    try:
+        _profile(args, sf_dir, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
+
+def _profile(names: list[str], sf_dir: str, log_dir: str) -> None:
     import __spark_entry__ as entry
     from gedixr_spark.session import get_spark
 
@@ -89,7 +95,7 @@ def main() -> None:
         "job_profile",
         extra_conf={
             "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": LOGDIR,
+            "spark.eventLog.dir": log_dir,
             "spark.eventLog.compress": "false",
         },
     )
@@ -99,7 +105,7 @@ def main() -> None:
     next(iter(qs.values()))(spark, sf_dir).count()
 
     marks: dict[str, tuple[float, float, float]] = {}
-    for name in args:
+    for name in names:
         if name not in qs:
             print(f"unknown query {name!r}")
             continue
@@ -110,7 +116,7 @@ def main() -> None:
         marks[name] = (t0, time.time() * 1000, time.perf_counter() - w0)
 
     spark.stop()  # flush the event log
-    jobs = sorted(parse_log(LOGDIR), key=lambda j: j["t0"])
+    jobs = sorted(parse_log(log_dir), key=lambda j: j["t0"])
     for name, (t0, t1, wall) in marks.items():
         sel = [j for j in jobs if t0 <= j["t0"] <= t1]
         in_jobs = sum(j["t1"] - j["t0"] for j in sel) / 1000.0
